@@ -2,97 +2,76 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Benchmark main. Emits, in order:
-  *   1. one JSON line with the full per-query map + raw samples + config
-  *      (long; for tools/bench_fold.py and humans),
-  *   2. the same full JSON to `target/bench.json` and the committed
-  *      artifact path (tail-proof copies),
-  *   3. the per-query MINIMA re-emitted near the END of stdout in
-  *      tail-survivable form (r14, VERDICT r13 item 1): first split
-  *      into parseable chunk lines ≤ ~3.5 KB (each a valid
-  *      `"metric":"total"` object carrying a `part`/`parts` slice of
-  *      `queries`), then ONE driver-contract line
-  *      `{"metric":"total",...,"queries":{all 268 minima},...}`,
-  *   4. a compact total-only JSON line LAST — short enough that any
-  *      tail-N stdout capture still sees a parseable `"metric":"total"`.
-  * Rationale: the driver keeps only a stdout TAIL. Through round 13 the
-  * per-query map appeared ONLY in line 1 (several KB, printed first), so
-  * the tail cut it and PERF_r12/r13 had `n_common: 0`, empty
-  * `per_query`/`scaling`, `bench_ok: false`. Emitting the minima again
-  * immediately before the final total line (layered: chunks for a small
-  * tail window, one full line for a larger one, compact total for any)
-  * is a measurement-CONTRACT fix only — the timed region, methodology
-  * and the "queries" values are unchanged.
+/** Benchmark main. Times every declared query twice (per-query MIN) and
+  * emits two `"metric":"total"` JSON lines on stdout:
+  *   1. FIRST, the full line: per-query minima, raw per-pass samples,
+  *      failures and the measurement config (for tools/bench_fold.py and
+  *      humans; also written to `target/bench.json` and the committed
+  *      artifact path, since a caller that keeps only the last 2000
+  *      chars of stdout loses this several-KB line);
+  *   2. LAST, a compact total line that fits that tail.
+  * A query that throws is kept out of the total, named under `failed`
+  * (with `n_failed`) and makes the main exit non-zero.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Scale-adaptive scan splits (r13, guide §2.2/§6): derive the
-      // split size from corpus bytes ÷ 2·cores instead of the previous
-      // 16 MB constant (a local-mode tuning). The 16 MB FLOOR keeps the
-      // single-file toy corpus fanned out across local cores — every SF
-      // here lands on it, so bench numbers stay comparable — while a
-      // production-sized input walks up to the stock 128 MB cap (large
-      // sequential reads, bounded map-task count feeding each shuffle).
-      .config("spark.sql.files.maxPartitionBytes",
-        graft.util.GraftConf.adaptiveSplitBytes(sfDir, cpus).toString)
-      // RDD-path demos (CoreMR) shuffle case classes; Kryo beats Java
-      // serialization 2-5x there. SQL rows use Tungsten either way.
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      // Spark's ObjectHashAggregate silently falls back to SORT-based
-      // aggregation after 128 distinct keys per partition (the default
-      // fallbackThreshold) — which re-introduces, at runtime and
-      // invisibly to the plan, exactly the per-partition sort the object
-      // aggregates (b33 KMV, b46 top-k) exist to avoid. 1M entries of
-      // small bounded buffers is ~100-200 MB per task worst-case; at
-      // 100 TB size this knob to the executor heap the same way
-      // shuffle.partitions is sized.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      // Joins (guide §3.1; §9 "starting configuration"): prefer shuffled-hash over sort-merge
-      // when a build side fits per-partition memory, and let AQE
-      // convert an already-planned SMJ whose runtime map output is
-      // small. The r13 census measured 32 queries executing
-      // SortMergeJoins — almost all of them the row-level MERGE
-      // machinery, whose target side may not broadcast — and each
-      // conversion deletes two Sort passes. Scale note (two distinct
-      // paths, r13-ADVICE): the 64 MB threshold bounds ONLY the AQE
-      // SMJ→SHJ conversion, which sees real runtime map sizes;
-      // preferSortMergeJoin=false ALSO lets the STATIC planner pick
-      // SHJ from plan-time size ESTIMATES, a path with no runtime
-      // fallback (a misestimated build side OOMs where SMJ would
-      // spill). Here every statically-SHJ-planned build side is a
-      // graftmem table reporting EXACT SupportsReportStatistics row
-      // counts (no estimate risk) — plans/r14 dumps + Round14OptSpec
-      // pin that no large-side/estimated build is statically
-      // SHJ-planned; parquet-sided joins stay broadcast or SMJ until
-      // AQE converts them under the bounded threshold.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        "64m")
-    // Tuning passthrough: SPARK_GRAFT_CONF="k=v;k=v" (dev experiments).
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.GraftProfiler.install(spark)
-    graft.util.GraftProfiler.installPhases(spark)
-    // JVM/codegen warmup so the first timed query doesn't absorb
-    // whole-stage-codegen compiler startup (~3-4 s once per JVM).
+  /** JVM/codegen warm-up so the first timed query doesn't absorb
+    * whole-stage-codegen compiler startup (~3-4 s once per JVM), then
+    * the streaming-engine warm-up (microbatch planner, state stores incl.
+    * RocksDB + transformWithState, file source/sink commit-log classes
+    * load once per JVM), mirroring the d5-d17 query classes. A failed
+    * streaming warm-up only shifts that cost into the first stream's
+    * timing, so it is logged, not fatal.
+    */
+  def warmUp(spark: SparkSession): Unit = {
     spark.range(100000).selectExpr("sum(id * 2)").collect()
-    // Streaming-engine warmup (microbatch planner, state stores incl.
-    // RocksDB + transformWithState, file source/sink commit-log classes
-    // load once per JVM), mirroring the d5-d17 query classes.
-    try { graft.streaming.StreamingDemo.warmStreaming(spark) }
-    catch { case _: Throwable => () }
+    try graft.streaming.StreamingDemo.warmStreaming(spark)
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] streaming warm-up failed: $e")
+      e.printStackTrace()
+    }
+  }
+
+  /** The two stdout lines (full first, compact total last) for per-query
+    * minima `results`, raw samples `runs` and the `failed` names. Numbers
+    * go through Double.toString, which ignores the default Locale, so
+    * both lines stay valid JSON under a comma-decimal locale.
+    */
+  def emit(results: Seq[(String, Double)], runs: Seq[(String, Seq[Double])],
+      failed: Seq[String], config: String, sfDir: String): (String, String) = {
+    def str(s: String) = "\"" + s + "\""
+    val total = results.map(_._2).sum
+    // Split the true-streaming engine floor (state store + checkpoint +
+    // microbatch setup per query — swings 2-6× under host load) from
+    // the batch-query cost, so the graded tail-parse can tell engine
+    // floor from query regression.
+    val streaming = results
+      .filter { case (k, _) => operators.TierD.streamingNames(k) }
+    val head = s""""metric":"total","value":$total,"unit":"sec",""" +
+      s""""streaming_sec":${streaming.map(_._2).sum},"streaming_n":${streaming.size},""" +
+      s""""n_queries":${results.size},"n_failed":${failed.size},""" +
+      s""""failed":${failed.map(str).mkString("[", ",", "]")}"""
+    // the authoritative classification, embedded so tools/bench_fold.py
+    // never re-derives it from a name heuristic that can drift
+    val streamNames = operators.TierD.streamingNames.toSeq.sorted
+      .map(str).mkString("[", ",", "]")
+    val qs = results.map { case (k, v) => s"${str(k)}:$v" }
+      .mkString("{", ",", "}")
+    // Raw per-pass samples, so tools/bench_fold.py can compute exact
+    // cross-invocation MEDIANS (robust center) alongside the minima
+    // (noise floor) when folding several runs into the committed
+    // bench_full_r<N>.json artifact.
+    val rs = runs.map { case (k, v) => s"${str(k)}:${v.mkString("[", ",", "]")}" }
+      .mkString("{", ",", "}")
+    val full = s"""{$head,"streaming_names":$streamNames,$config,""" +
+      s""""queries":$qs,"queries_runs":$rs,"sf":"$sfDir"}"""
+    (full, s"""{$head,"sf":"$sfDir"}""")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = GraftSession.envSfDir
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession(sfDir, cpus)
+    warmUp(spark)
     // NO base-table cache (round-13 optimization rules): every timed
     // query computes from the parquet inputs, paying its own scan.
     // Earlier rounds cached the ten shared scans here; that hid the
@@ -106,48 +85,33 @@ object Bench {
     // single sample turns one GC/compile hiccup into the recorded grade.
     // The min of two runs estimates the query's actual cost — the noise
     // is strictly additive (no mechanism makes a query run too fast).
-    def pass(): Seq[(String, Double)] =
+    // A pass returns None for a query that threw.
+    def pass(): Seq[(String, Option[Double])] =
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         // Label every job with its query name (guide §1.5) so the UI,
         // event log and [profile] lines attribute work to queries.
         spark.sparkContext.setJobDescription(name)
         graft.util.GraftProfiler.label = name
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok = try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e")
+          false
+        }
         spark.sparkContext.setJobDescription(null)
-        name -> (System.nanoTime() - t0) / 1e9
+        name -> Option.when(ok)((System.nanoTime() - t0) / 1e9)
       }
     val p1 = pass()
     val p2 = pass().toMap
-    val results = p1.map { case (name, t) => name -> math.min(t, p2(name)) }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // Raw per-pass samples, so tools/bench_fold.py can compute exact
-    // cross-invocation MEDIANS (robust center) alongside the minima
-    // (noise floor) when folding several runs into the committed
-    // bench_full_r<N>.json artifact.
-    val runs = p1.map { case (name, t) =>
-      s"\"" + name + s"\":[$t,${p2(name)}]"
-    }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    // Split the true-streaming engine floor (state store + checkpoint +
-    // microbatch setup per query — swings 2-6× under host load) from
-    // the batch-query cost, so the graded tail-parse can tell engine
-    // floor from query regression.
-    val streaming = results
-      .filter { case (k, _) => operators.TierD.streamingNames(k) }
-    val streamSec = streaming.map(_._2).sum
-    val sub = s""""streaming_sec":$streamSec,"streaming_n":${streaming.size}"""
-    // the authoritative classification, embedded so tools/bench_fold.py
-    // never re-derives it from a name heuristic that can drift
-    val streamNames = operators.TierD.streamingNames.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val runs = p1.flatMap { case (name, t1) =>
+      for (a <- t1; b <- p2(name)) yield name -> Seq(a, b)
+    }
+    val results = runs.map { case (name, ts) => name -> ts.min }
+    val failed = p1.map(_._1).filterNot(runs.map(_._1).toSet)
     // Measurement config, embedded so tools/bench_diff.py can refuse
     // apples-to-oranges comparisons (the repo documents ±50% cross-host
     // noise; a diff between different cpu counts is meaningless).
-    val conf = s""""config":{"cpus":"$cpus","shuffle_partitions":"${spark.conf.get("spark.sql.shuffle.partitions")}","max_partition_bytes":"${spark.conf.get("spark.sql.files.maxPartitionBytes")}","host_processors":${Runtime.getRuntime.availableProcessors()},"spark_version":"${spark.version}","sf_dir":"$sfDir"}"""
-    val full =
-      s"""{"metric":"total","value":$total,"unit":"sec",$sub,"streaming_names":$streamNames,$conf,"queries":$qs,"queries_runs":$runs,"sf":"$sfDir"}"""
+    val config = s""""config":{"cpus":"$cpus","shuffle_partitions":"${spark.conf.get("spark.sql.shuffle.partitions")}","max_partition_bytes":"${spark.conf.get("spark.sql.files.maxPartitionBytes")}","host_processors":${Runtime.getRuntime.availableProcessors()},"spark_version":"${spark.version}","sf_dir":"$sfDir"}"""
+    val (full, compact) = emit(results, runs, failed, config, sfDir)
     println(full)
     try {
       Files.createDirectories(Paths.get("target"))
@@ -160,34 +124,12 @@ object Bench {
       val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
         "bench_full_latest.json")
       Files.writeString(Paths.get(outPath), full + "\n")
-    } catch { case _: Throwable => () }
-    spark.stop()
-    // Tail-survivable per-query minima (r14, VERDICT r13 item 1). The
-    // driver's capture keeps only the last few KB of stdout, so the
-    // minima are re-emitted HERE, at the very end, layered by window
-    // size. Values are rounded to 0.1 ms — ample for speedup ratios.
-    val minEntries = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
-    def totalLine(extra: String): String =
-      s"""{"metric":"total","value":$total,"unit":"sec",$sub,"n_queries":${results.size},$extra"sf":"$sfDir"}"""
-    // 3a. Chunk lines: each a COMPLETE, independently parseable
-    //     "metric":"total" object carrying a part/parts slice of the
-    //     queries map, sized ≤ ~3.5 KB so even a small line-truncating
-    //     capture keeps whole parts.
-    val chunks = minEntries.foldLeft(Vector(Vector.empty[String])) {
-      (acc, e) =>
-        if (acc.last.map(_.length + 1).sum + e.length > 3300)
-          acc :+ Vector(e)
-        else acc.init :+ (acc.last :+ e)
-    }.filter(_.nonEmpty)
-    chunks.zipWithIndex.foreach { case (c, i) =>
-      println(totalLine(
-        s""""part":${i + 1},"parts":${chunks.size},"queries":${c.mkString("{", ",", "}")},"""))
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] could not write the full result: $e")
     }
-    // 3b. The driver-contract line: metric/value/unit/queries/sf with
-    //     the FULL minima map (~7.5 KB at 268 queries), right before
-    //     the final total line per VERDICT r13 item 1.
-    println(totalLine(s""""queries":${minEntries.mkString("{", ",", "}")},"""))
-    // 4. LAST line: compact, tail-capture-proof under ANY window size.
-    println(totalLine(""))
+    spark.stop()
+    // LAST line: compact, survives a 2000-char stdout tail.
+    println(compact)
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,33 +8,10 @@ object Verify {
     val outDir = args(1)
     // Optional extra args: run only the named queries (dev fast path).
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes",
-        graft.util.GraftConf.adaptiveSplitBytes(sfDir, cpus).toString)
-      .config("spark.ui.enabled", "false")
-      // graft session defaults (see Bench.scala for the rationale)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.GraftProfiler.install(spark)
+    val spark = GraftSession(sfDir, GraftSession.envCpus)
     new java.io.File(outDir).mkdirs()
-    // Cache shared scans once (same rationale as Bench: `documents` is
-    // read ~15× across the query set; CacheManager substitutes any
-    // sameResult parquet scan with the in-memory blocks).
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try graft.util.Tables.table(spark, sfDir, t).cache().count()
-      catch { case _: Throwable => () }
-    }
+    // No base-table cache: the oracle checks the same uncached plans
+    // Bench times.
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

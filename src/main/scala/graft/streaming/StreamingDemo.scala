@@ -1529,7 +1529,15 @@ object StreamingDemo {
           s"CALL graftmem.system.fast_forward('$short', 'main', '$br')")
           .collect()
       } catch {
-        case _: Exception =>
+        // only a CHECK violation is a failed audit (the task-side error
+        // arrives wrapped, so search the cause chain); anything else is
+        // a real failure and fails the stream
+        case e: Exception if Iterator.iterate[Throwable](e)(_.getCause)
+            .takeWhile(_ != null).exists {
+              case t: org.apache.spark.SparkThrowable =>
+                t.getCondition == "CHECK_CONSTRAINT_VIOLATION"
+              case _ => false
+            } =>
           // failed audit: drop the branch; main was never touched
           rejected.incrementAndGet()
           ss.sql(s"CALL graftmem.system.drop_branch('$short', '$br')")

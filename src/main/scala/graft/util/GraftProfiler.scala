@@ -1,100 +1,52 @@
 package graft.util
 
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.util.QueryExecutionListener
+import scala.collection.concurrent.TrieMap
 
 /** `--mrs-profile` parity [mrs: mrs/main.py]: the reference flag writes
   * a per-task profile dump; Spark already collects per-task metrics in
-  * the UI/event log, so the graft knob surfaces the per-query roll-up.
-  * With `graft.profile=true`, every completed query action prints one
-  * `[profile]` stderr line: action name, wall seconds, and the executed
-  * physical plan's node census (e.g. `HashAggregate×2,Exchange×1,...` —
-  * enough to spot an unexpected shuffle or a missing broadcast without
-  * opening the UI). Zero overhead when the knob is off.
+  * the UI/event log, so the graft switch surfaces the per-query roll-up.
+  * With `graft.profile=true` (read once, when the session is built),
+  * stderr gets:
+  *   - `[profile]` per completed query action: action name, wall
+  *     seconds, the Catalyst phase durations (parsing/analysis/
+  *     optimization/planning — driver-side plan work that task metrics
+  *     never see) with the top rules by time, and the executed physical
+  *     plan's node census (e.g. `HashAggregate x2, Exchange x1` — enough
+  *     to spot an unexpected shuffle or a missing broadcast);
+  *   - `[jobs]` per Spark job: task count, summed task time and the
+  *     job's wall time. Wall ≫ summed-task-time/cores means the cost is
+  *     DRIVER-side (scheduling, AQE replanning, commit), not executor
+  *     work;
+  *   - `[stream]` per streaming micro-batch: its phase durations
+  *     (queryPlanning/getBatch/addBatch/walCommit) and, per stateful
+  *     operator, the state-store commit time.
+  * Zero overhead when the switch is off: nothing is registered.
   */
 object GraftProfiler {
-  /** Label for [profile] attribution, set by the harness around each
-    * timed query. A plain volatile rather than the job description:
-    * QueryExecutionListener fires on the ASYNC listener bus, so the
-    * submitting thread's local properties are not visible there. The
-    * bus drains within the same query in practice; a late event can at
-    * worst carry the next query's label (attribution aid, not a
-    * measurement).
+  /** Label for attribution, set by the harness around each timed query.
+    * A plain volatile rather than the job description: the listeners
+    * fire on the ASYNC listener bus, so the submitting thread's local
+    * properties are not visible there. The bus drains within the same
+    * query in practice; a late event can at worst carry the next
+    * query's label (attribution aid, not a measurement).
     */
   @volatile var label: String = "-"
-
-  /** Dev knob `graft.profile.phases=true` (r14, guide §7.3): per
-    * completed action, print the Catalyst QueryPlanningTracker phase
-    * durations (parsing/analysis/optimization/planning) next to the
-    * wall time, plus the top rules by time. This splits DRIVER-side
-    * plan work from execution for the per-command fixed-cost hunt —
-    * the graftmem lifecycle queries run ~90 sequential commands whose
-    * cost is invisible to task metrics.
-    */
-  def installPhases(s: SparkSession): Unit =
-    if (s.conf.getOption("graft.profile.phases").contains("true")) {
-      s.listenerManager.register(new QueryExecutionListener {
-        override def onSuccess(
-            funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-          val ph = qe.tracker.phases.toSeq.sortBy(_._2.startTimeMs)
-            .map { case (k, v) => s"$k=${v.durationMs}" }.mkString(" ")
-          val rules = qe.tracker.topRulesByTime(3).map { case (r, s) =>
-            s"${r.substring(r.lastIndexOf('.') + 1)}=${(s.totalTimeNs / 1e6).round}"
-          }.mkString(" ")
-          System.err.println(
-            f"[phases] $label | $funcName wall=${durationNs / 1e6}%.0fms | $ph | top: $rules")
-        }
-        override def onFailure(
-            funcName: String, qe: QueryExecution, error: Exception): Unit = ()
-      })
-    }
-
-  /** Dev knob `graft.profile.jobs=true` (r14, guide §7.1/§7.3): one
-    * `[jobs]` stderr line per Spark job with stage/task counts, summed
-    * task run time and the job's wall time. Wall ≫ summed-task-time/
-    * cores means the cost is DRIVER-side (scheduling, AQE replanning,
-    * commit), not executor work — the discriminator the graftmem
-    * per-command hunt needs.
-    */
-  def installJobs(s: SparkSession): Unit =
-    if (s.conf.getOption("graft.profile.jobs").contains("true")) {
-      import org.apache.spark.scheduler._
-      import java.util.concurrent.ConcurrentHashMap
-      val jobStart = new ConcurrentHashMap[Int, (Long, String)]()
-      val jobTasks = new ConcurrentHashMap[Int, (java.util.concurrent.atomic.LongAdder, java.util.concurrent.atomic.LongAdder)]()
-      val stageToJob = new ConcurrentHashMap[Int, Int]()
-      s.sparkContext.addSparkListener(new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = {
-          jobStart.put(e.jobId, (System.nanoTime(), label))
-          jobTasks.put(e.jobId,
-            (new java.util.concurrent.atomic.LongAdder,
-              new java.util.concurrent.atomic.LongAdder))
-          e.stageIds.foreach(sid => stageToJob.put(sid, e.jobId))
-        }
-        override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-          val j = stageToJob.get(e.stageId)
-          val t = jobTasks.get(j)
-          if (t != null && e.taskInfo != null) {
-            t._1.increment()
-            t._2.add(e.taskInfo.duration)
-          }
-        }
-        override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-          val st = jobStart.remove(e.jobId)
-          val t = jobTasks.remove(e.jobId)
-          if (st != null && t != null)
-            System.err.println(
-              f"[jobs] ${st._2} | job=${e.jobId} wall=${(System.nanoTime() - st._1) / 1e6}%.0fms tasks=${t._1.sum()} taskTimeSum=${t._2.sum()}ms")
-        }
-      })
-    }
 
   def install(s: SparkSession): Unit =
     if (s.conf.getOption("graft.profile").contains("true")) {
       s.listenerManager.register(new QueryExecutionListener {
         override def onSuccess(
             funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+          val phases = qe.tracker.phases.toSeq.sortBy(_._2.startTimeMs)
+            .map { case (k, v) => s"$k=${v.durationMs}" }.mkString(" ")
+          val rules = qe.tracker.topRulesByTime(3).map { case (r, t) =>
+            s"${r.substring(r.lastIndexOf('.') + 1)}=${(t.totalTimeNs / 1e6).round}"
+          }.mkString(" ")
           // Unwrap AdaptiveSparkPlanExec: its final physical plan is a
           // FIELD, not a child, so a plain collect would census the
           // wrapper alone ("AdaptiveSparkPlan x1") and hide every
@@ -110,11 +62,56 @@ object GraftProfiler {
             .groupBy(identity).map { case (k, v) => s"$k x${v.size}" }
             .toSeq.sorted.mkString(", ")
           System.err.println(
-            f"[profile] $label | $funcName ${durationNs / 1e9}%.3f s | $census")
+            f"[profile] $label | $funcName ${durationNs / 1e9}%.3f s | $phases | top: $rules | $census")
         }
         override def onFailure(
             funcName: String, qe: QueryExecution, error: Exception): Unit =
           System.err.println(s"[profile] $funcName FAILED: ${error.getMessage}")
       })
+      s.sparkContext.addSparkListener(new JobProfiler)
+      s.streams.addListener(new StreamingQueryListener {
+        import StreamingQueryListener._
+        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+        override def onQueryProgress(e: QueryProgressEvent): Unit = {
+          val p = e.progress
+          val state = p.stateOperators.map(so =>
+            s"${so.operatorName}:commitMs=${so.commitTimeMs}").mkString(" ")
+          System.err.println(s"[stream] $label | ${p.name} batch=${p.batchId} " +
+            s"rows=${p.numInputRows} durMs=${p.durationMs} $state")
+        }
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      })
     }
+
+  /** The `[jobs]` listener. A task is charged to the job that submitted
+    * its stage; a task whose stage no running job owns is charged to
+    * none, and a job's stage entries leave with the job, so the maps
+    * hold only running jobs.
+    */
+  private[graft] final class JobProfiler extends SparkListener {
+    private[graft] final class Job(val startNs: Long, val label: String,
+        val stages: Seq[Int]) {
+      var tasks = 0L
+      var taskMs = 0L
+    }
+    private[graft] val jobs = TrieMap.empty[Int, Job]
+    private[graft] val stageToJob = TrieMap.empty[Int, Int]
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      jobs.put(e.jobId, new Job(System.nanoTime(), label, e.stageIds))
+      e.stageIds.foreach(stageToJob.put(_, e.jobId))
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      for (j <- stageToJob.get(e.stageId); job <- jobs.get(j)
+           if e.taskInfo != null) {
+        job.tasks += 1
+        job.taskMs += e.taskInfo.duration
+      }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      jobs.remove(e.jobId).foreach { job =>
+        job.stages.foreach(stageToJob.remove)
+        System.err.println(
+          f"[jobs] ${job.label} | job=${e.jobId} wall=${(System.nanoTime() - job.startNs) / 1e6}%.0fms tasks=${job.tasks} taskTimeSum=${job.taskMs}ms")
+      }
+  }
 }

@@ -42,4 +42,15 @@ class SourceDisciplineSpec extends AnyFunSuite {
       assert(bad.findFirstIn(text).isEmpty,
         s"$path uses toLocalIterator — data-sized driver traffic")
   }
+
+  test("src/main builds a SparkSession in exactly one place: GraftSession") {
+    // one session conf for Bench, Verify, Dev and the test fixture — six
+    // builders once drifted apart until the oracle no longer checked
+    // the plans the bench timed
+    val builders = for ((path, text) <- mainSources;
+                        _ <- "SparkSession\\s*\\.\\s*builder\\s*\\(".r.findAllIn(text))
+      yield path
+    assert(builders.map(new java.io.File(_).getName) == Seq("GraftSession.scala"),
+      s"SparkSession.builder( outside GraftSession: $builders")
+  }
 }

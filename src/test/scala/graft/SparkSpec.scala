@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession fixture (UTC, 4 shuffle partitions — same
-  * shape as the driver's Verify/Bench sessions).
+/** Shared local SparkSession fixture: the bench's session
+  * ([[GraftSession]]) at 4 cores on the sf0.001 corpus, so specs assert
+  * the plans Verify checks and Bench times.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -25,15 +26,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // graft session default (see Bench.scala for the rationale): keep
-    // object aggregates on the hash path at realistic group counts
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      "1000000")
-    .appName("graft-test")
-    .getOrCreate()
+  lazy val session: SparkSession = GraftSession("/root/testdata/sf0.001", "4")
 }

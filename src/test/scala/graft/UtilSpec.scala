@@ -56,4 +56,30 @@ class UtilSpec extends SparkSpec {
       assert(spark.range(100).selectExpr("sum(id)").head().getLong(0) == 4950L)
     } finally spark.conf.set("graft.profile", "false")
   }
+
+  test("GraftProfiler jobs: an unknown stage charges no job; job end clears its stages") {
+    import org.apache.spark.scheduler._
+    val p = new GraftProfiler.JobProfiler
+    def stage(id: Int) = new StageInfo(id, 0, s"s$id", 1, Seq.empty, Seq.empty,
+      "", resourceProfileId = 0)
+    def taskEnd(stageId: Int) = {
+      val info = new TaskInfo(1L, 0, 0, 0, 100L, "driver", "localhost",
+        TaskLocality.PROCESS_LOCAL, false)
+      info.finishTime = 130L
+      SparkListenerTaskEnd(stageId, 0, "ResultTask", org.apache.spark.Success,
+        info, null, null)
+    }
+    // job 0 owns stage 5: before the fix an unknown stage unboxed to
+    // job 0 and was charged there
+    p.onJobStart(SparkListenerJobStart(0, 0L, Seq(stage(5), stage(6))))
+    p.onTaskEnd(taskEnd(99))
+    assert(p.jobs(0).tasks == 0L)
+    p.onTaskEnd(taskEnd(6))
+    assert(p.jobs(0).tasks == 1L && p.jobs(0).taskMs == 30L)
+    p.onJobEnd(SparkListenerJobEnd(0, 1L, JobSucceeded))
+    assert(p.jobs.isEmpty && p.stageToJob.isEmpty)
+    // a straggler after the job ended is charged to nothing
+    p.onTaskEnd(taskEnd(6))
+    assert(p.jobs.isEmpty)
+  }
 }
