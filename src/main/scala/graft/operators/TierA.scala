@@ -747,9 +747,7 @@ object TierA {
 
   private[operators] def a34Exec(s: SparkSession, d: String)
       : (DataFrame, String) = {
-    val prev = a34Confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    a34Confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+    graft.util.GraftConf.withConf(s, a34Confs: _*) {
       def gen(rows: Int) = s.read.format("pairgen")
         .option("rows", rows.toString).option("buckets", "8").load()
       val joined = gen(10000).as("l")
@@ -762,9 +760,6 @@ object TierA {
         .orderBy("grp")
       val out = joined.localCheckpoint()
       (out, joined.queryExecution.executedPlan.toString)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 
@@ -786,9 +781,7 @@ object TierA {
     */
   private[operators] def a39Exec(s: SparkSession, d: String)
       : (DataFrame, String) = {
-    val prev = a34Confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    a34Confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+    graft.util.GraftConf.withConf(s, a34Confs: _*) {
       def gen(rows: Int) = s.read.format("pairgen")
         .option("rows", rows.toString).option("buckets", "8").load()
       val joined = gen(12000).filter(col("id") >= 400).as("l")
@@ -800,9 +793,6 @@ object TierA {
         .orderBy("grp")
       val out = joined.localCheckpoint()
       (out, joined.queryExecution.executedPlan.toString)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 
@@ -827,14 +817,8 @@ object TierA {
     * instead of remembered by every writing job.
     */
   private def a40(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftmem",
-      "graft.sources.GraftMemCatalog")
-    val tbl = "graftmem.db.clust_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    s.sql(s"CREATE TABLE $tbl (k BIGINT, v BIGINT) " +
-      "TBLPROPERTIES ('graft.write_layout' = 'k,v')")
+    val tbl = graft.util.DemoTables.freshGraftmem(s, d, "clust",
+      "(k BIGINT, v BIGINT) TBLPROPERTIES ('graft.write_layout' = 'k,v')")
     orders(s, d)
       .selectExpr("o_custkey % 100 AS k",
         "CAST(floor(o_totalprice * 100) AS BIGINT) AS v")
@@ -976,9 +960,7 @@ object TierA {
     s.read.format("pairgen").option("rows", "2")
       .option("buckets", "64").load()
       .createOrReplaceTempView("g_a41_dims")
-    val prev = a41Confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    if (cbo) a41Confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+    graft.util.GraftConf.withConf(s, (if (cbo) a41Confs else Nil): _*) {
       val q = s.sql(
         """SELECT count(*) AS n_pairs, min(f.id) AS min_id,
           |  max(f.id) AS max_id
@@ -990,9 +972,6 @@ object TierA {
       // innermost-join assertion
       val plan = q.queryExecution.optimizedPlan
       (q.localCheckpoint(), plan)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 
@@ -1023,9 +1002,7 @@ object TierA {
 
   private[operators] def a42Exec(s: SparkSession, push: Boolean = true)
       : (DataFrame, String) = {
-    val prev = s.conf.getOption(a42Conf)
-    s.conf.set(a42Conf, push.toString)
-    try {
+    graft.util.GraftConf.withConf(s, a42Conf -> push.toString) {
       val l = s.read.format("pairgen").option("rows", "100000").load()
       val r = s.read.format("pairgen").option("rows", "30000").load()
         .where(col("id") >= 1000)
@@ -1035,9 +1012,6 @@ object TierA {
           count(when(l("value") === r("value"), 1)).as("n_value_eq"))
       val plan = q.queryExecution.executedPlan.toString
       (q.localCheckpoint(), plan)
-    } finally prev match {
-      case Some(v) => s.conf.set(a42Conf, v)
-      case None    => s.conf.unset(a42Conf)
     }
   }
 
@@ -1069,9 +1043,7 @@ object TierA {
 
   private[operators] def a43Exec(s: SparkSession, push: Boolean = true)
       : (DataFrame, String) = {
-    val prev = s.conf.getOption(a43Conf)
-    s.conf.set(a43Conf, push.toString)
-    try {
+    graft.util.GraftConf.withConf(s, a43Conf -> push.toString) {
       s.read.format("pairgen").option("rows", "100000")
         .option("variant", "true").load()
         .createOrReplaceTempView("g_a43_vt")
@@ -1082,9 +1054,6 @@ object TierA {
           |FROM g_a43_vt GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
       val plan = q.queryExecution.executedPlan.toString
       (q.localCheckpoint(), plan)
-    } finally prev match {
-      case Some(v) => s.conf.set(a43Conf, v)
-      case None    => s.conf.unset(a43Conf)
     }
   }
 

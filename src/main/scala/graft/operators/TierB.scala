@@ -1832,9 +1832,7 @@ object TierB {
 
   private[operators] def b71Exec(s: SparkSession, d: String)
       : (DataFrame, String) = {
-    val prev = b71Confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    b71Confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+    graft.util.GraftConf.withConf(s, b71Confs: _*) {
       // The hot reduce partition can only be split at MAPPER-chunk
       // granularity (PartialReducerPartitionSpec is a map-index range),
       // and a toy-SF parquet scan is ONE map task — so force several
@@ -1856,9 +1854,6 @@ object TierB {
         .orderBy("s_suppkey")
       val out = joined.localCheckpoint()
       (out, joined.queryExecution.executedPlan.toString)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 
@@ -2360,8 +2355,7 @@ object TierB {
     // in-memory catalog across JVMs and CREATE then dies on
     // LOCATION_ALREADY_EXISTS.
     val (fact, dimb, dims) = b81TablesMemo.get((s, d)) {
-      val suf = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+      val suf = graft.util.DemoTables.corpusSuffix(d)
       def mkStats(name: String, df: DataFrame): String = {
         s.sql(s"DROP TABLE IF EXISTS $name")
         df.write.option("path", graft.util.TmpDir.fresh(name))
@@ -2379,9 +2373,7 @@ object TierB {
         mkStats(s"g_b81_dims_$suf",
           nation(s, d).selectExpr("CAST(n_nationkey AS BIGINT) AS k2")))
     }
-    val prev = b81Confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    if (cbo) b81Confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+    graft.util.GraftConf.withConf(s, (if (cbo) b81Confs else Nil): _*) {
       val q = s.sql(
         s"""SELECT b.nat AS nat, count(*) AS n,
            |  CAST(sum(CAST(f.cents AS DECIMAL(38,0))) AS BIGINT)
@@ -2395,9 +2387,6 @@ object TierB {
       // expose the optimized plan for the spec's join-shape assertion
       val plan = q.queryExecution.optimizedPlan.toString
       (q.localCheckpoint(), plan)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 
@@ -2416,8 +2405,7 @@ object TierB {
     * serves verbatim.
     */
   private def b76(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftmem",
-      "graft.sources.GraftMemCatalog")
+    graft.util.DemoTables.registerGraftmem(s)
     graft.util.Tables.table(s, d, "embeddings")
       .createOrReplaceTempView("g_emb_b76")
     s.sql(
@@ -2508,8 +2496,7 @@ object TierB {
     * b33 by construction, so b33's oracle serves verbatim.
     */
   private def b79(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftmem",
-      "graft.sources.GraftMemCatalog")
+    graft.util.DemoTables.registerGraftmem(s)
     lineitem(s, d).createOrReplaceTempView("g_lineitem_b79")
     s.sql(
       """SELECT l_returnflag,

@@ -500,11 +500,33 @@ object TierC {
     }
   }
 
-  /** Per-vector sign-LSH bucket assignment — the shared kernel under
-    * c15 (bucket census) and c65 (recall eval): 8 md5-derived integer
-    * hyperplanes over the 2^-10-quantized embedding, one sign bit per
-    * plane. Exact integer arithmetic ⇒ bit-identical in DuckDB
-    * ([[lshBucketCtes]] renders the same family).
+  /** The sign-LSH kernel under c15, c51, c54 and c65: one sign bit per
+    * plane of `planes` over the 2^-10-quantized embedding. Quantize
+    * once per vector: floor(v * 1024) — float→double is exact, ×2^10
+    * is exact, floor is exact — so every dot product is exact integer
+    * arithmetic, bit-identical in DuckDB ([[lshBucketCtes]] renders the
+    * same family).
+    */
+  private def lshBucket(planes: Array[Array[Long]], emb: Array[Float]): Long = {
+    val q = new Array[Long](emb.length)
+    var i = 0
+    while (i < emb.length) {
+      q(i) = math.floor(emb(i).toDouble * 1024.0).toLong; i += 1
+    }
+    var bucket = 0L
+    var p = 0
+    while (p < planes.length) {
+      var dot = 0L; var j = 0
+      while (j < q.length) { dot += planes(p)(j) * q(j); j += 1 }
+      if (dot >= 0L) bucket |= (1L << p)
+      p += 1
+    }
+    bucket
+  }
+
+  /** Per-vector sign-LSH bucket assignment — c15 (bucket census) and
+    * c65 (recall eval): [[lshBucket]] over 8 md5-derived integer
+    * hyperplanes.
     */
   private def lshBucketsDf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -512,24 +534,7 @@ object TierC {
     vecs(s, d)
       .mapPartitions { it =>
         val ps = bc.value
-        it.map { case (id, emb) =>
-          // Quantize once per vector: floor(v * 1024) — float→double is
-          // exact, ×2^10 is exact, floor is exact ⇒ identical in DuckDB.
-          val q = new Array[Long](emb.length)
-          var i = 0
-          while (i < emb.length) {
-            q(i) = math.floor(emb(i).toDouble * 1024.0).toLong; i += 1
-          }
-          var bucket = 0L
-          var p = 0
-          while (p < ps.length) {
-            var dot = 0L; var j = 0
-            while (j < q.length) { dot += ps(p)(j) * q(j); j += 1 }
-            if (dot >= 0L) bucket |= (1L << p)
-            p += 1
-          }
-          (bucket, id)
-        }
+        it.map { case (id, emb) => (lshBucket(ps, emb), id) }
       }
       .toDF("bucket", "vec_id")
   }
@@ -2237,22 +2242,7 @@ object TierC {
     vecs(s, d)
       .mapPartitions { it =>
         val ps = bc.value
-        it.map { case (id, emb) =>
-          val q = new Array[Long](emb.length)
-          var i = 0
-          while (i < emb.length) {
-            q(i) = math.floor(emb(i).toDouble * 1024.0).toLong; i += 1
-          }
-          var bucket = 0L
-          var p = 0
-          while (p < ps.length) {
-            var dot = 0L; var j = 0
-            while (j < q.length) { dot += ps(p)(j) * q(j); j += 1 }
-            if (dot >= 0L) bucket |= (1L << p)
-            p += 1
-          }
-          (bucket, id, emb)
-        }
+        it.map { case (id, emb) => (lshBucket(ps, emb), id, emb) }
       }
       .groupByKey(_._1)
       .flatMapGroups { (_, it) =>
@@ -2694,22 +2684,7 @@ object TierC {
     vecs(s, d)
       .mapPartitions { it =>
         val ps = bc.value
-        it.map { case (id, emb) =>
-          val q = new Array[Long](emb.length)
-          var i = 0
-          while (i < emb.length) {
-            q(i) = math.floor(emb(i).toDouble * 1024.0).toLong; i += 1
-          }
-          var bucket = 0L
-          var p = 0
-          while (p < ps.length) {
-            var dot = 0L; var j = 0
-            while (j < q.length) { dot += ps(p)(j) * q(j); j += 1 }
-            if (dot >= 0L) bucket |= (1L << p)
-            p += 1
-          }
-          (bucket, id, emb)
-        }
+        it.map { case (id, emb) => (lshBucket(ps, emb), id, emb) }
       }
       .groupByKey(_._1)
       .flatMapGroups { (bucket, it) =>

@@ -4,7 +4,7 @@ import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -76,18 +76,8 @@ private[sources] class GraftMemBranchTable(parent: GraftMemTable,
         override def createReaderFactory(): PartitionReaderFactory = {
           val proj = GraftCell.projector(required, snapSchema,
             snapDefaults, colMap = snapColMap)
-          new PartitionReaderFactory {
-            override def createReader(
-                p: InputPartition): PartitionReader[InternalRow] = {
-              val data = p.asInstanceOf[GraftMemPartition].data
-              new PartitionReader[InternalRow] {
-                private var i = -1
-                override def next(): Boolean = { i += 1; i < data.length }
-                override def get(): InternalRow = proj(0L, data(i))
-                override def close(): Unit = ()
-              }
-            }
-          }
+          new RowsReaderFactory[GraftMemPartition, Array[Any]](_.data,
+            (_, r) => proj(0L, r))
         }
       }
     }

@@ -1586,20 +1586,8 @@ private[sources] class GraftMemScanBuilder(table: GraftMemTable,
         Map("_group" -> ((g: Long, _: Array[Any]) =>
           java.lang.Long.valueOf(g): Any)),
         colMap = snapColMap)
-      new PartitionReaderFactory {
-        override def createReader(
-            p: InputPartition): PartitionReader[InternalRow] = {
-          val mp = p.asInstanceOf[GraftMemPartition]
-          val data = mp.data
-          val g = mp.groupVal
-          new PartitionReader[InternalRow] {
-            private var i = -1
-            override def next(): Boolean = { i += 1; i < data.length }
-            override def get(): InternalRow = proj(g, data(i))
-            override def close(): Unit = ()
-          }
-        }
-      }
+      new RowsReaderFactory[GraftMemPartition, Array[Any]](_.data,
+        (mp, r) => proj(mp.groupVal, r))
     }
   }
 }
@@ -1607,6 +1595,28 @@ private[sources] class GraftMemScanBuilder(table: GraftMemTable,
 private[sources] case class GraftMemPartition(data: Vector[Array[Any]],
     groupVal: Long = 0L)
     extends InputPartition
+
+/** The one reader over an in-memory partition, shared by every graftmem
+  * scan whose split already holds its rows: `rows` takes the
+  * partition's stored rows, `row` turns the partition and one stored
+  * row into the row Spark reads (a column projection, or the row
+  * itself for pre-built metadata rows).
+  */
+private[sources] final class RowsReaderFactory[P <: InputPartition, R](
+    rows: P => scala.collection.IndexedSeq[R], row: (P, R) => InternalRow)
+    extends PartitionReaderFactory {
+  override def createReader(
+      p: InputPartition): PartitionReader[InternalRow] = {
+    val part = p.asInstanceOf[P]
+    val data = rows(part)
+    new PartitionReader[InternalRow] {
+      private var i = -1
+      override def next(): Boolean = { i += 1; i < data.length }
+      override def get(): InternalRow = row(part, data(i))
+      override def close(): Unit = ()
+    }
+  }
+}
 
 /** `replace = false`: INSERT INTO (append), TRUNCATE (overwrite all),
   * OVERWRITE-BY-FILTER (b86, `SupportsOverwriteV2` — Spark's

@@ -4,7 +4,7 @@ import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -112,18 +112,8 @@ private[sources] class GraftFilesTable(parent: GraftMemMorTable)
 private[sources] object GraftFilesTable {
   /** Shared reader for pre-materialized metadata rows. */
   private[sources] val rowArrayReaderFactory: PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(
-          p: InputPartition): PartitionReader[InternalRow] = {
-        val data = p.asInstanceOf[GraftHistoryPartition].rows
-        new PartitionReader[InternalRow] {
-          private var i = -1
-          override def next(): Boolean = { i += 1; i < data.length }
-          override def get(): InternalRow = data(i)
-          override def close(): Unit = ()
-        }
-      }
-    }
+    new RowsReaderFactory[GraftHistoryPartition, InternalRow](_.rows,
+      (_, r) => r)
 }
 
 /** `db.tbl__partitions` over a copy-on-write parent: one row per

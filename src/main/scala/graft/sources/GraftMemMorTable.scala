@@ -1453,21 +1453,11 @@ private[sources] object MorChangesTable {
             if (j < e._5.length) GraftCell.toInternal(e._5(j), dt)
             else dflt
       }
-    new PartitionReaderFactory {
-      override def createReader(
-          p: InputPartition): PartitionReader[InternalRow] = {
-        val data = p.asInstanceOf[MorChangesPartition].data
-        new PartitionReader[InternalRow] {
-          private var i = -1
-          override def next(): Boolean = { i += 1; i < data.length }
-          override def get(): InternalRow =
-            InternalRow.fromSeq(
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(
-                getters.map(_(data(i)))))
-          override def close(): Unit = ()
-        }
-      }
-    }
+    new RowsReaderFactory[MorChangesPartition,
+        (Long, Boolean, Long, Long, Array[Any])](_.data,
+      (_, e) => InternalRow.fromSeq(
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(
+          getters.map(_(e)))))
   }
 }
 
@@ -1736,18 +1726,8 @@ private[sources] class MorTableMicroBatchStream(
     // layout); pre-ALTER rows pad added columns with their defaults
     val proj = GraftCell.projector(req, parent.schema(),
       parent.colDefaults)
-    new PartitionReaderFactory {
-      override def createReader(
-          p: InputPartition): PartitionReader[InternalRow] = {
-        val data = p.asInstanceOf[MorPartition].data
-        new PartitionReader[InternalRow] {
-          private var i = -1
-          override def next(): Boolean = { i += 1; i < data.length }
-          override def get(): InternalRow = proj(0L, data(i)._2)
-          override def close(): Unit = ()
-        }
-      }
-    }
+    new RowsReaderFactory[MorPartition, (Long, Array[Any])](_.data,
+      (_, r) => proj(0L, r._2))
   }
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -4,7 +4,7 @@ import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -189,18 +189,8 @@ private[sources] class GraftMemSnapshotTable(parentName: String,
           // (b101) routes renamed/widened columns to their slots
           val proj = GraftCell.projector(required, tblSchema, defaults,
             colMap = colMap)
-          new PartitionReaderFactory {
-            override def createReader(
-                p: InputPartition): PartitionReader[InternalRow] = {
-              val data = p.asInstanceOf[GraftMemPartition].data
-              new PartitionReader[InternalRow] {
-                private var i = -1
-                override def next(): Boolean = { i += 1; i < data.length }
-                override def get(): InternalRow = proj(0L, data(i))
-                override def close(): Unit = ()
-              }
-            }
-          }
+          new RowsReaderFactory[GraftMemPartition, Array[Any]](_.data,
+            (_, r) => proj(0L, r))
         }
       }
     }
@@ -257,18 +247,7 @@ private[sources] class GraftHistoryTable(parent: Table
         override def planInputPartitions(): Array[InputPartition] =
           Array(GraftHistoryPartition(rows))
         override def createReaderFactory(): PartitionReaderFactory =
-          new PartitionReaderFactory {
-            override def createReader(
-                p: InputPartition): PartitionReader[InternalRow] = {
-              val data = p.asInstanceOf[GraftHistoryPartition].rows
-              new PartitionReader[InternalRow] {
-                private var i = -1
-                override def next(): Boolean = { i += 1; i < data.length }
-                override def get(): InternalRow = data(i)
-                override def close(): Unit = ()
-              }
-            }
-          }
+          GraftFilesTable.rowArrayReaderFactory
       }
     }
 }

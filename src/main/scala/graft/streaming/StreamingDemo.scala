@@ -399,23 +399,18 @@ object StreamingDemo {
     * state-store count is fixed at its first checkpoint from
     * `spark.sql.shuffle.partitions`, and each store is its own
     * checkpoint directory of fsync'd delta files — at demo scale that
-    * init dominates the query. Production sizes this to throughput
-    * (`graft.stream.partitions`); batch queries are untouched (the
-    * session value is restored).
+    * init dominates the query. Production sizes this to throughput;
+    * batch queries are untouched (the session value is restored).
     */
   private def withStreamPartitions[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val mgrKey = "spark.sql.streaming.checkpointFileManagerClass"
-    val prev = s.conf.get(key)
-    val prevMgr = s.conf.getOption(mgrKey)
     // never RAISE the count above the session's (a local[4] session
-    // should not get 8 state stores). Default 4 (was 8): measured
-    // A/B at sf0.1 over the 8 heaviest streaming queries put 4 mildly
-    // ahead of 8 and clearly ahead of 2 — per-partition store init
-    // falls while the tiny microbatches still parallelize.
-    val n = s.conf.getOption("graft.stream.partitions")
-      .getOrElse(math.min(prev.toInt, 4).toString)
-    s.conf.set(key, n)
+    // should not get 8 state stores). 4: measured A/B at sf0.1 over
+    // the 8 heaviest streaming queries put 4 mildly ahead of 8 and
+    // clearly ahead of 2 — per-partition store init falls while the
+    // tiny microbatches still parallelize.
+    val n = math.min(s.conf.get(key).toInt, 4).toString
     // Demo checkpoints live on LOCAL ephemeral storage (TmpDir, tmpfs
     // when available), where the FileSystem-backed checkpoint manager
     // is measured 15-25% faster per stream than the default
@@ -430,13 +425,11 @@ object StreamingDemo {
     // and keep Spark's default manager (FileContext), whose rename
     // guarantees are the conservative choice there; an explicit
     // session-level setting wins over the demo scope.
-    if (prevMgr.isEmpty)
-      s.conf.set(mgrKey, "org.apache.spark.sql.execution.streaming." +
-        "checkpointing.FileSystemBasedCheckpointFileManager")
-    try body finally {
-      s.conf.set(key, prev)
-      if (prevMgr.isEmpty) s.conf.unset(mgrKey)
-    }
+    val mgr =
+      if (s.conf.getOption(mgrKey).nonEmpty) Nil
+      else Seq(mgrKey -> ("org.apache.spark.sql.execution.streaming." +
+        "checkpointing.FileSystemBasedCheckpointFileManager"))
+    graft.util.GraftConf.withConf(s, (key -> n) +: mgr: _*)(body)
   }
 
   /** Run `body` under the RocksDB state-store provider — required by
@@ -449,21 +442,14 @@ object StreamingDemo {
     * commit, skipped. Session values are restored on exit so batch
     * queries and non-RocksDB streams are untouched.
     */
-  private def withRocksDB[T](s: SparkSession)(body: => T): T = {
-    val keys = Seq(
+  private def withRocksDB[T](s: SparkSession)(body: => T): T =
+    graft.util.GraftConf.withConf(s,
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
         "true",
       "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" ->
-        "false")
-    val prev = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-    keys.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
+        "false")(body)
 
   /** One-time per-JVM streaming-engine warmup (Bench calls this before
     * timing): the microbatch planner, file source/sink commit logs,
@@ -520,12 +506,9 @@ object StreamingDemo {
     * declared output depends on it. On an unbounded production stream
     * the knob instead trades state-eviction timeliness, not output.
     */
-  private def withoutNoDataBatches[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "false")
-    try body finally s.conf.set(key, prev)
-  }
+  private def withoutNoDataBatches[T](s: SparkSession)(body: => T): T =
+    graft.util.GraftConf.withConf(s,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(body)
 
   /** File-source stream over the events parquet with the shared ts
     * normalization. The pinned stream schema is PROBED from the batch
@@ -537,11 +520,9 @@ object StreamingDemo {
     * seven event streams produced garbage. Probing keeps batch and
     * stream byte-identical on `ts` by construction.
     */
-  private def eventStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private def eventStream(s: SparkSession, d: String): DataFrame =
     graft.util.Tables.normalizeEventTs(
       fileStream(s, d, "events.parquet", graft.util.Tables.eventsFileSchema(s, d)))
-  }
 
   /** Streaming file source over `$d/$leaf` with a pinned schema.
     * `$leaf` may be a single file (this corpus) or a directory of part
@@ -1120,9 +1101,7 @@ object StreamingDemo {
     */
   def streamContinuous(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val suf = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val name = s"g_d28_cont_$suf"
+    val name = s"g_d28_cont_${graft.util.DemoTables.corpusSuffix(d)}"
     val rows = 2000L
     // Continuous readers are LONG-RUNNING tasks that pin a core each
     // for the query's whole life (Spark's documented continuous-mode
@@ -1152,44 +1131,36 @@ object StreamingDemo {
     // Belt-and-braces for the same class of wedge: bound stop() so a
     // future starvation fails THIS query loudly instead of hanging the
     // whole harness (default stopTimeout is 0 = wait forever).
-    val stopKey = "spark.sql.streaming.stopTimeout"
-    val prevStop = s.conf.getOption(stopKey)
-    s.conf.set(stopKey, "60s")
-    val q = src.selectExpr("id", "value")
-      .writeStream.format("memory").queryName(name)
-      .trigger(if (continuousOk) Trigger.Continuous("200 milliseconds")
-        else Trigger.ProcessingTime("200 milliseconds"))
-      .outputMode("append").start()
-    try {
-      // drain check counts DISTINCT ids: an epoch retry can replay
-      // rows (at-least-once), so a raw count could hit `rows` while
-      // ids are still missing
-      def drained: Long =
-        s.table(name).select("id").distinct().count()
-      val deadline = System.currentTimeMillis() + 120000
-      while (drained < rows &&
-        System.currentTimeMillis() < deadline && q.exception.isEmpty)
-        Thread.sleep(200)
-      q.exception.foreach(e => throw e)
-      require(drained >= rows,
-        s"d28: continuous drain incomplete after 120 s")
-      s.table(name)
-        .dropDuplicates("id") // idempotent consumption of at-least-once
-        .groupBy((col("id") % 10).as("m10"))
-        .agg(count(lit(1)).as("n"), min(col("value")).as("min_md5"),
-          max(col("value")).as("max_md5"))
-        .orderBy("m10")
-        .localCheckpoint() // materialize before the query stops
-    } finally {
-      try q.stop()
-      finally {
-        prevStop match {
-          case Some(v) => s.conf.set(stopKey, v)
-          case None    => s.conf.unset(stopKey)
-        }
-        s.catalog.dropTempView(name)
+    graft.util.GraftConf.withConf(s, "spark.sql.streaming.stopTimeout" -> "60s") {
+      val q = src.selectExpr("id", "value")
+        .writeStream.format("memory").queryName(name)
+        .trigger(if (continuousOk) Trigger.Continuous("200 milliseconds")
+          else Trigger.ProcessingTime("200 milliseconds"))
+        .outputMode("append").start()
+      try {
+        // drain check counts DISTINCT ids: an epoch retry can replay
+        // rows (at-least-once), so a raw count could hit `rows` while
+        // ids are still missing
+        def drained: Long =
+          s.table(name).select("id").distinct().count()
+        val deadline = System.currentTimeMillis() + 120000
+        while (drained < rows &&
+          System.currentTimeMillis() < deadline && q.exception.isEmpty)
+          Thread.sleep(200)
+        q.exception.foreach(e => throw e)
+        require(drained >= rows,
+          s"d28: continuous drain incomplete after 120 s")
+        s.table(name)
+          .dropDuplicates("id") // idempotent consumption of at-least-once
+          .groupBy((col("id") % 10).as("m10"))
+          .agg(count(lit(1)).as("n"), min(col("value")).as("min_md5"),
+            max(col("value")).as("max_md5"))
+          .orderBy("m10")
+          .localCheckpoint() // materialize before the query stops
+      } finally {
+        try q.stop() finally s.catalog.dropTempView(name)
+        ()
       }
-      ()
     }
   }
 
@@ -1360,8 +1331,6 @@ object StreamingDemo {
     new graft.util.BoundedMemo[(SparkSession, String), String]()
 
   def streamMorUpsert(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftmem",
-      "graft.sources.GraftMemCatalog")
     val ev = graft.util.Tables.events(s, d)
       .select(col("user_id"), col("event_id"),
         round(col("value") * 100).cast("long").as("cents"))
@@ -1378,8 +1347,7 @@ object StreamingDemo {
     val upsert: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
       Long) => Unit = { (batch, _) =>
       val ss = batch.sparkSession // the stream's cloned session
-      ss.conf.set("spark.sql.catalog.graftmem",
-        "graft.sources.GraftMemCatalog")
+      graft.util.DemoTables.registerGraftmem(ss)
       batch.groupBy("user_id")
         .agg(count(lit(1)).as("cnt"), sum("cents").as("val_cents"))
         .createOrReplaceTempView("g_d25_batch")
@@ -1420,8 +1388,6 @@ object StreamingDemo {
     new graft.util.BoundedMemo[(SparkSession, String), String]()
 
   def streamEqUpsert(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftmem",
-      "graft.sources.GraftMemCatalog")
     val ev = graft.util.Tables.events(s, d)
       .select(col("user_id"), col("event_id"),
         round(col("value") * 100).cast("long").as("cents"))
@@ -1439,8 +1405,7 @@ object StreamingDemo {
     val upsert: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
       Long) => Unit = { (batch, _) =>
       val ss = batch.sparkSession
-      ss.conf.set("spark.sql.catalog.graftmem",
-        "graft.sources.GraftMemCatalog")
+      graft.util.DemoTables.registerGraftmem(ss)
       batch.groupBy("user_id")
         .agg(count(lit(1)).as("cnt"), sum("cents").as("val_cents"))
         .createOrReplaceTempView("g_d31_batch")
@@ -1489,8 +1454,6 @@ object StreamingDemo {
     * publish idempotent with d23's committed-epoch ledger.
     */
   def streamWap(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftmem",
-      "graft.sources.GraftMemCatalog")
     val ev = graft.util.Tables.events(s, d)
       .select(col("user_id"), col("event_id"),
         round(col("value") * 100).cast("long").as("val_cents"))
@@ -1516,8 +1479,7 @@ object StreamingDemo {
     val gate: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
       Long) => Unit = { (batch, id) =>
       val ss = batch.sparkSession
-      ss.conf.set("spark.sql.catalog.graftmem",
-        "graft.sources.GraftMemCatalog")
+      graft.util.DemoTables.registerGraftmem(ss)
       val br = s"ing$id"
       ss.sql(s"CALL graftmem.system.create_branch('$short', '$br')")
         .collect()
@@ -1882,16 +1844,14 @@ object StreamingDemo {
       require(rows.length == 1,
         s"d29 expects one stateful operator, got ${rows.length}")
       val m = rows(0)
-      // the declared num_partitions column is oracle-pinned at 4 (the
-      // withStreamPartitions default); a session configured below 4
-      // shuffle partitions (or a graft.stream.partitions override)
-      // would silently diverge from the oracle — guard it loudly, the
-      // c72 graft.similarity.k discipline
+      // the declared num_partitions column is oracle-pinned at 4
+      // (withStreamPartitions' cap); a session configured below 4
+      // shuffle partitions would silently diverge from the oracle —
+      // guard it loudly, the c72 graft.similarity.k discipline
       require(m.getInt(3) == 4,
         s"d29's oracle pins num_partitions = 4; the checkpoint was " +
           s"written with ${m.getInt(3)} — run with " +
-          "spark.sql.shuffle.partitions >= 4 and no " +
-          "graft.stream.partitions override")
+          "spark.sql.shuffle.partitions >= 4")
       val open = s.read.format("statestore")
         .option("operatorId", m.getLong(0))
         .option("storeName", m.getString(2))

@@ -12,6 +12,23 @@ object GraftConf {
   private def get(s: SparkSession, key: String, default: String): String =
     s.conf.getOption(key).getOrElse(default)
 
+  /** Run `body` with `kvs` set on the session, then put every key back:
+    * a key that had a value gets it again, an absent key is unset —
+    * also when `body` throws. Scopes nest and unwind innermost first.
+    * The one way query code changes shared session state, so a planner
+    * flag one query needs can never leak into the next.
+    */
+  def withConf[A](s: SparkSession, kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prev.reverseIterator.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
   /** Word-shingle width for MinHash/Jaccard (c2/c9/c18). */
   def shingleSize(s: SparkSession): Int =
     get(s, "graft.shingle.size", "3").toInt

@@ -63,14 +63,14 @@ object Tables {
     * paths cannot drift, and so a driver-side corpus regeneration
     * (which has happened: TIMESTAMP(NANOS) → TIMESTAMP(MICROS,ntz)
     * between rounds 4 and 5) changes behavior instead of breaking it.
-    * `nanosAsLong` is set before the probe: it is a no-op for µs files
-    * and the only way a NANOS footer is readable at all on Spark 4.
+    * The probe relies on `spark.sql.legacy.parquet.nanosAsLong=true`,
+    * which [[graft.GraftSession]] (and perfbench's session) set at build
+    * time: a no-op for µs files and the only way a NANOS footer is
+    * readable at all on Spark 4.
     */
   def eventsFileSchema(s: SparkSession,
-      d: String): org.apache.spark.sql.types.StructType = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      d: String): org.apache.spark.sql.types.StructType =
     table(s, d, "events").schema
-  }
 
   /** Normalize `events.ts` to a session-zoned TimestampType column,
     * branching on the type the reader actually produced:
@@ -103,7 +103,6 @@ object Tables {
   /** Events table with `ts` normalized per [[normalizeEventTs]]. */
   def events(s: SparkSession, d: String): DataFrame =
     memoized((s, d, "events#ts")) {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       normalizeEventTs(table(s, d, "events"))
     }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")

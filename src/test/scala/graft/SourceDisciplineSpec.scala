@@ -53,4 +53,25 @@ class SourceDisciplineSpec extends AnyFunSuite {
     assert(builders.map(new java.io.File(_).getName) == Seq("GraftSession.scala"),
       s"SparkSession.builder( outside GraftSession: $builders")
   }
+
+  test("src/main changes session conf only in GraftConf and DemoTables") {
+    // query code scopes a conf through GraftConf.withConf, which puts
+    // every key back (or unsets it) even when the body throws; a
+    // hand-rolled save/set/restore can leak a planner flag into every
+    // later query on the shared session
+    val setters = for ((path, text) <- mainSources;
+                       _ <- "conf\\s*\\.\\s*(set|unset)\\s*\\(".r.findAllIn(text))
+      yield new java.io.File(path).getName
+    assert(setters.toSet.subsetOf(Set("GraftConf.scala", "DemoTables.scala")),
+      s"conf.set( / conf.unset( outside GraftConf and DemoTables: $setters")
+  }
+
+  test("src/main registers the graftmem catalog only in DemoTables") {
+    // one registration, next to the one per-corpus table suffix
+    val sites = for ((path, text) <- mainSources;
+                     _ <- "\"spark.sql.catalog.graftmem\"".r.findAllIn(text))
+      yield new java.io.File(path).getName
+    assert(sites == Seq("DemoTables.scala"),
+      s"graftmem catalog literal outside DemoTables: $sites")
+  }
 }

@@ -39,6 +39,55 @@ class UtilSpec extends SparkSpec {
     }
   }
 
+  test("withConf: an absent key is unset afterwards, a present key gets its old value back") {
+    import graft.util.GraftConf.withConf
+    val (absent, present) = ("graft.test.absent", "graft.test.present")
+    spark.conf.set(present, "old")
+    try {
+      val seen = withConf(spark, absent -> "a", present -> "new") {
+        (spark.conf.get(absent), spark.conf.get(present))
+      }
+      assert(seen == ("a", "new"))
+      assert(spark.conf.getOption(absent).isEmpty)
+      assert(spark.conf.get(present) == "old")
+    } finally spark.conf.unset(present)
+  }
+
+  test("withConf: restores when the body throws") {
+    import graft.util.GraftConf.withConf
+    val (absent, present) = ("graft.test.absent", "graft.test.present")
+    spark.conf.set(present, "old")
+    try {
+      val e = intercept[IllegalStateException] {
+        withConf(spark, absent -> "a", present -> "new") {
+          throw new IllegalStateException("boom")
+        }
+      }
+      assert(e.getMessage == "boom")
+      assert(spark.conf.getOption(absent).isEmpty)
+      assert(spark.conf.get(present) == "old")
+    } finally spark.conf.unset(present)
+  }
+
+  test("withConf: nested scopes unwind innermost first") {
+    import graft.util.GraftConf.withConf
+    val k = "graft.test.nested"
+    val trail = scala.collection.mutable.Buffer[Option[String]]()
+    withConf(spark, k -> "outer") {
+      withConf(spark, k -> "inner") {
+        trail += spark.conf.getOption(k)
+      }
+      trail += spark.conf.getOption(k)
+      // an inner scope that throws still hands the outer value back
+      intercept[RuntimeException] {
+        withConf(spark, k -> "inner2") { throw new RuntimeException("x") }
+      }
+      trail += spark.conf.getOption(k)
+    }
+    trail += spark.conf.getOption(k)
+    assert(trail == Seq(Some("inner"), Some("outer"), Some("outer"), None))
+  }
+
   test("TmpDir paths are under a per-JVM unique base; fresh never repeats") {
     val p1 = TmpDir.path("x")
     val p2 = TmpDir.path("x")

@@ -159,11 +159,8 @@ class RelationalPlanSpec extends SparkSpec {
     // relation is itself answerable, join pushdown + complete
     // aggregate pushdown leave a SINGLE closed-form scan — no join
     // operator, no aggregate operator
-    val prev = spark.conf.getOption(
-      "spark.sql.optimizer.datasourceV2JoinPushdown")
-    spark.conf.set("spark.sql.optimizer.datasourceV2JoinPushdown",
-      "true")
-    try {
+    graft.util.GraftConf.withConf(spark,
+        "spark.sql.optimizer.datasourceV2JoinPushdown" -> "true") {
       import org.apache.spark.sql.functions._
       val l = spark.read.format("pairgen").option("rows", "9000").load()
       val r = spark.read.format("pairgen").option("rows", "5000").load()
@@ -178,11 +175,6 @@ class RelationalPlanSpec extends SparkSpec {
       assert(q.collect().toSeq.map(r0 =>
         (r0.getLong(0), r0.getLong(1), r0.getLong(2)))
         == Seq((4800L, 200L, 4999L)))
-    } finally prev match {
-      case Some(v) => spark.conf.set(
-        "spark.sql.optimizer.datasourceV2JoinPushdown", v)
-      case None => spark.conf.unset(
-        "spark.sql.optimizer.datasourceV2JoinPushdown")
     }
   }
 
@@ -198,9 +190,8 @@ class RelationalPlanSpec extends SparkSpec {
     assert(outP.collect().toSeq == outN.collect().toSeq)
     // an unsupported path declines all-or-nothing: the full variant
     // materializes, Spark extracts (and finds nothing at $.nope)
-    val prev = spark.conf.getOption("spark.sql.variant.pushVariantIntoScan")
-    spark.conf.set("spark.sql.variant.pushVariantIntoScan", "true")
-    try {
+    graft.util.GraftConf.withConf(spark,
+        "spark.sql.variant.pushVariantIntoScan" -> "true") {
       spark.read.format("pairgen").option("rows", "50")
         .option("variant", "true").load()
         .createOrReplaceTempView("g_a43_declined")
@@ -209,11 +200,6 @@ class RelationalPlanSpec extends SparkSpec {
       assert(q.queryExecution.executedPlan.toString
         .contains("variant_get"))
       assert(q.collect().map(r => r.isNullAt(0)).toSeq == Seq(true))
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.variant.pushVariantIntoScan", v)
-      case None =>
-        spark.conf.unset("spark.sql.variant.pushVariantIntoScan")
     }
   }
 
