@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2 Tier D — streaming semantics. The reference has no
   * streaming at all; each op here is declared as a batch query with a
-  * streaming-compatible shape (oracle-able in DuckDB), and the true
-  * Structured Streaming twins live in [[graft.streaming.StreamingDemo]]
-  * (declared as d5/d6).
+  * streaming-compatible shape (oracle-able in DuckDB), and the 31 true
+  * Structured Streaming queries live in [[graft.streaming.StreamingDemo]]
+  * (declared as d5, d6 and d8–d36).
   *
   * Time discipline: event time only, µs precision end-to-end, outputs
   * floor'd to epoch seconds or date_trunc'd (SURVEY §7.4 #3).

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 import scala.collection.mutable
 
@@ -67,9 +68,12 @@ case class GenEv(user_id: Long, gen: Long)
   * shape every unbounded streaming claim set needs: state is bounded
   * by (arrival rate × TTL), not by stream lifetime. Admission
   * re-arms the TTL (the sliding-horizon variant; a fixed-window
-  * variant would skip the update on rejection).
+  * variant would skip the update on rejection). `ttlMs = None` is the
+  * TTL-less twin (`TTLConfig.NONE`): the spec's contrast (generation 2
+  * must come back all-rejected) proving the TTL is what re-admits, not
+  * batch boundaries.
   */
-class TtlClaimProcessor(ttlMs: Long)
+class TtlClaimProcessor(ttlMs: Option[Long])
     extends org.apache.spark.sql.streaming.StatefulProcessor[
       Long, GenEv, (Long, Long, Boolean)] {
   @transient private var claim:
@@ -79,34 +83,8 @@ class TtlClaimProcessor(ttlMs: Long)
       timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
     claim = getHandle.getValueState[Long]("claim",
       org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.streaming.TTLConfig(
-        java.time.Duration.ofMillis(ttlMs)))
-  override def handleInputRows(
-      key: Long, rows: Iterator[GenEv],
-      tv: org.apache.spark.sql.streaming.TimerValues)
-      : Iterator[(Long, Long, Boolean)] =
-    rows.toArray.sortBy(_.gen).iterator.map { e =>
-      val admitted = !claim.exists()
-      if (admitted) claim.update(1L)
-      (e.user_id, e.gen, admitted)
-    }
-}
-
-/** d30's TTL-less twin: identical claim logic, `TTLConfig.NONE` — the
-  * spec's contrast (generation 2 must come back all-rejected) proving
-  * the TTL is what re-admits, not batch boundaries.
-  */
-class NoTtlClaimProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, GenEv, (Long, Long, Boolean)] {
-  @transient private var claim:
-    org.apache.spark.sql.streaming.ValueState[Long] = _
-  override def init(
-      outputMode: org.apache.spark.sql.streaming.OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-    claim = getHandle.getValueState[Long]("claim",
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
+      ttlMs.fold(org.apache.spark.sql.streaming.TTLConfig.NONE)(t =>
+        org.apache.spark.sql.streaming.TTLConfig(java.time.Duration.ofMillis(t))))
   override def handleInputRows(
       key: Long, rows: Iterator[GenEv],
       tv: org.apache.spark.sql.streaming.TimerValues)
@@ -196,6 +174,66 @@ case class SessionOut(
 /** d16's per-user open session (top-level public for Catalyst codegen). */
 case class OpenSession(start_us: Long, last_us: Long, n: Long)
 
+/** The session fold d16 and d17 share: per user one `OpenSession`
+  * in `open`, the (ts, event_id)-ordered gap FSM over it, and exactly
+  * one live inactivity timer. A gap of `gapUs` or more closes the open
+  * session (d6's `flatMapGroupsWithState` fold splits only on a gap
+  * strictly greater, each rule pinned by its own oracle).
+  */
+abstract class SessionFoldProcessor(gapUs: Long)
+    extends org.apache.spark.sql.streaming.StatefulProcessor[
+      Long, Ev, (Long, Long, Long, Long)] {
+  @transient protected var open:
+    org.apache.spark.sql.streaming.ValueState[OpenSession] = _
+  override def init(
+      outputMode: org.apache.spark.sql.streaming.OutputMode,
+      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
+    open = getHandle.getValueState[OpenSession]("open",
+      org.apache.spark.sql.Encoders.product[OpenSession],
+      org.apache.spark.sql.streaming.TTLConfig.NONE)
+
+  protected def emit(key: Long, o: OpenSession): (Long, Long, Long, Long) =
+    (key, o.start_us / 1000000L, o.last_us / 1000000L, o.n)
+
+  /** Fold `evs` into the stored open session in the same (ts,
+    * event_id) total order as the oracle's windows (the engine hands a
+    * key's rows unordered). Returns the sessions a gap closed, as
+    * output rows, and the session left open.
+    */
+  protected def fold(key: Long, evs: Array[Ev])
+      : (mutable.ArrayBuffer[(Long, Long, Long, Long)], Option[OpenSession]) = {
+    val out = mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
+    var cur: Option[OpenSession] = if (open.exists()) Some(open.get()) else None
+    evs.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
+      cur match {
+        case Some(o) if e.ts_us - o.last_us < gapUs =>
+          // min on start: a cross-batch late event (admitted by the 2 h
+          // watermark) that still falls within the gap EXTENDS the open
+          // session backwards rather than corrupting its start
+          cur = Some(OpenSession(math.min(o.start_us, e.ts_us),
+            math.max(o.last_us, e.ts_us), o.n + 1))
+        case Some(o) =>
+          out += emit(key, o)
+          cur = Some(OpenSession(e.ts_us, e.ts_us, 1))
+        case None =>
+          cur = Some(OpenSession(e.ts_us, e.ts_us, 1))
+      }
+    }
+    (out, cur)
+  }
+
+  /** Exactly one live timer per user: drop stale ones (an earlier
+    * batch's shorter deadline would close an extended session early),
+    * then arm `deadlineUs`. Materialized before deleting — never mutate
+    * the store under its own live iterator.
+    */
+  protected def rearm(deadlineUs: Option[Long]): Unit = {
+    getHandle.listTimers().toList.foreach(t =>
+      getHandle.deleteTimer(t.asInstanceOf[Long]))
+    deadlineUs.foreach(t => getHandle.registerTimer(t / 1000L))
+  }
+}
+
 /** d16's `StatefulProcessor` with EVENT-TIME TIMERS — the capability
   * that distinguishes `transformWithState` from the older
   * `flatMapGroupsWithState` (d6 must re-see a user to notice their
@@ -221,54 +259,12 @@ case class OpenSession(start_us: Long, last_us: Long, n: Long)
   * [[BufferedSessionProcessor]] is the multi-batch-exact upgrade.
   */
 class SessionTimerProcessor(gapUs: Long)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, Ev, (Long, Long, Long, Long)] {
-  @transient private var open:
-    org.apache.spark.sql.streaming.ValueState[OpenSession] = _
-  override def init(
-      outputMode: org.apache.spark.sql.streaming.OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-    open = getHandle.getValueState[OpenSession]("open",
-      org.apache.spark.sql.Encoders.product[OpenSession],
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-  private def emit(key: Long, o: OpenSession): (Long, Long, Long, Long) =
-    (key, o.start_us / 1000000L, o.last_us / 1000000L, o.n)
-
+    extends SessionFoldProcessor(gapUs) {
   override def handleInputRows(
       key: Long, rows: Iterator[Ev],
       tv: org.apache.spark.sql.streaming.TimerValues): Iterator[(Long, Long, Long, Long)] = {
-    // within a batch the engine hands all of the key's rows at once,
-    // unordered — sort by the same (ts, event_id) total order as the
-    // oracle's windows
-    val sorted = rows.toArray.sortBy(e => (e.ts_us, e.event_id))
-    val out = mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    var cur: Option[OpenSession] = if (open.exists()) Some(open.get()) else None
-    sorted.foreach { e =>
-      cur match {
-        case Some(o) if e.ts_us - o.last_us < gapUs =>
-          // min on start: a cross-batch late event (admitted by the 2 h
-          // watermark) that still falls within the gap EXTENDS the open
-          // session backwards rather than corrupting its start
-          cur = Some(OpenSession(math.min(o.start_us, e.ts_us),
-            math.max(o.last_us, e.ts_us), o.n + 1))
-        case Some(o) =>
-          out += emit(key, o)
-          cur = Some(OpenSession(e.ts_us, e.ts_us, 1))
-        case None =>
-          cur = Some(OpenSession(e.ts_us, e.ts_us, 1))
-      }
-    }
-    cur.foreach { o =>
-      open.update(o)
-      // exactly one live timer per user: drop stale ones (an earlier
-      // batch's shorter deadline would close the extended session
-      // early). Materialized before deleting — never mutate the store
-      // under its own live iterator.
-      getHandle.listTimers().toList.foreach(t =>
-        getHandle.deleteTimer(t.asInstanceOf[Long]))
-      getHandle.registerTimer((o.last_us + gapUs) / 1000L)
-    }
+    val (out, cur) = fold(key, rows.toArray)
+    cur.foreach { o => open.update(o); rearm(Some(o.last_us + gapUs)) }
     out.iterator
   }
 
@@ -298,63 +294,35 @@ class SessionTimerProcessor(gapUs: Long)
   * are needed.
   */
 class BufferedSessionProcessor(gapUs: Long)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, Ev, (Long, Long, Long, Long)] {
+    extends SessionFoldProcessor(gapUs) {
   @transient private var buf:
     org.apache.spark.sql.streaming.ListState[Ev] = _
-  @transient private var open:
-    org.apache.spark.sql.streaming.ValueState[OpenSession] = _
   override def init(
       outputMode: org.apache.spark.sql.streaming.OutputMode,
       timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
+    super.init(outputMode, timeMode)
     buf = getHandle.getListState[Ev]("buf",
       org.apache.spark.sql.Encoders.product[Ev],
       org.apache.spark.sql.streaming.TTLConfig.NONE)
-    open = getHandle.getValueState[OpenSession]("open",
-      org.apache.spark.sql.Encoders.product[OpenSession],
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
   }
-
-  private def emit(key: Long, o: OpenSession): (Long, Long, Long, Long) =
-    (key, o.start_us / 1000000L, o.last_us / 1000000L, o.n)
 
   /** Drain everything the watermark has finalized; close the trailing
     * session when the watermark proves its gap; re-arm ONE timer for
     * the next deadline. Called from both input and timer paths.
     */
   private def drainAll(key: Long, wmUs: Long): Iterator[(Long, Long, Long, Long)] = {
-    val all = buf.get().toArray
-    val (ready, rest) = all.partition(_.ts_us <= wmUs)
-    val out = mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    var cur: Option[OpenSession] = if (open.exists()) Some(open.get()) else None
-    ready.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-      cur match {
-        case Some(o) if e.ts_us - o.last_us < gapUs =>
-          cur = Some(OpenSession(math.min(o.start_us, e.ts_us),
-            math.max(o.last_us, e.ts_us), o.n + 1))
-        case Some(o) =>
-          out += emit(key, o)
-          cur = Some(OpenSession(e.ts_us, e.ts_us, 1))
-        case None =>
-          cur = Some(OpenSession(e.ts_us, e.ts_us, 1))
-      }
-    }
+    val (ready, rest) = buf.get().toArray.partition(_.ts_us <= wmUs)
+    val (out, folded) = fold(key, ready)
     // close the trailing session once the watermark proves its gap:
     // every still-buffered or future event has ts > wm >= last + gap,
     // so none can extend it — it must start a NEW session
-    cur match {
-      case Some(o) if wmUs >= o.last_us + gapUs =>
-        out += emit(key, o); cur = None
-      case _ => ()
-    }
+    val cur = folded.filter(o => wmUs < o.last_us + gapUs)
+    if (cur.isEmpty) folded.foreach(o => out += emit(key, o))
     cur match { case Some(o) => open.update(o); case None => open.clear() }
     buf.clear()
     if (rest.nonEmpty) buf.appendList(rest)
-    getHandle.listTimers().toList.foreach(t =>
-      getHandle.deleteTimer(t.asInstanceOf[Long]))
-    val next = cur.map(_.last_us + gapUs).orElse(
-      if (rest.nonEmpty) Some(rest.iterator.map(_.ts_us).min + gapUs) else None)
-    next.foreach(t => getHandle.registerTimer(t / 1000L))
+    rearm(cur.map(_.last_us + gapUs).orElse(
+      if (rest.nonEmpty) Some(rest.iterator.map(_.ts_us).min + gapUs) else None))
     out.iterator
   }
 
@@ -373,15 +341,21 @@ class BufferedSessionProcessor(gapUs: Long)
     drainAll(key, tv.getCurrentWatermarkInMs() * 1000L)
 }
 
-/** SURVEY.md §2 Tier D — true Structured Streaming twins (d5/d6).
+/** SURVEY.md §2 Tier D — the 31 true Structured Streaming queries
+  * (d5, d6, d8–d36).
   *
   * The reference has no streaming; these are the Spark-native stream
   * operators a large pipeline needs: file-source `readStream` →
-  * event-time watermark → windowed aggregation (d5), and
-  * `flatMapGroupsWithState` custom session state (d6). Both process the
-  * events table as a bounded stream (processAllAvailable), so results
-  * are deterministic and DuckDB-oracled — the same code runs unbounded
-  * on a real source; only the sink/trigger wiring changes.
+  * event-time watermark → windowed aggregation (d5/d14/d18), custom
+  * state (`flatMapGroupsWithState` d6, `transformWithState` d10/d16/
+  * d17/d21/d30/d34), stream joins (d9/d11/d15), `foreachBatch` upserts
+  * (d13/d25/d31/d32), the lakehouse change feed as a source (d26/d27/
+  * d33/d35), custom DSv2 sources and sinks (d12/d23/d28), restart
+  * recovery (d22) and state forensics (d24/d29). Every one but d28
+  * (continuous trigger) and d36 (`AvailableNow`) runs as a bounded
+  * stream through one lifecycle, [[drain]], so results are
+  * deterministic and DuckDB-oracled — the same code runs unbounded on
+  * a real source; only the sink/trigger wiring changes.
   *
   * Scale: state is keyed (window×type for d5, user for d6) and lives in
   * the state store per partition — no driver state; watermark bounds
@@ -464,31 +438,16 @@ object StreamingDemo {
       .write.parquet(wsrc)
     val read = s.readStream
       .schema("user_id LONG, ts_us LONG, event_id LONG").parquet(wsrc)
-    withStreamPartitions(s) {
-      // file sink + HDFS store (the d5-d9/d14/d15 class of query)
-      val q1 = read.writeStream
-        .format("parquet").option("path", graft.util.TmpDir.fresh("warm-sink"))
-        .option("checkpointLocation", graft.util.TmpDir.fresh("warm-ckpt"))
-        .outputMode("append").start()
-      try { q1.processAllAvailable() } finally { q1.stop() }
-      val q2 = read.groupBy("user_id").count()
-        .writeStream.format("memory").queryName("warm_mem")
-        .outputMode("complete").start()
-      try { q2.processAllAvailable() } finally { q2.stop() }
-      s.catalog.dropTempView("warm_mem"): Unit
-      // RocksDB + transformWithState (the d10/d16/d17 class)
-      withRocksDB(s) {
-        val q3 = read.as[Ev].groupByKey(_.user_id)
-          .transformWithState(new UserCountProcessor(),
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Append())
-          .toDF("user_id", "cnt")
-          .writeStream
-          .format("parquet").option("path", graft.util.TmpDir.fresh("warm-rdb-sink"))
-          .option("checkpointLocation", graft.util.TmpDir.fresh("warm-rdb-ckpt"))
-          .outputMode("append").start()
-        try { q3.processAllAvailable() } finally { q3.stop() }
-      }
+    // file sink + HDFS store (the d5-d9/d14/d15 class of query)
+    runToFiles(s, "warm", read)
+    runToBatch(s, "warm_mem", read.groupBy("user_id").count())
+    // RocksDB + transformWithState (the d10/d16/d17 class)
+    withRocksDB(s) {
+      runToFiles(s, "warm-rdb", read.as[Ev].groupByKey(_.user_id)
+        .transformWithState(new UserCountProcessor(),
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Append())
+        .toDF("user_id", "cnt"))
     }
   }
 
@@ -551,20 +510,17 @@ object StreamingDemo {
     * probed from the batch footer like [[eventStream]].
     */
   def streamCurationGate(s: SparkSession, d: String): DataFrame =
-    withStreamPartitions(s) {
-      val src = fileStream(s, d, "documents.parquet",
+    runToFiles(s, "d20", fileStream(s, d, "documents.parquet",
         graft.util.Tables.documents(s, d).schema)
-      runToFiles(s, "d20", df => df
-        .withColumn("w", split(col("text"), " "))
-        .withColumn("n_words", size(col("w")).cast("long"))
-        .withColumn("stop_cnt",
-          size(expr("filter(w, x -> x IN ('the','a','of','and','to'))"))
-            .cast("long"))
-        .filter(col("n_words") >= 10 &&
-          expr("stop_cnt * 10000 div n_words") >= 200)
-        .select("doc_id", "lang", "n_words", "stop_cnt"), src)
-        .orderBy("doc_id")
-    }
+      .withColumn("w", split(col("text"), " "))
+      .withColumn("n_words", size(col("w")).cast("long"))
+      .withColumn("stop_cnt",
+        size(expr("filter(w, x -> x IN ('the','a','of','and','to'))"))
+          .cast("long"))
+      .filter(col("n_words") >= 10 &&
+        expr("stop_cnt * 10000 div n_words") >= 200)
+      .select("doc_id", "lang", "n_words", "stop_cnt"))
+      .orderBy("doc_id")
 
   /** d21's document source: the corpus split into 2 doc_id-RANGED
     * parquet files with staggered mtimes, so `maxFilesPerTrigger=1`
@@ -620,9 +576,9 @@ object StreamingDemo {
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Append())
       .toDF("band", "sig", "doc_id", "is_first")
-    withStreamPartitions(s) { withRocksDB(s) { withoutNoDataBatches(s) {
-      runToFiles(s, "d21", _ => verdicts, sigRows.toDF)
-    } } }
+    withRocksDB(s) { withoutNoDataBatches(s) {
+      runToFiles(s, "d21", verdicts)
+    } }
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bands"),
         sum(when(col("is_first"), 0L).otherwise(1L)).as("n_dup_bands"),
@@ -630,56 +586,76 @@ object StreamingDemo {
       .orderBy("doc_id")
   }
 
+  /** The one bounded-stream lifecycle: start `w` (into the catalog
+    * table `table` when given) inside [[withStreamPartitions]], drain
+    * it, then run each `between` step against the live query and drain
+    * again; stop in `finally`. `done` gets the stopped query (d22 reads
+    * its id and run id) and runs still inside the scope, so an eager
+    * read of the sink or checkpoint (d29's metadata collect) sees the
+    * confs the stream ran under.
+    */
+  private def drain[T](s: SparkSession, w: DataStreamWriter[_],
+      between: Seq[() => Unit] = Nil, table: Option[String] = None)(
+      done: StreamingQuery => T): T =
+    withStreamPartitions(s) {
+      val q = table.fold(w.start())(t => w.toTable(t))
+      try (Seq(() => ()) ++ between).foreach { step =>
+        step()
+        q.processAllAvailable()
+      } finally q.stop()
+      done(q)
+    }
+
   /** Run a bounded stream to completion into a memory sink and return
     * the (small, aggregated) result as a batch DataFrame that outlives
     * the sink. Only for complete-mode aggregates whose result is
     * aggregate-sized (d5) — data-sized streams use [[runToFiles]].
     */
   private def runToBatch(s: SparkSession, name: String,
-      build: DataFrame => DataFrame, mode: String, df: DataFrame): DataFrame = {
-    val q = build(df).writeStream
-      .queryName(name).format("memory").outputMode(mode).start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    val res = s.table(name)
-    val out = s.createDataFrame(res.collectAsList(), res.schema)
-    // the memory sink's temp view would otherwise pin the collected
-    // rows (and the query name) for the session's lifetime
-    s.catalog.dropTempView(name): Unit
-    out
-  }
+      out: DataFrame): DataFrame =
+    drain(s, out.writeStream.queryName(name).format("memory")
+      .outputMode("complete")) { _ =>
+      val res = s.table(name)
+      val rows = s.createDataFrame(res.collectAsList(), res.schema)
+      // the memory sink's temp view would otherwise pin the collected
+      // rows (and the query name) for the session's lifetime
+      s.catalog.dropTempView(name): Unit
+      rows
+    }
 
   /** Run a bounded append-mode stream into a parquet FILE sink and read
     * it back as a batch DataFrame — no driver materialization, so the
     * wrapper survives outputs that scale with the data (round 1 used a
     * memory sink + collectAsList here, the judge's d6/d8 scale flag).
-    * Fresh sink/checkpoint dirs per call: an append sink must never see
-    * a prior invocation's files.
+    * Fresh `$name-sink` / `$name-ckpt` dirs per call: an append sink
+    * must never see a prior invocation's files. `read` gets the sink
+    * and the checkpoint dir (d24/d29 read its state).
     */
-  private def runToFiles(s: SparkSession, name: String,
-      build: DataFrame => DataFrame, df: DataFrame): DataFrame = {
+  private def drainToFiles[T](s: SparkSession, name: String, out: DataFrame,
+      between: (() => Unit)*)(read: (DataFrame, String) => T): T = {
     val sink = graft.util.TmpDir.fresh(s"$name-sink")
     val ckpt = graft.util.TmpDir.fresh(s"$name-ckpt")
-    val out = build(df)
-    val q = out.writeStream
-      .format("parquet").option("path", sink)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    // Read back with the stream's known schema: a legitimately empty
-    // result (e.g. no join match in-window at a tiny SF) must return an
-    // empty frame, not die on parquet schema inference.
-    s.read.schema(out.schema).parquet(sink)
+    drain(s, out.writeStream.format("parquet").option("path", sink)
+      .option("checkpointLocation", ckpt).outputMode("append"), between) { _ =>
+      // Read back with the stream's known schema: a legitimately empty
+      // result (e.g. no join match in-window at a tiny SF) must return
+      // an empty frame, not die on parquet schema inference.
+      read(s.read.schema(out.schema).parquet(sink), ckpt)
+    }
   }
+
+  /** [[drainToFiles]] returning just the sink. */
+  private def runToFiles(s: SparkSession, name: String, out: DataFrame,
+      between: (() => Unit)*): DataFrame =
+    drainToFiles(s, name, out, between: _*)((sink, _) => sink)
 
   /** d5: readStream → watermark → tumbling 1h window count. Complete
     * mode over the bounded stream ⇒ identical to the batch tumbling agg.
     */
   def tumblingCounts(s: SparkSession, d: String): DataFrame =
-    withStreamPartitions(s) { runToBatch(s, "d5_mem",
-      df => df.withWatermark("ts", "1 hour")
+    runToBatch(s, "d5_mem", eventStream(s, d).withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt")),
-      "complete", eventStream(s, d)) }
+        .agg(count(lit(1)).as("cnt")))
       .select(col("window.start").as("h"), col("event_type"), col("cnt"))
       .orderBy("h", "event_type")
 
@@ -690,12 +666,11 @@ object StreamingDemo {
     * stream). State is bounded by the watermark on unbounded input.
     */
   def streamDedup(s: SparkSession, d: String): DataFrame =
-    withStreamPartitions(s) { withoutNoDataBatches(s) { runToFiles(s, "d8",
-      df => df.withColumn("minute_ts", date_trunc("minute", col("ts")))
-        .withWatermark("minute_ts", "1 hour")
-        .dropDuplicatesWithinWatermark("user_id", "event_type", "minute_ts")
-        .select("user_id", "event_type", "minute_ts"),
-      eventStream(s, d)) } }
+    withoutNoDataBatches(s) { runToFiles(s, "d8", eventStream(s, d)
+      .withColumn("minute_ts", date_trunc("minute", col("ts")))
+      .withWatermark("minute_ts", "1 hour")
+      .dropDuplicatesWithinWatermark("user_id", "event_type", "minute_ts")
+      .select("user_id", "event_type", "minute_ts")) }
       .orderBy("user_id", "event_type", "minute_ts")
 
   /** d9: stream-stream inner join — click→purchase attribution within
@@ -708,24 +683,30 @@ object StreamingDemo {
     * DuckDB-oracled.
     */
   def streamJoin(s: SparkSession, d: String): DataFrame =
-    withStreamPartitions(s) { withoutNoDataBatches(s) { runToFiles(s, "d9",
-      df => {
-        val clicks = df.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts").as("click_ts"),
-            col("event_id").as("click_id"))
-          .withWatermark("click_ts", "2 hours")
-        val purchases = df.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-            col("event_id").as("purchase_id"))
-          .withWatermark("p_ts", "2 hours")
-        clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("p_ts") >= col("click_ts") &&
-            col("p_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
-          .select("user_id", "click_id", "purchase_id")
-      },
-      eventStream(s, d)) } }
+    withoutNoDataBatches(s) { runToFiles(s, "d9",
+      clickPurchases(eventStream(s, d), "inner")
+        .select("user_id", "click_id", "purchase_id")) }
       .orderBy("user_id", "click_id", "purchase_id")
+
+  /** d9/d15's click→purchase attribution: each click joined to its
+    * user's purchases within 1 h after it, both sides watermarked
+    * branches of `events`.
+    */
+  private def clickPurchases(events: DataFrame, joinType: String): DataFrame = {
+    val clicks = events.filter(col("event_type") === "click")
+      .select(col("user_id"), col("ts").as("click_ts"),
+        col("event_id").as("click_id"))
+      .withWatermark("click_ts", "2 hours")
+    val purchases = events.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
+        col("event_id").as("purchase_id"))
+      .withWatermark("p_ts", "2 hours")
+    clicks.join(purchases,
+      col("user_id") === col("p_user") &&
+        col("p_ts") >= col("click_ts") &&
+        col("p_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
+      joinType)
+  }
 
   /** d15: stream-stream LEFT OUTER join — d9's attribution join plus
     * the rows d9 cannot express: clicks that never converted. An outer
@@ -764,26 +745,9 @@ object StreamingDemo {
     val mxS =
       if (mxRow.isNullAt(0) || mxRow.isNullAt(1)) Long.MinValue
       else math.min(mxRow.getLong(0), mxRow.getLong(1))
-    val raw = withStreamPartitions(s) { runToFiles(s, "d15",
-      df => {
-        val clicks = df.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts").as("click_ts"),
-            col("event_id").as("click_id"))
-          .withWatermark("click_ts", "2 hours")
-        val purchases = df.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-            col("event_id").as("purchase_id"))
-          .withWatermark("p_ts", "2 hours")
-        clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("p_ts") >= col("click_ts") &&
-            col("p_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
-          "left_outer")
-          .select(col("user_id"), col("click_ts"), col("click_id"),
-            col("purchase_id"))
-      },
-      eventStream(s, d)) }
-    raw.filter(expr("unix_micros(click_ts) div 1000000") + 14400L <= mxS)
+    runToFiles(s, "d15", clickPurchases(eventStream(s, d), "left_outer")
+        .select("user_id", "click_ts", "click_id", "purchase_id"))
+      .filter(expr("unix_micros(click_ts) div 1000000") + 14400L <= mxS)
       .select("user_id", "click_id", "purchase_id")
       .orderBy("user_id", "click_id", "purchase_id")
   }
@@ -798,12 +762,10 @@ object StreamingDemo {
   def streamStaticJoin(s: SparkSession, d: String): DataFrame = {
     val dim = graft.util.Tables.nation(s, d)
       .select(col("n_nationkey"), col("n_name"))
-    withStreamPartitions(s) { runToFiles(s, "d11",
-      df => df
-        .withColumn("nk", pmod(col("user_id"), lit(25)).cast("int"))
-        .join(dim, col("nk") === col("n_nationkey"))
-        .select(col("event_id"), col("user_id"), col("n_name")),
-      eventStream(s, d)) }
+    runToFiles(s, "d11", eventStream(s, d)
+      .withColumn("nk", pmod(col("user_id"), lit(25)).cast("int"))
+      .join(dim, col("nk") === col("n_nationkey"))
+      .select(col("event_id"), col("user_id"), col("n_name")))
       .orderBy("event_id")
   }
 
@@ -832,9 +794,7 @@ object StreamingDemo {
     // into several batches, each appending an intermediate count. The
     // final count per user is the max, making the declared output
     // batch-partitioning-independent.
-    withStreamPartitions(s) { withRocksDB(s) {
-      runToFiles(s, "d10", _ => counted, ev.toDF)
-    } }
+    withRocksDB(s) { runToFiles(s, "d10", counted) }
       .groupBy("user_id").agg(max("cnt").as("cnt"))
       .orderBy("user_id")
   }
@@ -855,24 +815,29 @@ object StreamingDemo {
   def transformWithStateTimers(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val gapUs = 1800L * 1000000L
-    val mxRow = graft.util.Tables.events(s, d)
-      .agg(max(expr("unix_micros(ts) div 1000000"))).head()
-    val mxS = if (mxRow.isNullAt(0)) Long.MinValue else mxRow.getLong(0)
-    val ev = eventStream(s, d)
+    val sessions = eventStream(s, d)
       .withWatermark("ts", "2 hours")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"))
       .as[Ev]
-    val sessions = ev.groupByKey(_.user_id)
+      .groupByKey(_.user_id)
       .transformWithState(new SessionTimerProcessor(gapUs),
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
         OutputMode.Append())
       .toDF("user_id", "start_s", "end_s", "cnt")
-    withStreamPartitions(s) { withRocksDB(s) {
-      runToFiles(s, "d16", _ => sessions, ev.toDF)
-    } }
-      .filter(col("end_s") + 12600L <= mxS)
+    withRocksDB(s) { runToFiles(s, "d16", sessions) }
+      .filter(col("end_s") + 12600L <= maxEventSecond(s, d))
       .orderBy("user_id", "start_s")
+  }
+
+  /** Max event time in whole seconds, or `Long.MinValue` on an empty
+    * corpus (every region open): d16/d17's closed-region cutoff, a
+    * bounded driver scalar.
+    */
+  private def maxEventSecond(s: SparkSession, d: String): Long = {
+    val r = graft.util.Tables.events(s, d)
+      .agg(max(expr("unix_micros(ts) div 1000000"))).head()
+    if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
   }
 
   /** d17: multi-batch-EXACT timer sessionization — d16's semantics
@@ -985,9 +950,6 @@ object StreamingDemo {
   def transformWithStateBufferedSessions(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val gapUs = 1800L * 1000000L
-    val mxRow = graft.util.Tables.events(s, d)
-      .agg(max(expr("unix_micros(ts) div 1000000"))).head()
-    val mxS = if (mxRow.isNullAt(0)) Long.MinValue else mxRow.getLong(0)
     val srcDir = jitteredSource(s, d)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "user_id BIGINT, ts TIMESTAMP, event_id BIGINT")
@@ -1002,12 +964,8 @@ object StreamingDemo {
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
         OutputMode.Append())
       .toDF("user_id", "start_s", "end_s", "cnt")
-    withStreamPartitions(s) { withRocksDB(s) {
-      // runToFiles ignores its df argument here (the stream is already
-      // built on the jittered source); pass the built frame for schema
-      runToFiles(s, "d17", _ => sessions, sessions)
-    } }
-      .filter(col("end_s") + 12600L <= mxS)
+    withRocksDB(s) { runToFiles(s, "d17", sessions) }
+      .filter(col("end_s") + 12600L <= maxEventSecond(s, d))
       .orderBy("user_id", "start_s")
   }
 
@@ -1054,9 +1012,7 @@ object StreamingDemo {
     // a session snapshotted in batch N and grown/closed in batch N+1
     // appears more than once with the same session_id: keep the most
     // complete row (cnt only ever grows; start is fixed; last grows)
-    withStreamPartitions(s) {
-      runToFiles(s, "d6", _ => sessions.toDF, ev.toDF)
-    }
+    runToFiles(s, "d6", sessions.toDF)
       .groupBy("user_id", "session_id")
       .agg(max("cnt").as("cnt"), min("start_s").as("start_s"),
         max("end_s").as("end_s"))
@@ -1077,11 +1033,8 @@ object StreamingDemo {
     val src = s.readStream.format("pairgen")
       .option("rows", "10000").option("slices", "4")
       .option("batchRows", "2000").load()
-    withStreamPartitions(s) {
-      runToFiles(s, "d12",
-        df => df.filter(col("id") % 97 === 0).select(col("id"), col("value")),
-        src)
-    }.orderBy("id")
+    runToFiles(s, "d12", src.filter(col("id") % 97 === 0)
+      .select(col("id"), col("value"))).orderBy("id")
   }
 
   /** d28: CONTINUOUS PROCESSING (`Trigger.Continuous`) — Spark's OTHER
@@ -1175,18 +1128,19 @@ object StreamingDemo {
     * production shape for incremental sinks (only finalized windows ever
     * reach the table, no upserts needed).
     */
-  def watermarkAppend(s: SparkSession, d: String): DataFrame = {
-    val ev = eventStream(s, d)
-    withStreamPartitions(s) {
-      runToFiles(s, "d14",
-        df => df.withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("cnt"))
-          .select(expr("unix_micros(window.start) div 1000000").as("start_s"),
-            col("event_type"), col("cnt")),
-        ev)
-    }.orderBy("start_s", "event_type")
-  }
+  def watermarkAppend(s: SparkSession, d: String): DataFrame =
+    runToFiles(s, "d14", hourlyCounts(eventStream(s, d)))
+      .orderBy("start_s", "event_type")
+
+  /** d14/d22/d24/d29's watermarked append-mode hourly count per event
+    * type, windows keyed by their start in epoch seconds.
+    */
+  private def hourlyCounts(events: DataFrame): DataFrame =
+    events.withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"))
+      .select(expr("unix_micros(window.start) div 1000000").as("start_s"),
+        col("event_type"), col("cnt"))
 
   /** d18: watermarked SLIDING window agg in APPEND mode — d14's
     * exactly-once finalized emission applied to overlapping windows
@@ -1199,19 +1153,13 @@ object StreamingDemo {
     * sliding grid. State on unbounded input is bounded by
     * (delay + window) ÷ slide open windows per key.
     */
-  def slidingAppend(s: SparkSession, d: String): DataFrame = {
-    val ev = eventStream(s, d)
-    withStreamPartitions(s) {
-      runToFiles(s, "d18",
-        df => df.withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 hour", "15 minutes"),
-            col("event_type"))
-          .agg(count(lit(1)).as("cnt"))
-          .select(expr("unix_micros(window.start) div 1000000").as("ws"),
-            col("event_type"), col("cnt")),
-        ev)
-    }.orderBy("ws", "event_type")
-  }
+  def slidingAppend(s: SparkSession, d: String): DataFrame =
+    runToFiles(s, "d18", eventStream(s, d).withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"))
+      .select(expr("unix_micros(window.start) div 1000000").as("ws"),
+        col("event_type"), col("cnt")))
+      .orderBy("ws", "event_type")
 
   /** d19: CHAINED stateful operators in one streaming query —
     * `dropDuplicatesWithinWatermark` followed by a watermarked tumbling
@@ -1226,58 +1174,59 @@ object StreamingDemo {
     * when the watermark (max minute_ts − 1 h) passes its end — d14's
     * arithmetic on the deduped stream.
     */
-  def chainedDedupAgg(s: SparkSession, d: String): DataFrame = {
-    val ev = eventStream(s, d)
-    withStreamPartitions(s) {
-      runToFiles(s, "d19",
-        df => df.withColumn("minute_ts", date_trunc("minute", col("ts")))
-          .withWatermark("minute_ts", "1 hour")
-          .dropDuplicatesWithinWatermark("user_id", "event_type", "minute_ts")
-          .groupBy(window(col("minute_ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n_active"))
-          .select(expr("unix_micros(window.start) div 1000000").as("start_s"),
-            col("event_type"), col("n_active")),
-        ev)
-    }.orderBy("start_s", "event_type")
+  def chainedDedupAgg(s: SparkSession, d: String): DataFrame =
+    runToFiles(s, "d19", eventStream(s, d)
+      .withColumn("minute_ts", date_trunc("minute", col("ts")))
+      .withWatermark("minute_ts", "1 hour")
+      .dropDuplicatesWithinWatermark("user_id", "event_type", "minute_ts")
+      .groupBy(window(col("minute_ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n_active"))
+      .select(expr("unix_micros(window.start) div 1000000").as("start_s"),
+        col("event_type"), col("n_active")))
+      .orderBy("start_s", "event_type")
+
+  /** d13/d25/d31's source: `events` with each value as integer cents,
+    * rewritten as two parquet files and streamed with
+    * `maxFilesPerTrigger=1`, so every upsert genuinely runs across
+    * multiple microbatches (two is the minimum that proves the
+    * cross-batch merge; the merged result is batch-count-invariant, so
+    * the file count is pure fixed cost). The rewrite is DEMO harness
+    * only — production points `readStream` at the real arriving stream
+    * and pays no copy — and is memoized per (session, dir) like
+    * d17/d21's sources; only each query's STATE must stay fresh.
+    */
+  private val centsSrcMemo =
+    new graft.util.BoundedMemo[(SparkSession, String), String]()
+
+  private def centsStream(s: SparkSession, d: String): DataFrame = {
+    val ev = graft.util.Tables.events(s, d)
+      .select(col("user_id"), col("event_id"),
+        round(col("value") * 100).cast("long").as("cents"))
+    val srcDir = centsSrcMemo.get((s, d)) {
+      val dir = graft.util.TmpDir.fresh("cents-src")
+      ev.repartition(2).write.parquet(dir)
+      dir
+    }
+    s.readStream.schema(ev.schema)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
   }
 
   /** d13: `foreachBatch` incremental merge — the production pattern for
     * sinks Structured Streaming can't write natively (upserts into a
-    * warehouse table): each microbatch is aggregated and MERGED into a
-    * versioned state table. The events source is re-written as three
-    * files and streamed with `maxFilesPerTrigger=1`, so the merge
-    * genuinely runs across multiple batches. Per-user partials are
-    * integer cents (exactly associative), so the merged final state
-    * equals the one-shot batch aggregate no matter how the input is
-    * batched — which is exactly what the oracle checks. State versions
-    * are written as parquet per batch (read-merge-write, the idempotent
+    * warehouse table): each microbatch of [[centsStream]] is aggregated
+    * and MERGED into a versioned state table, so the merge genuinely
+    * runs across multiple batches. Per-user partials are integer cents
+    * (exactly associative), so the merged final state equals the
+    * one-shot batch aggregate no matter how the input is batched —
+    * which is exactly what the oracle checks. State versions are
+    * written as parquet per batch (read-merge-write, the idempotent
     * upsert shape); the driver holds only the current version PATH,
-    * never rows. (The up-front rewrite of the bounded source into two
-    * files is DEMO harness only — it exists to force multiple
-    * microbatches (two is the minimum that proves the cross-batch
-    * merge; the merged result is batch-count-invariant, so the file
-    * count is pure fixed cost); production points `readStream` at the
-    * real arriving stream and pays no copy. The source copy is
-    * memoized per (session, dir) like d17/d21's — only the per-call
-    * STATE dir must stay fresh.)
+    * never rows.
     */
-  private val d13SrcMemo =
-    new graft.util.BoundedMemo[(SparkSession, String), String]()
-
   def foreachBatchMerge(s: SparkSession, d: String): DataFrame = {
-    val ev = graft.util.Tables.events(s, d)
-      .select(col("user_id"), col("event_id"),
-        round(col("value") * 100).cast("long").as("cents"))
-    val srcDir = d13SrcMemo.get((s, d)) {
-      val dir = graft.util.TmpDir.fresh("d13-src")
-      ev.repartition(2).write.parquet(dir)
-      dir
-    }
     val stateBase = graft.util.TmpDir.fresh("d13-state")
     val stateSchema = "user_id LONG, cnt LONG, val_cents LONG"
     val cur = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val src = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val mergeBatch: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
       Long) => Unit = { (batch, id) =>
       val agg = batch.groupBy("user_id")
@@ -1293,13 +1242,8 @@ object StreamingDemo {
       merged.write.parquet(out)
       cur.set(out)
     }
-    withStreamPartitions(s) {
-      val q = src.writeStream
-        .foreachBatch(mergeBatch)
-        .option("checkpointLocation", graft.util.TmpDir.fresh("d13-ckpt"))
-        .start()
-      try { q.processAllAvailable() } finally { q.stop() }
-    }
+    drain(s, centsStream(s, d).writeStream.foreachBatch(mergeBatch)
+      .option("checkpointLocation", graft.util.TmpDir.fresh("d13-ckpt")))(_ => ())
     Option(cur.get()) match {
       case Some(fin) => s.read.schema(stateSchema).parquet(fin).orderBy("user_id")
       case None => s.createDataFrame(
@@ -1322,52 +1266,15 @@ object StreamingDemo {
     * come from the catalog. Per-user partials are exact integers
     * (associative), so the final table equals the one-shot batch
     * aggregate no matter how the input is batched — the oracle. The
-    * demo's processAllAvailable run has no batch retries; a
+    * demo's drain-to-completion run has no batch retries; a
     * production deployment pairs this with a committed-batchId ledger
     * in the target table (d23's idempotent-epoch pattern) to make the
     * MERGE replay-safe.
     */
-  private val d25SrcMemo =
-    new graft.util.BoundedMemo[(SparkSession, String), String]()
-
-  def streamMorUpsert(s: SparkSession, d: String): DataFrame = {
-    val ev = graft.util.Tables.events(s, d)
-      .select(col("user_id"), col("event_id"),
-        round(col("value") * 100).cast("long").as("cents"))
-    val srcDir = d25SrcMemo.get((s, d)) {
-      val dir = graft.util.TmpDir.fresh("d25-src")
-      ev.repartition(2).write.parquet(dir)
-      dir
-    }
-    val tbl = graft.util.DemoTables.freshGraftmem(s, d, "morup",
+  def streamMorUpsert(s: SparkSession, d: String): DataFrame =
+    streamUpsert(s, d, "d25", "morup",
       "(user_id BIGINT, cnt BIGINT, val_cents BIGINT) " +
         "TBLPROPERTIES ('graft.row_level' = 'merge-on-read')")
-    val src = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val upsert: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-      Long) => Unit = { (batch, _) =>
-      val ss = batch.sparkSession // the stream's cloned session
-      graft.util.DemoTables.registerGraftmem(ss)
-      batch.groupBy("user_id")
-        .agg(count(lit(1)).as("cnt"), sum("cents").as("val_cents"))
-        .createOrReplaceTempView("g_d25_batch")
-      ss.sql(
-        s"""MERGE INTO $tbl t USING g_d25_batch b
-           |ON t.user_id = b.user_id
-           |WHEN MATCHED THEN UPDATE SET
-           |  cnt = t.cnt + b.cnt, val_cents = t.val_cents + b.val_cents
-           |WHEN NOT MATCHED THEN INSERT (user_id, cnt, val_cents)
-           |  VALUES (b.user_id, b.cnt, b.val_cents)""".stripMargin)
-    }
-    withStreamPartitions(s) {
-      val q = src.writeStream
-        .foreachBatch(upsert)
-        .option("checkpointLocation", graft.util.TmpDir.fresh("d25-ckpt"))
-        .start()
-      try { q.processAllAvailable() } finally { q.stop() }
-    }
-    s.table(tbl).orderBy("user_id")
-  }
 
   /** d31: STREAMING UPSERT VIA EQUALITY DELETES — d25's
     * foreachBatch + MERGE dataflow pointed at the equality-delete MoR
@@ -1384,46 +1291,35 @@ object StreamingDemo {
     * table is batch-count-invariant — d13/d25's oracle verbatim, the
     * three-way write-path equality being the cross-check.
     */
-  private val d31SrcMemo =
-    new graft.util.BoundedMemo[(SparkSession, String), String]()
-
-  def streamEqUpsert(s: SparkSession, d: String): DataFrame = {
-    val ev = graft.util.Tables.events(s, d)
-      .select(col("user_id"), col("event_id"),
-        round(col("value") * 100).cast("long").as("cents"))
-    val srcDir = d31SrcMemo.get((s, d)) {
-      val dir = graft.util.TmpDir.fresh("d31-src")
-      ev.repartition(2).write.parquet(dir)
-      dir
-    }
-    val tbl = graft.util.DemoTables.freshGraftmem(s, d, "morup31",
+  def streamEqUpsert(s: SparkSession, d: String): DataFrame =
+    streamUpsert(s, d, "d31", "morup31",
       "(user_id BIGINT NOT NULL, cnt BIGINT, val_cents BIGINT) " +
         "TBLPROPERTIES ('graft.row_level' = 'merge-on-read', " +
         "'graft.mor.deletes' = 'equality')")
-    val src = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+
+  /** d25/d31's dataflow: every microbatch of [[centsStream]] MERGEs its
+    * per-user partials into a fresh graftmem table `prefix` of `ddl`.
+    */
+  private def streamUpsert(s: SparkSession, d: String, tag: String,
+      prefix: String, ddl: String): DataFrame = {
+    val tbl = graft.util.DemoTables.freshGraftmem(s, d, prefix, ddl)
     val upsert: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
       Long) => Unit = { (batch, _) =>
-      val ss = batch.sparkSession
+      val ss = batch.sparkSession // the stream's cloned session
       graft.util.DemoTables.registerGraftmem(ss)
       batch.groupBy("user_id")
         .agg(count(lit(1)).as("cnt"), sum("cents").as("val_cents"))
-        .createOrReplaceTempView("g_d31_batch")
+        .createOrReplaceTempView(s"g_${tag}_batch")
       ss.sql(
-        s"""MERGE INTO $tbl t USING g_d31_batch b
+        s"""MERGE INTO $tbl t USING g_${tag}_batch b
            |ON t.user_id = b.user_id
            |WHEN MATCHED THEN UPDATE SET
            |  cnt = t.cnt + b.cnt, val_cents = t.val_cents + b.val_cents
            |WHEN NOT MATCHED THEN INSERT (user_id, cnt, val_cents)
            |  VALUES (b.user_id, b.cnt, b.val_cents)""".stripMargin)
     }
-    withStreamPartitions(s) {
-      val q = src.writeStream
-        .foreachBatch(upsert)
-        .option("checkpointLocation", graft.util.TmpDir.fresh("d31-ckpt"))
-        .start()
-      try { q.processAllAvailable() } finally { q.stop() }
-    }
+    drain(s, centsStream(s, d).writeStream.foreachBatch(upsert)
+      .option("checkpointLocation", graft.util.TmpDir.fresh(s"$tag-ckpt")))(_ => ())
     s.table(tbl).orderBy("user_id")
   }
 
@@ -1506,13 +1402,8 @@ object StreamingDemo {
             .collect()
       }
     }
-    withStreamPartitions(s) {
-      val q = src.writeStream
-        .foreachBatch(gate)
-        .option("checkpointLocation", graft.util.TmpDir.fresh("d32-ckpt"))
-        .start()
-      try { q.processAllAvailable() } finally { q.stop() }
-    }
+    drain(s, src.writeStream.foreachBatch(gate)
+      .option("checkpointLocation", graft.util.TmpDir.fresh("d32-ckpt")))(_ => ())
     require(rejected.get() == 1L,
       s"d32 expects exactly the poisoned batch rejected, got " +
         s"${rejected.get()}")
@@ -1541,33 +1432,42 @@ object StreamingDemo {
     * changes), the entire point of CDC streaming.
     */
   def streamCdcFollow(s: SparkSession, d: String): DataFrame = {
-    val tbl = graft.util.DemoTables.freshGraftmem(s, d, "morcdc",
-      "(key BIGINT, bal_cents BIGINT) " +
+    val tbl = cdcTable(s, d, "d26", "morcdc", equality = false)
+    // batch 0: v1 + v2 changes; batch 1: exactly the v3 changes
+    changeCensus(runToFiles(s, "d26", s.readStream.table(s"${tbl}__changes"),
+      () => graft.operators.TierB.runFollowupMergeRound(s, tbl)))
+  }
+
+  /** d26/d27's declared summary of everything the sink received: per
+    * (commit version, change type), the row count and exact balance sum.
+    */
+  private def changeCensus(changes: DataFrame): DataFrame =
+    changes.groupBy(col("_commit_version"), col("_change_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("bal_cents").cast("decimal(38,0)")).cast("long")
+          .as("bal_cents_sum"))
+      .orderBy("_commit_version", "_change_type")
+
+  /** The CDC table lifecycle d26, d27, d33 and d35 stream over: a fresh
+    * merge-on-read graftmem table `prefix` (`equality` picks b91's
+    * equality-delete flavor, whose key is NOT NULL), the customer
+    * snapshot appended (v1), then b83's CDC MERGE round (v2). Each
+    * query lands the follow-up MERGE (v3) mid-stream as its drain's
+    * `between` step.
+    */
+  private def cdcTable(s: SparkSession, d: String, tag: String,
+      prefix: String, equality: Boolean): String = {
+    val tbl = graft.util.DemoTables.freshGraftmem(s, d, prefix,
+      if (equality) "(key BIGINT NOT NULL, bal_cents BIGINT) TBLPROPERTIES " +
+        "('graft.row_level' = 'merge-on-read', 'graft.mor.deletes' = 'equality')"
+      else "(key BIGINT, bal_cents BIGINT) " +
         "TBLPROPERTIES ('graft.row_level' = 'merge-on-read')")
     graft.util.Tables.customer(s, d)
       .selectExpr("c_custkey AS key",
         "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
       .writeTo(tbl).append() // v1
-    graft.operators.TierB.runCdcMergeRound(s, d, "d26", tbl) // v2
-    withStreamPartitions(s) {
-      val sink = graft.util.TmpDir.fresh("d26-sink")
-      val ckpt = graft.util.TmpDir.fresh("d26-ckpt")
-      val src = s.readStream.table(s"${tbl}__changes")
-      val q = src.writeStream
-        .format("parquet").option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable() // batch 0: v1 + v2 changes
-        graft.operators.TierB.runFollowupMergeRound(s, tbl) // v3
-        q.processAllAvailable() // batch 1: exactly the v3 changes
-      } finally q.stop()
-      s.read.schema(src.schema).parquet(sink)
-        .groupBy(col("_commit_version"), col("_change_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("bal_cents").cast("decimal(38,0)")).cast("long")
-            .as("bal_cents_sum"))
-    }.orderBy("_commit_version", "_change_type")
+    graft.operators.TierB.runCdcMergeRound(s, d, tag, tbl) // v2
+    tbl
   }
 
   /** d33: UPDATE-AWARE CDC CONSUMPTION — the change feed consumed
@@ -1594,49 +1494,30 @@ object StreamingDemo {
     * feed's retention).
     */
   def streamLineageCdc(s: SparkSession, d: String): DataFrame = {
-    val tbl = graft.util.DemoTables.freshGraftmem(s, d, "morlin",
-      "(key BIGINT NOT NULL, bal_cents BIGINT) " +
-        "TBLPROPERTIES ('graft.row_level' = 'merge-on-read', " +
-        "'graft.mor.deletes' = 'equality')")
-    graft.util.Tables.customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append() // v1
-    graft.operators.TierB.runCdcMergeRound(s, d, "d33", tbl) // v2
-    withStreamPartitions(s) {
-      val sink = graft.util.TmpDir.fresh("d33-sink")
-      val ckpt = graft.util.TmpDir.fresh("d33-ckpt")
-      val src = s.readStream.table(s"${tbl}__changes")
-      val q = src.writeStream
-        .format("parquet").option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable() // batch 0: v1 + v2 changes
-        graft.operators.TierB.runFollowupMergeRound(s, tbl) // v3
-        q.processAllAvailable() // batch 1: exactly the v3 changes
-      } finally q.stop()
-      val ch = s.read.schema(src.schema).parquet(sink)
-      // reconstruct operations: an update is a (delete, insert) pair
-      // sharing (_commit_version, _row_id)
-      val dels = ch.filter(col("_change_type") === "delete")
-        .select(col("_commit_version"), col("_row_id"),
-          col("bal_cents").as("old_bal"))
-      val ins = ch.filter(col("_change_type") === "insert")
-        .select(col("_commit_version"), col("_row_id"),
-          col("bal_cents").as("new_bal"))
-      dels.join(ins, Seq("_commit_version", "_row_id"), "full_outer")
-        .groupBy(col("_commit_version"))
-        .agg(
-          count(when(col("old_bal").isNotNull &&
-            col("new_bal").isNotNull, 1)).as("n_updates"),
-          count(when(col("old_bal").isNull, 1)).as("n_inserts"),
-          count(when(col("new_bal").isNull, 1)).as("n_deletes"),
-          coalesce(sum(when(
-            col("old_bal").isNotNull && col("new_bal").isNotNull,
-            (col("new_bal") - col("old_bal")).cast("decimal(38,0)"))),
-            lit(0)).cast("long").as("upd_delta_cents"))
-    }.orderBy("_commit_version")
+    val tbl = cdcTable(s, d, "d33", "morlin", equality = true)
+    // batch 0: v1 + v2 changes; batch 1: exactly the v3 changes
+    val ch = runToFiles(s, "d33", s.readStream.table(s"${tbl}__changes"),
+      () => graft.operators.TierB.runFollowupMergeRound(s, tbl))
+    // reconstruct operations: an update is a (delete, insert) pair
+    // sharing (_commit_version, _row_id)
+    val dels = ch.filter(col("_change_type") === "delete")
+      .select(col("_commit_version"), col("_row_id"),
+        col("bal_cents").as("old_bal"))
+    val ins = ch.filter(col("_change_type") === "insert")
+      .select(col("_commit_version"), col("_row_id"),
+        col("bal_cents").as("new_bal"))
+    dels.join(ins, Seq("_commit_version", "_row_id"), "full_outer")
+      .groupBy(col("_commit_version"))
+      .agg(
+        count(when(col("old_bal").isNotNull &&
+          col("new_bal").isNotNull, 1)).as("n_updates"),
+        count(when(col("old_bal").isNull, 1)).as("n_inserts"),
+        count(when(col("new_bal").isNull, 1)).as("n_deletes"),
+        coalesce(sum(when(
+          col("old_bal").isNotNull && col("new_bal").isNotNull,
+          (col("new_bal") - col("old_bal")).cast("decimal(38,0)"))),
+          lit(0)).cast("long").as("upd_delta_cents"))
+      .orderBy("_commit_version")
   }
 
   /** d35: STREAMING READ OF THE TABLE ITSELF — `readStream.table(tbl)`
@@ -1666,37 +1547,18 @@ object StreamingDemo {
     * one query, backfill O(live set) + tail O(changes), no seam.
     */
   def streamTableSnapshotFollow(s: SparkSession, d: String): DataFrame = {
-    val tbl = graft.util.DemoTables.freshGraftmem(s, d, "morsnap",
-      "(key BIGINT NOT NULL, bal_cents BIGINT) " +
-        "TBLPROPERTIES ('graft.row_level' = 'merge-on-read', " +
-        "'graft.mor.deletes' = 'equality')")
-    graft.util.Tables.customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append() // v1
     // v2 BEFORE the subscription: its deletes/updates are baked into
     // the snapshot — the backfill serves STATE, not history
-    graft.operators.TierB.runCdcMergeRound(s, d, "d35", tbl)
-    withStreamPartitions(s) {
-      val sink = graft.util.TmpDir.fresh("d35-sink")
-      val ckpt = graft.util.TmpDir.fresh("d35-ckpt")
-      val src = s.readStream
-        .option("graft.stream.deletes", "ignore").table(tbl)
-      val q = src.writeStream
-        .format("parquet").option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable() // batch 0: the snapshot backfill
-        graft.operators.TierB.runFollowupMergeRound(s, tbl) // v3
-        q.processAllAvailable() // follow: v3's insert half
-      } finally q.stop()
-      s.read.schema(src.schema).parquet(sink)
-        .groupBy((col("key") % 10).as("key_mod"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("bal_cents").cast("decimal(38,0)")).cast("long")
-            .as("bal_cents_sum"))
-    }.orderBy("key_mod")
+    val tbl = cdcTable(s, d, "d35", "morsnap", equality = true)
+    // batch 0: the snapshot backfill; follow: v3's insert half
+    runToFiles(s, "d35",
+      s.readStream.option("graft.stream.deletes", "ignore").table(tbl),
+      () => graft.operators.TierB.runFollowupMergeRound(s, tbl))
+      .groupBy((col("key") % 10).as("key_mod"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("bal_cents").cast("decimal(38,0)")).cast("long")
+          .as("bal_cents_sum"))
+      .orderBy("key_mod")
   }
 
   /** d27: CDC CONSUMPTION FROM A VERSION — d26's streaming change
@@ -1716,34 +1578,12 @@ object StreamingDemo {
     * year of CDC.
     */
   def streamCdcFromVersion(s: SparkSession, d: String): DataFrame = {
-    val tbl = graft.util.DemoTables.freshGraftmem(s, d, "morfv",
-      "(key BIGINT, bal_cents BIGINT) " +
-        "TBLPROPERTIES ('graft.row_level' = 'merge-on-read')")
-    graft.util.Tables.customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append() // v1 — behind the starting boundary
-    graft.operators.TierB.runCdcMergeRound(s, d, "d27", tbl) // v2 — ditto
-    withStreamPartitions(s) {
-      val sink = graft.util.TmpDir.fresh("d27-sink")
-      val ckpt = graft.util.TmpDir.fresh("d27-ckpt")
-      val src = s.readStream.option("startingVersion", "3")
-        .table(s"${tbl}__changes")
-      val q = src.writeStream
-        .format("parquet").option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable() // batch 0: nothing — history skipped
-        graft.operators.TierB.runFollowupMergeRound(s, tbl) // v3
-        q.processAllAvailable() // batch 1: exactly the v3 changes
-      } finally q.stop()
-      s.read.schema(src.schema).parquet(sink)
-        .groupBy(col("_commit_version"), col("_change_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("bal_cents").cast("decimal(38,0)")).cast("long")
-            .as("bal_cents_sum"))
-    }.orderBy("_commit_version", "_change_type")
+    // v1 and v2 land behind the starting boundary
+    val tbl = cdcTable(s, d, "d27", "morfv", equality = false)
+    // batch 0: nothing — history skipped; batch 1: exactly the v3 changes
+    changeCensus(runToFiles(s, "d27",
+      s.readStream.option("startingVersion", "3").table(s"${tbl}__changes"),
+      () => graft.operators.TierB.runFollowupMergeRound(s, tbl)))
   }
 
   /** d24: STATE STORE READER — Spark 4's `statestore` data source
@@ -1765,24 +1605,10 @@ object StreamingDemo {
     * the state read is partition-parallel over the store's files —
     * no query, no replay, no driver materialization.
     */
-  def stateStoreReader(s: SparkSession, d: String): DataFrame = {
-    val ev = eventStream(s, d)
-    withStreamPartitions(s) {
-      val sink = graft.util.TmpDir.fresh("d24-sink")
-      val ckpt = graft.util.TmpDir.fresh("d24-ckpt")
-      val out = ev.withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"))
-        .select(expr("unix_micros(window.start) div 1000000").as("start_s"),
-          col("event_type"), col("cnt"))
-      val q = out.writeStream
-        .format("parquet").option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      try { q.processAllAvailable() } finally { q.stop() }
+  def stateStoreReader(s: SparkSession, d: String): DataFrame =
+    drainToFiles(s, "d24", hourlyCounts(eventStream(s, d))) { (sink, ckpt) =>
       // closed windows: the file sink (only finalized windows ever land)
-      val closed = s.read.schema(out.schema).parquet(sink)
-        .withColumn("src", lit("sink"))
+      val closed = sink.withColumn("src", lit("sink"))
       // open windows: the aggregation operator's live state, read
       // straight from the checkpoint (defaults: last committed batch,
       // operator 0, store "default")
@@ -1794,7 +1620,6 @@ object StreamingDemo {
           lit("state").as("src"))
       closed.unionByName(open)
     }.orderBy("start_s", "event_type")
-  }
 
   /** d29: STATE METADATA READER — the `state-metadata` source, the
     * enumeration half of the state-debugging story d24's `statestore`
@@ -1819,21 +1644,8 @@ object StreamingDemo {
     * `events`. At 100 TB both sources read checkpoint FILES,
     * partition-parallel, no query restart, no replay.
     */
-  def stateMetadataReader(s: SparkSession, d: String): DataFrame = {
-    val ev = eventStream(s, d)
-    withStreamPartitions(s) {
-      val sink = graft.util.TmpDir.fresh("d29-sink")
-      val ckpt = graft.util.TmpDir.fresh("d29-ckpt")
-      val out = ev.withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"))
-        .select(expr("unix_micros(window.start) div 1000000").as("start_s"),
-          col("event_type"), col("cnt"))
-      val q = out.writeStream
-        .format("parquet").option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      try { q.processAllAvailable() } finally { q.stop() }
+  def stateMetadataReader(s: SparkSession, d: String): DataFrame =
+    drainToFiles(s, "d29", hourlyCounts(eventStream(s, d))) { (_, ckpt) =>
       val meta = s.read.format("state-metadata").load(ckpt)
       // the forensics handshake: the metadata row's coordinates drive
       // the state read (1 operator row — bounded by the query's plan
@@ -1865,7 +1677,6 @@ object StreamingDemo {
         lit(m.getLong(5)).as("max_batch_id"),
         col("n_open_groups"))
     }
-  }
 
   /** d30: STATE TTL — `transformWithState` with a TTL'd `ValueState`
     * ([[TtlClaimProcessor]]), the declarative retention bound d21's
@@ -1905,33 +1716,21 @@ object StreamingDemo {
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .as[GenEv]
       .groupByKey(_.user_id)
-      .transformWithState(
-        ttlMs match {
-          case Some(t) => new TtlClaimProcessor(t)
-          case None    => new NoTtlClaimProcessor()
-        },
+      .transformWithState(new TtlClaimProcessor(ttlMs),
         org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
         OutputMode.Append())
       .toDF("user_id", "gen", "admitted")
-    withStreamPartitions(s) { withRocksDB(s) { withoutNoDataBatches(s) {
-      val sink = graft.util.TmpDir.fresh("d30-sink")
-      val ckpt = graft.util.TmpDir.fresh("d30-ckpt")
-      val q = claims.writeStream
-        .format("parquet").option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable() // gen 1: every user claims
+    // gen 1: every user claims; gen 2: expired claims re-admit
+    withRocksDB(s) { withoutNoDataBatches(s) {
+      runToFiles(s, "d30", claims, () => {
         // wait out the TTL while the query idles — every claim's
         // expiry lands strictly before batch 2's processing timestamp
         // (sleep = 3x TTL: the margin absorbs clock granularity, and
         // a slow host only widens it)
         ttlMs.foreach(t => Thread.sleep(t * 3))
         land(2L)
-        q.processAllAvailable() // gen 2: expired claims re-admit
-      } finally q.stop()
-      s.read.schema(claims.schema).parquet(sink)
-    } } }
+      })
+    } }
       .orderBy("user_id", "gen")
   }
 
@@ -1968,20 +1767,11 @@ object StreamingDemo {
         org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
         OutputMode.Append())
       .toDF("user_id", "event_type", "gen", "cnt")
-    withStreamPartitions(s) { withRocksDB(s) { withoutNoDataBatches(s) {
-      val sink = graft.util.TmpDir.fresh("d34-sink")
-      val ckpt = graft.util.TmpDir.fresh("d34-ckpt")
-      val q = counts.writeStream
-        .format("parquet").option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable() // gen 1: the even slice seeds the maps
-        land(2L, even = false)
-        q.processAllAvailable() // gen 2: point updates on carried state
-      } finally q.stop()
-      s.read.schema(counts.schema).parquet(sink)
-    } } }
+    // gen 1: the even slice seeds the maps; gen 2: point updates on
+    // carried state
+    withRocksDB(s) { withoutNoDataBatches(s) {
+      runToFiles(s, "d34", counts, () => land(2L, even = false))
+    } }
       .orderBy("user_id", "event_type", "gen")
   }
 
@@ -2004,13 +1794,9 @@ object StreamingDemo {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "evsink",
       "(user_id BIGINT, event_id BIGINT)")
     val src = eventStream(s, d).select("user_id", "event_id")
-    withStreamPartitions(s) {
-      val q = src.writeStream
-        .option("checkpointLocation", graft.util.TmpDir.fresh("d23-ckpt"))
-        .outputMode("append")
-        .toTable(tbl)
-      try { q.processAllAvailable() } finally { q.stop() }
-    }
+    drain(s, src.writeStream
+      .option("checkpointLocation", graft.util.TmpDir.fresh("d23-ckpt"))
+      .outputMode("append"), table = Some(tbl))(_ => ())
     s.table(tbl)
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
@@ -2058,44 +1844,32 @@ object StreamingDemo {
     val ev = graft.util.Tables.events(s, d)
       .select(col("ts"), col("event_type"))
       .withColumn("tk", expr("unix_micros(ts)"))
-    val outSchema = StructType.fromDDL(
-      "start_s BIGINT, event_type STRING, cnt BIGINT")
-    def startQuery() = s.readStream
+    // run 1: only the earliest half exists; drain it, then stop.
+    writeRangedParts(ev, "tk", Seq("ts", "event_type"), srcDir,
+      0 until 1, nParts = 2)
+    val counts = hourlyCounts(s.readStream
       .schema(StructType.fromDDL("ts TIMESTAMP, event_type STRING"))
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(expr("unix_micros(window.start) div 1000000").as("start_s"),
-        col("event_type"), col("cnt"))
-      .writeStream.format("parquet").option("path", sink)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
+      .option("maxFilesPerTrigger", "1").parquet(srcDir))
+    def run(): StreamingQuery = drain(s, counts.writeStream
+      .format("parquet").option("path", sink)
+      .option("checkpointLocation", ckpt).outputMode("append"))(identity)
     def committedBatches(): Seq[Long] = {
       val fs = new java.io.File(s"$ckpt/commits").listFiles()
       if (fs == null) Seq.empty
       else fs.flatMap(f => f.getName.toLongOption).toSeq.sorted
     }
-    val info = withStreamPartitions(s) {
-      // run 1: only the earliest half exists; drain it, then stop.
-      writeRangedParts(ev, "tk", Seq("ts", "event_type"), srcDir,
-        0 until 1, nParts = 2)
-      val q1 = startQuery()
-      try { q1.processAllAvailable() } finally { q1.stop() }
-      val b1 = committedBatches()
-      // the outage: new data arrives while no query is running.
-      writeRangedParts(ev, "tk", Seq("ts", "event_type"), srcDir,
-        1 until 2, nParts = 2)
-      // run 2: a NEW query run recovers from the same checkpoint.
-      val q2 = startQuery()
-      try { q2.processAllAvailable() } finally { q2.stop() }
-      val b2 = committedBatches().diff(b1)
-      RestartInfo(q1.id.toString, q2.id.toString,
-        q1.runId.toString, q2.runId.toString, b1, b2)
-    }
+    val q1 = run()
+    val b1 = committedBatches()
+    // the outage: new data arrives while no query is running.
+    writeRangedParts(ev, "tk", Seq("ts", "event_type"), srcDir,
+      1 until 2, nParts = 2)
+    // run 2: a NEW query run recovers from the same checkpoint.
+    val q2 = run()
+    val info = RestartInfo(q1.id.toString, q2.id.toString,
+      q1.runId.toString, q2.runId.toString, b1, committedBatches().diff(b1))
     // read-back goes through the sink's _spark_metadata commit log —
     // uncommitted files from a stopped run are invisible by contract.
-    val out = s.read.schema(outSchema).parquet(sink)
+    val out = s.read.schema(counts.schema).parquet(sink)
       .orderBy("start_s", "event_type")
     (out, info)
   }

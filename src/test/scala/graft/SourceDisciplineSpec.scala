@@ -43,6 +43,17 @@ class SourceDisciplineSpec extends AnyFunSuite {
         s"$path uses toLocalIterator — data-sized driver traffic")
   }
 
+  test("src/main drains a stream in exactly one place: StreamingDemo.drain") {
+    // every bounded stream starts, drains and stops through one runner,
+    // so the stream-partition scope and the stop-in-finally cannot be
+    // forgotten by a hand-rolled copy
+    val sites = for ((path, text) <- mainSources;
+                     _ <- "processAllAvailable\\s*\\(".r.findAllIn(text))
+      yield new java.io.File(path).getName
+    assert(sites == Seq("StreamingDemo.scala"),
+      s"processAllAvailable( must appear once, in StreamingDemo.drain: $sites")
+  }
+
   test("src/main builds a SparkSession in exactly one place: GraftSession") {
     // one session conf for Bench, Verify, Dev and the test fixture — six
     // builders once drifted apart until the oracle no longer checked

@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
 
@@ -115,18 +116,70 @@ class Round14OptSpec extends SparkSpec {
     "b45_merge_cdc", "c18_dedup_cluster", "c33_dedup_incremental",
     "c65_ann_recall_eval", "c70_hybrid_rrf", "c80_dedup_index_persisted")
 
-  test("census: statically planned SHJs over an estimated build side are the known set") {
-    val found = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      var returned: Seq[String] = Nil
-      val inner = captured(qe => estimatedBuilds(qe.executedPlan)) {
-        returned = estimatedBuilds(fn(spark, sf0001).queryExecution.executedPlan)
-      }.flatten
-      (returned ++ inner).distinct.map(leaf => name -> leaf)
+  /** Global windows: a `WindowExec` with no partition keys moves its
+    * whole input into one task, named here by its window expressions.
+    */
+  private def globalWindows(p: SparkPlan): Seq[String] =
+    p.collectWithSubqueries {
+      case a: AdaptiveSparkPlanExec => globalWindows(a.inputPlan)
+      case w: WindowExec if w.partitionSpec.isEmpty =>
+        Seq(w.windowExpression.map(_.sql).mkString(", "))
+    }.flatten
+
+  /** One pass over every declared query at sf0.001: per query, the
+    * estimated SHJ build leaves and the global windows of its returned
+    * plan and of every command plan it runs.
+    */
+  private lazy val census: Seq[(String, Seq[String], Seq[String])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      var returned: Seq[(Seq[String], Seq[String])] = Nil
+      val inner = captured(qe =>
+        (estimatedBuilds(qe.executedPlan), globalWindows(qe.executedPlan))) {
+        val p = fn(spark, sf0001).queryExecution.executedPlan
+        returned = Seq((estimatedBuilds(p), globalWindows(p)))
+      }
+      val all = returned ++ inner
+      (name, all.flatMap(_._1).distinct, all.flatMap(_._2).distinct)
     }
+
+  test("census: statically planned SHJs over an estimated build side are the known set") {
+    val found = census.flatMap { case (name, leaves, _) => leaves.map(name -> _) }
     assert(found.map(_._1).toSet == knownEstimatedShj,
       "the set of queries that statically plan a shuffled hash join over " +
         "an estimated build side changed; check the new ones can't " +
         s"overflow a task's memory at scale, then update the set:\n" +
         found.map { case (n, l) => s"$n: $l" }.mkString("\n"))
+  }
+
+  /** The queries that run a global window (no PARTITION BY), and what
+    * bounds the input each funnels through one task:
+    *  - c67_bm25: the rank over the df-ordered LIMIT 13 query terms.
+    *  - c70_hybrid_rrf: the lexical arm's rank over a LIMIT 20, plus
+    *    c67's LIMIT 13 term rank. Bounded by the limits.
+    *  - c73_mixture_sample: Σw over the per-source table. Bounded by the
+    *    source count.
+    *  - b95_row_lineage: `row_number() OVER (ORDER BY c_custkey)` over
+    *    the whole customer table. GROWS with the corpus.
+    *  - c41_lm_surprisal and c55_perplexity_bucket: the corpus total over
+    *    the word-count table (TierC's `unigramSurprisal`). Vocabulary-
+    *    sized, so it GROWS with the corpus (sublinearly).
+    *  - c49_dsir_importance: four totals over the joined word-count
+    *    tables. Vocabulary-sized: GROWS with the corpus.
+    *  - c75_curation_ensemble and c76_quality_mixture: the per-source
+    *    thresholds or Σw (bounded by the source count), plus
+    *    `unigramSurprisal`'s vocabulary total, which GROWS.
+    */
+  private val knownGlobalWindows = Set("b95_row_lineage", "c41_lm_surprisal",
+    "c49_dsir_importance", "c55_perplexity_bucket", "c67_bm25",
+    "c70_hybrid_rrf", "c73_mixture_sample", "c75_curation_ensemble",
+    "c76_quality_mixture")
+
+  test("census: queries running a global window (no partition keys) are the known set") {
+    val found = census.flatMap { case (name, _, ws) => ws.map(name -> _) }
+    assert(found.map(_._1).toSet == knownGlobalWindows,
+      "the set of queries that run a window with no partition keys " +
+        "changed; such a window moves its whole input into one task, so " +
+        "check the new ones only see bounded input, then update the set:\n" +
+        found.map { case (n, w) => s"$n: $w" }.mkString("\n"))
   }
 }

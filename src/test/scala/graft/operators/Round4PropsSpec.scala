@@ -196,7 +196,7 @@ class Round4PropsSpec extends SparkSpec {
 
   test("d13: the merge really ran across multiple microbatches") {
     // the state dir holds one version per batch; maxFilesPerTrigger=1
-    // over a 3-file source must produce >= 2 versions
+    // over a 2-file source must produce >= 2 versions
     q("d13_stream_foreach_batch").count()
     val base = new java.io.File(graft.util.TmpDir.base)
     val states = base.listFiles().filter(_.getName.startsWith("d13-state"))
