@@ -1972,16 +1972,9 @@ object TierB {
   private def b75(s: SparkSession, d: String): DataFrame = {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "acct",
       "(key BIGINT, bal_cents BIGINT)")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append()
+    accounts(s, d).writeTo(tbl).append()
     runCdcMergeRound(s, d, "b75", tbl)
-    s.sql(
-      s"""SELECT key % 10 AS key_mod, count(*) AS n,
-         |  CAST(sum(CAST(bal_cents AS DECIMAL(38,0))) AS BIGINT)
-         |    AS bal_cents_sum
-         |FROM $tbl GROUP BY key % 10 ORDER BY key_mod""".stripMargin)
+    keyModSummary(s, tbl)
   }
 
   /** b80: MERGE-ON-READ MERGE — b75's CDC batch against the
@@ -2004,16 +1997,9 @@ object TierB {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "mor",
       "(key BIGINT, bal_cents BIGINT) " +
       "TBLPROPERTIES ('graft.row_level' = 'merge-on-read')")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append()
+    accounts(s, d).writeTo(tbl).append()
     runCdcMergeRound(s, d, "b80", tbl)
-    s.sql(
-      s"""SELECT key % 10 AS key_mod, count(*) AS n,
-         |  CAST(sum(CAST(bal_cents AS DECIMAL(38,0))) AS BIGINT)
-         |    AS bal_cents_sum
-         |FROM $tbl GROUP BY key % 10 ORDER BY key_mod""".stripMargin)
+    keyModSummary(s, tbl)
   }
 
   /** b91: EQUALITY DELETES on the merge-on-read flavor — b80's CDC
@@ -2042,16 +2028,9 @@ object TierB {
       "(key BIGINT NOT NULL, bal_cents BIGINT) " +
       "TBLPROPERTIES ('graft.row_level' = 'merge-on-read', " +
       "'graft.mor.deletes' = 'equality')")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append()
+    accounts(s, d).writeTo(tbl).append()
     runCdcMergeRound(s, d, "b91", tbl)
-    s.sql(
-      s"""SELECT key % 10 AS key_mod, count(*) AS n,
-         |  CAST(sum(CAST(bal_cents AS DECIMAL(38,0))) AS BIGINT)
-         |    AS bal_cents_sum
-         |FROM $tbl GROUP BY key % 10 ORDER BY key_mod""".stripMargin)
+    keyModSummary(s, tbl)
   }
 
   /** b82: MoR COMPACTION via a DSv2 STORED PROCEDURE — `CALL
@@ -2074,20 +2053,13 @@ object TierB {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "morc",
       "(key BIGINT, bal_cents BIGINT) " +
       "TBLPROPERTIES ('graft.row_level' = 'merge-on-read')")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append()
+    accounts(s, d).writeTo(tbl).append()
     runCdcMergeRound(s, d, "b82", tbl)
     // governed maintenance between the two CDC rounds
     s.sql(s"CALL graftmem.system.compact('${tbl.stripPrefix("graftmem.")}')")
       .collect()
     runFollowupMergeRound(s, tbl)
-    s.sql(
-      s"""SELECT key % 10 AS key_mod, count(*) AS n,
-         |  CAST(sum(CAST(bal_cents AS DECIMAL(38,0))) AS BIGINT)
-         |    AS bal_cents_sum
-         |FROM $tbl GROUP BY key % 10 ORDER BY key_mod""".stripMargin)
+    keyModSummary(s, tbl)
   }
 
   /** b83: CDC CHANGE-FEED READ — the INCREMENTAL-CONSUMPTION face of
@@ -2112,10 +2084,7 @@ object TierB {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "morl",
       "(key BIGINT, bal_cents BIGINT) " +
       "TBLPROPERTIES ('graft.row_level' = 'merge-on-read')")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append() // version 1
+    accounts(s, d).writeTo(tbl).append() // version 1
     runCdcMergeRound(s, d, "b83", tbl) // version 2
     s.sql(s"CALL graftmem.system.compact('${tbl.stripPrefix("graftmem.")}')")
       .collect() // version 3 — must NOT appear in the feed
@@ -2149,10 +2118,7 @@ object TierB {
   private def b84(s: SparkSession, d: String): DataFrame = {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "ttc",
       "(key BIGINT, bal_cents BIGINT)")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append() // version 1 — the diff's left side
+    accounts(s, d).writeTo(tbl).append() // version 1 — the diff's left side
     runCdcMergeRound(s, d, "b84", tbl) // version 2
     runFollowupMergeRound(s, tbl) // version 3 — current
     s.sql(
@@ -2198,9 +2164,7 @@ object TierB {
   private def b85(s: SparkSession, d: String): DataFrame = {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "sec",
       "(key BIGINT, bal_cents BIGINT)")
-    val snap = customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
+    val snap = accounts(s, d)
     snap.writeTo(tbl).append() // v1 — 2-col generation
     s.sql(s"ALTER TABLE $tbl ADD COLUMNS (" +
       "bonus_cents BIGINT DEFAULT 250, tier STRING DEFAULT 'basic', " +
@@ -2252,9 +2216,7 @@ object TierB {
   private def b86(s: SparkSession, d: String): DataFrame = {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "owc",
       "(key BIGINT, g BIGINT, bal_cents BIGINT) PARTITIONED BY (g)")
-    customer(s, d)
-      .selectExpr("c_custkey AS key", "c_custkey % 5 AS g",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
+    accounts(s, d, "c_custkey % 5 AS g")
       .writeTo(tbl).append() // the original load
     // corrected reload of partitions 1 and 3 (dynamic: the groups
     // present in the frame are the groups replaced)
@@ -2298,17 +2260,10 @@ object TierB {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "ckc",
       "(key BIGINT, bal_cents BIGINT, CONSTRAINT bal_range CHECK " +
         "(bal_cents >= -200000 AND bal_cents < 100000000))")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append()
+    accounts(s, d).writeTo(tbl).append()
     runCdcMergeRound(s, d, "b87", tbl)
     runFollowupMergeRound(s, tbl)
-    s.sql(
-      s"""SELECT key % 10 AS key_mod, count(*) AS n,
-         |  CAST(sum(CAST(bal_cents AS DECIMAL(38,0))) AS BIGINT)
-         |    AS bal_cents_sum
-         |FROM $tbl GROUP BY key % 10 ORDER BY key_mod""".stripMargin)
+    keyModSummary(s, tbl)
   }
 
   /** b81: COST-BASED JOIN REORDER — a38 proved connector statistics
@@ -2433,10 +2388,7 @@ object TierB {
   private def b77(s: SparkSession, d: String): DataFrame = {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "acctp",
       "(key BIGINT, g BIGINT, bal_cents BIGINT) PARTITIONED BY (g)")
-    customer(s, d)
-      .selectExpr("c_custkey AS key", "c_custkey % 5 AS g",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append()
+    accounts(s, d, "c_custkey % 5 AS g").writeTo(tbl).append()
     customer(s, d)
       .filter(col("c_custkey") % 50 === 2)
       .selectExpr("c_custkey AS key")
@@ -2527,10 +2479,7 @@ object TierB {
   private def b88(s: SparkSession, d: String): DataFrame = {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "pmg",
       "(key BIGINT, g BIGINT, bal_cents BIGINT) PARTITIONED BY (g)")
-    customer(s, d)
-      .selectExpr("c_custkey AS key", "c_custkey % 5 AS g",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append()
+    accounts(s, d, "c_custkey % 5 AS g").writeTo(tbl).append()
     s.sql(s"ALTER TABLE $tbl ADD PARTITION (g = 9)")
     // IF NOT EXISTS / IF EXISTS keep the DDL total on an empty load
     // (no data ⇒ no data-implied partitions): 4 is declared before
@@ -2599,10 +2548,7 @@ object TierB {
   private def b89(s: SparkSession, d: String): DataFrame = {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "tagd",
       "(key BIGINT, bal_cents BIGINT)")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append() // v1 — the tagged baseline
+    accounts(s, d).writeTo(tbl).append() // v1 — the tagged baseline
     s.sql(s"CALL graftmem.system.create_tag(" +
       s"'${tbl.stripPrefix("graftmem.")}', 'baseline', 1L)").collect()
     runCdcMergeRound(s, d, "b89", tbl) // v2
@@ -2611,12 +2557,7 @@ object TierB {
     // the tagged v1 survives — the read below depends on the pin
     s.sql(s"CALL graftmem.system.expire_snapshots(" +
       s"'${tbl.stripPrefix("graftmem.")}', 1)").collect()
-    s.sql(
-      s"""SELECT key % 10 AS key_mod, count(*) AS n,
-         |  CAST(sum(CAST(bal_cents AS DECIMAL(38,0))) AS BIGINT)
-         |    AS bal_cents_sum
-         |FROM $tbl VERSION AS OF 'baseline'
-         |GROUP BY key % 10 ORDER BY key_mod""".stripMargin)
+    keyModSummary(s, s"$tbl VERSION AS OF 'baseline'")
   }
 
   /** b92: WRITE-AUDIT-PUBLISH via SNAPSHOT BRANCHES — the governance
@@ -2640,10 +2581,7 @@ object TierB {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "wap",
       "(key BIGINT, bal_cents BIGINT, CONSTRAINT wap_box CHECK " +
         "(bal_cents >= -200000 AND bal_cents < 100000000))")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append() // v1 — main's serving content
+    accounts(s, d).writeTo(tbl).append() // v1 — main's serving content
     s.sql(s"CALL graftmem.system.create_branch(" +
       s"'${tbl.stripPrefix("graftmem.")}', 'ingest')").collect()
     // stage the new generation ON THE BRANCH (re-keyed past max, +777
@@ -2665,11 +2603,7 @@ object TierB {
       s"b92 audit failed: ${audit.getLong(1)} bad staged rows")
     s.sql(s"CALL graftmem.system.fast_forward(" +
       s"'${tbl.stripPrefix("graftmem.")}', 'main', 'ingest')").collect()
-    s.sql(
-      s"""SELECT key % 10 AS key_mod, count(*) AS n,
-         |  CAST(sum(CAST(bal_cents AS DECIMAL(38,0))) AS BIGINT)
-         |    AS bal_cents_sum
-         |FROM $tbl GROUP BY key % 10 ORDER BY key_mod""".stripMargin)
+    keyModSummary(s, tbl)
   }
 
   /** b93: SNAPSHOT-HISTORY METADATA TABLE — `db.tbl__history`, the
@@ -2693,10 +2627,7 @@ object TierB {
   private def b93(s: SparkSession, d: String): DataFrame = {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "hist",
       "(key BIGINT, bal_cents BIGINT)")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append() // v1
+    accounts(s, d).writeTo(tbl).append() // v1
     s.sql(s"CALL graftmem.system.create_tag(" +
       s"'${tbl.stripPrefix("graftmem.")}', 'baseline', 1L)").collect()
     runCdcMergeRound(s, d, "b93", tbl) // v2
@@ -2732,10 +2663,7 @@ object TierB {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "fmeta",
       "(key BIGINT, bal_cents BIGINT) " +
         "TBLPROPERTIES ('graft.row_level' = 'merge-on-read')")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append() // v1 → file 1
+    accounts(s, d).writeTo(tbl).append() // v1 → file 1
     runCdcMergeRound(s, d, "b94", tbl) // v2 → file 2 + tombstones
     val cols = Seq("file_id", "commit_version", "pos_min", "pos_max",
       "rows_written", "live_rows", "deleted_rows", "min_key", "max_key")
@@ -2786,9 +2714,7 @@ object TierB {
       "(key BIGINT NOT NULL, bal_cents BIGINT) " +
         "TBLPROPERTIES ('graft.row_level' = 'merge-on-read', " +
         "'graft.mor.deletes' = 'equality')")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
+    accounts(s, d)
       .repartition(1).sortWithinPartitions("key")
       .writeTo(tbl).append() // v1: _row_id = rank(key) - 1
     runCdcMergeRound(s, d, "b95", tbl) // v2
@@ -2851,10 +2777,7 @@ object TierB {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "rwf",
       "(key BIGINT, bal_cents BIGINT) " +
         "TBLPROPERTIES ('graft.row_level' = 'merge-on-read')")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append() // v1 → file 1
+    accounts(s, d).writeTo(tbl).append() // v1 → file 1
     s.sql(s"DELETE FROM $tbl WHERE key % 10 IN (3, 7)") // v2: 20% dead
     customer(s, d).createOrReplaceTempView("g_cust_b96")
     s.sql(
@@ -2902,10 +2825,7 @@ object TierB {
   private def b97(s: SparkSession, d: String): DataFrame = {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "mdel",
       "(key BIGINT, g BIGINT, bal_cents BIGINT) PARTITIONED BY (g)")
-    customer(s, d)
-      .selectExpr("c_custkey AS key", "c_custkey % 8 AS g",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append() // v1
+    accounts(s, d, "c_custkey % 8 AS g").writeTo(tbl).append() // v1
     s.sql(s"DELETE FROM $tbl WHERE g IN (2, 4)") // v2: metadata-only
     s.sql(s"DELETE FROM $tbl WHERE bal_cents < 0") // v3: row-level
     s.sql(
@@ -2941,10 +2861,7 @@ object TierB {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "morret",
       "(key BIGINT, bal_cents BIGINT) " +
         "TBLPROPERTIES ('graft.row_level' = 'merge-on-read')")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append() // v1
+    accounts(s, d).writeTo(tbl).append() // v1
     runCdcMergeRound(s, d, "b98", tbl) // v2
     runFollowupMergeRound(s, tbl) // v3
     s.sql(s"CALL graftmem.system.expire_changelog(" +
@@ -3018,10 +2935,7 @@ object TierB {
   private def b100(s: SparkSession, d: String): DataFrame = {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "sync",
       "(key BIGINT, bal_cents BIGINT)")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append()
+    accounts(s, d).writeTo(tbl).append()
     customer(s, d).createOrReplaceTempView("g_cust_b100")
     s.sql(
       """SELECT key, bal_cents + 10000 AS nb
@@ -3041,11 +2955,7 @@ object TierB {
          |WHEN NOT MATCHED BY SOURCE AND t.key % 10 = 7 THEN DELETE
          |WHEN NOT MATCHED BY SOURCE THEN UPDATE
          |  SET bal_cents = bal_cents + 1""".stripMargin)
-    s.sql(
-      s"""SELECT key % 10 AS key_mod, count(*) AS n,
-         |  CAST(sum(CAST(bal_cents AS DECIMAL(38,0))) AS BIGINT)
-         |    AS bal_cents_sum
-         |FROM $tbl GROUP BY key % 10 ORDER BY key_mod""".stripMargin)
+    keyModSummary(s, tbl)
   }
 
   /** b101: SCHEMA EVOLUTION BEYOND ADD — RENAME COLUMN, DROP COLUMN
@@ -3149,9 +3059,7 @@ object TierB {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "sortrw",
       "(key BIGINT, bal_cents BIGINT) " +
         "TBLPROPERTIES ('graft.row_level' = 'merge-on-read')")
-    val cust = customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
+    val cust = accounts(s, d)
     // interleaved ingestion: one append per residue class — every
     // file spans the whole key domain (v1..v4, files 1..4)
     (0 until 4).foreach(i =>
@@ -3210,9 +3118,7 @@ object TierB {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "pevol",
       "(key BIGINT, g BIGINT, bal_cents BIGINT)")
-    val cust = customer(s, d)
-      .selectExpr("c_custkey AS key", "c_custkey % 5 AS g",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
+    val cust = accounts(s, d, "c_custkey % 5 AS g")
     cust.writeTo(tbl).append() // v1: the legacy (unpartitioned) gen
     val off = cust.agg(coalesce(max(col("key")), lit(0L)))
       .head.getLong(0) + 1L
@@ -3268,10 +3174,7 @@ object TierB {
   private def b104(s: SparkSession, d: String): DataFrame = {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "restore",
       "(key BIGINT, bal_cents BIGINT)")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append() // v1: the good snapshot
+    accounts(s, d).writeTo(tbl).append() // v1: the good snapshot
     runCdcMergeRound(s, d, "b104", tbl) // v2: the bad batch
     s.sql(s"DELETE FROM $tbl WHERE key % 10 = 1") // v3: worse
     s.sql(s"CALL graftmem.system.rollback(" +
@@ -3313,9 +3216,7 @@ object TierB {
       "(key BIGINT, bal_cents BIGINT)")
     val dst = src.replace("clsrc_", "cldst_")
     s.sql(s"DROP TABLE IF EXISTS $dst")
-    val cust = customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
+    val cust = accounts(s, d)
     cust.writeTo(src).append() // src v1
     s.sql(s"CALL graftmem.system.clone_table(" +
       s"'${src.stripPrefix("graftmem.")}', " +
@@ -3379,10 +3280,7 @@ object TierB {
   private def b106(s: SparkSession, d: String): DataFrame = {
     val tbl = graft.util.DemoTables.freshGraftmem(s, d, "mevol",
       "(key BIGINT, bal_cents BIGINT)")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append()
+    accounts(s, d).writeTo(tbl).append()
     customer(s, d).createOrReplaceTempView("g_cust_b106")
     // the source's shape DRIFTED: it now carries seg
     s.sql(
@@ -3499,10 +3397,7 @@ object TierB {
         "TBLPROPERTIES ('graft.row_level' = 'merge-on-read')")
     val agg = graft.util.DemoTables.freshGraftmem(s, d, "ivmagg",
       "(grp BIGINT, n BIGINT, bal_sum BIGINT)")
-    customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(base).append() // v1: the seed snapshot
+    accounts(s, d).writeTo(base).append() // v1: the seed snapshot
     // the ONE full pass: seed the aggregate from the v1 state
     s.sql(s"INSERT INTO $agg SELECT key % 10, count(*), " +
       s"CAST(sum(CAST(bal_cents AS DECIMAL(38,0))) AS BIGINT) " +
@@ -3539,6 +3434,26 @@ object TierB {
     val p1 = census(1L)
     p0.unionAll(p1).orderBy("phase", "key_mod")
   }
+
+  /** The account seed of the graftmem lakehouse queries (b75–b109,
+    * d26): one row per customer, `key` then any `extra` columns then
+    * the balance in integer cents.
+    */
+  private[graft] def accounts(s: SparkSession, d: String,
+      extra: String*): DataFrame =
+    customer(s, d).selectExpr(("c_custkey AS key" +: extra) :+
+      "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents": _*)
+
+  /** The post-merge account summary by key mod 10 over `rel` (a table
+    * name or a time-travel read); the sum accumulates in DECIMAL (b60
+    * discipline).
+    */
+  private def keyModSummary(s: SparkSession, rel: String): DataFrame =
+    s.sql(
+      s"""SELECT key % 10 AS key_mod, count(*) AS n,
+         |  CAST(sum(CAST(bal_cents AS DECIMAL(38,0))) AS BIGINT)
+         |    AS bal_cents_sum
+         |FROM $rel GROUP BY key % 10 ORDER BY key_mod""".stripMargin)
 
   /** THE CDC round every row-level demo shares (b75 CoW, b80 MoR, b82
     * compaction, b83 change feed, d26 streaming CDC): update keys ≡3

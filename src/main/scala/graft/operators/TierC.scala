@@ -2185,13 +2185,13 @@ object TierC {
     val tok = documents(s, d)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
     val wc = tok.groupBy("w").agg(count(lit(1)).as("cnt"))
-    // corpus total via an all-rows window over the VOCAB-sized count
-    // table (bounded single partition; a 1-row cross join would plan
-    // the NestedLoopJoin the blanket plan audit bans)
-    val lm = wc
-      .withColumn("n", sum("cnt").over(Window.partitionBy()))
-      .select(col("w"),
-        (length(bin(expr("n div cnt"))) - 1).cast("long").as("bits"))
+    // corpus total Σcnt = the token count, one row collected as a
+    // literal: a window over the vocabulary-sized count table would
+    // move it into one task, and a 1-row cross join would plan the
+    // NestedLoopJoin the blanket plan audit bans
+    val n = tok.count()
+    val lm = wc.select(col("w"),
+      (length(bin(expr(s"${n}L div cnt"))) - 1).cast("long").as("bits"))
     tok.join(broadcast(lm), Seq("w"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"), sum("bits").as("sur_sum"))
@@ -2721,42 +2721,42 @@ object TierC {
     * Output is the raw integer importance sum (a ratio would need
     * cross-engine floor-vs-truncate division on NEGATIVE sums — so the
     * declared columns stay in sum space). Scale shape: both LMs are
-    * vocabulary-sized, joined once, broadcast to the scoring pass; the
-    * corpus is scanned once for counts and once for scoring, never
-    * shuffled on anything wider than the vocab.
+    * vocabulary-sized, counted by one aggregate, broadcast to the
+    * scoring pass; the corpus is scanned once for counts and once for
+    * scoring, never shuffled on anything wider than the vocab.
     */
   private def c49(s: SparkSession, d: String): DataFrame = {
     val tok = documents(s, d)
       .select(col("doc_id"), col("source"),
         explode(split(col("text"), " ")).as("w"))
-    val wcAll = tok.groupBy("w").agg(count(lit(1)).as("cnt_all"))
-    val wcT = tok.filter(col("source") === "src1")
-      .groupBy("w").agg(count(lit(1)).as("cnt_t"))
-    // vocab-sized windows (bounded single partition — same pattern as
-    // c41; a 1-row cross join would plan the banned NestedLoopJoin)
-    val lm = wcAll.join(wcT, Seq("w"), "left")
-      .withColumn("tot_all", sum("cnt_all").over(Window.partitionBy()))
-      .withColumn("tot_t",
-        sum(coalesce(col("cnt_t"), lit(0))).over(Window.partitionBy()))
-      .withColumn("nv", count(lit(1)).over(Window.partitionBy()))
-      .select(col("w"), col("cnt_all"), col("tot_all"),
-        ((length(bin(expr("tot_all div cnt_all"))) - 1) -
-          (length(bin(
-            expr("(2 * tot_t + nv) div (2 * coalesce(cnt_t, 0) + 1)"))) - 1))
-          .cast("long").as("imp"))
-      // corpus-mean importance numerator: Σ_vocab imp·cnt — the exact
-      // token-weighted mean is gm/tot_all, kept as an integer pair so
-      // the per-doc flag below is an exact cross-multiplication
-      .withColumn("gm",
-        sum(col("imp") * col("cnt_all")).over(Window.partitionBy()))
-      .select(col("w"), col("imp"), col("gm"), col("tot_all"))
-    tok.join(broadcast(lm), Seq("w"))
+    // both LMs' counts in one vocabulary-sized aggregate (cnt_t is 0
+    // for a word the target never uses)
+    val vocab = tok.groupBy("w").agg(count(lit(1)).as("cnt_all"),
+        count(when(col("source") === "src1", 1)).as("cnt_t"))
+      .localCheckpoint(false) // feeds the totals AND the LM
+    // vocabulary totals as one-row aggregates collected as literals
+    // (same discipline as c41: a window would move the vocabulary into
+    // one task; a 1-row cross join would plan the banned NestedLoopJoin)
+    val tots = vocab.agg(coalesce(sum("cnt_all"), lit(0L)),
+      coalesce(sum("cnt_t"), lit(0L)), count(lit(1))).head()
+    val (totAll, totT, nv) =
+      (tots.getLong(0), tots.getLong(1), tots.getLong(2))
+    val lm = vocab.select(col("w"), col("cnt_all"),
+      ((length(bin(expr(s"${totAll}L div cnt_all"))) - 1) -
+        (length(bin(expr(
+          s"(2 * ${totT}L + ${nv}L) div (2 * cnt_t + 1)"))) - 1))
+        .cast("long").as("imp"))
+    // corpus-mean importance numerator: Σ_vocab imp·cnt — the exact
+    // token-weighted mean is gm/totAll, kept as an integer pair so
+    // the per-doc flag below is an exact cross-multiplication
+    val gm = lm.agg(coalesce(sum(col("imp") * col("cnt_all")), lit(0L)))
+      .head().getLong(0)
+    tok.join(broadcast(lm.select("w", "imp")), Seq("w"))
       .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_words"), sum("imp").as("imp_sum"),
-        max("gm").as("gm"), max("tot_all").as("tot"))
-      // doc mean > corpus mean, exactly: imp_sum/n > gm/tot
+      .agg(count(lit(1)).as("n_words"), sum("imp").as("imp_sum"))
+      // doc mean > corpus mean, exactly: imp_sum/n > gm/totAll
       .select(col("doc_id"), col("n_words"), col("imp_sum"),
-        (col("imp_sum") * col("tot") > col("gm") * col("n_words"))
+        (col("imp_sum") * lit(totAll) > lit(gm) * col("n_words"))
           .as("above_corpus_mean"))
       .orderBy("doc_id")
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** SNAPSHOT BRANCHES + WRITE-AUDIT-PUBLISH (b92) — the governance
@@ -141,59 +141,23 @@ private[sources] class GraftMemBranchTable(parent: GraftMemTable,
   * files get the current spec — Iceberg's rule). Returns
   * (partition_col, legacy_rows, version).
   */
-private[sources] object SetPartitionProcedure
-    extends org.apache.spark.sql.connector.catalog.procedures
-      .UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures._
-  import org.apache.spark.sql.types.{LongType => LT, StringType, StructField, StructType => ST}
-
-  override def name(): String = "set_partition"
-  override def description(): String =
+private[sources] object SetPartitionProcedure extends GraftProcedure(
+    "set_partition",
     "evolve an unpartitioned table to identity partitioning on a " +
       "CREATE-time column (metadata-only; legacy rows keep their " +
-      "generation)"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "set_partition"
-      override def description(): String =
-        SetPartitionProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] =
-        Array(ProcedureParameter.in("table", StringType).build(),
-          ProcedureParameter.in("col", StringType).build())
-      override def isDeterministic: Boolean = false
-      private val outSchema = ST(Seq(
-        StructField("partition_col", StringType, nullable = false),
-        StructField("legacy_rows", LT, nullable = false),
-        StructField("version", LT, nullable = false)))
-      override def call(input: InternalRow)
-          : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val col = input.getUTF8String(1).toString
-        GraftMemCatalog.lookup(tbl) match {
-          case g: GraftMemTable =>
-            val legacy = g.setPartition(col)
-            val v = g.synchronized(g.commitVersion)
-            val row: InternalRow = InternalRow(
-              org.apache.spark.unsafe.types.UTF8String.fromString(col),
-              legacy, v)
-            val scan: org.apache.spark.sql.connector.read.Scan =
-              new org.apache.spark.sql.connector.read.LocalScan {
-                override def rows(): Array[InternalRow] = Array(row)
-                override def readSchema(): StructType = outSchema
-                override def description(): String =
-                  s"set_partition($tbl, $col)"
-              }
-            java.util.Collections.singletonList(scan).iterator()
-          case null => throw new IllegalArgumentException(
-            s"set_partition: no graftmem table named '$tbl'")
-          case _ => throw new IllegalArgumentException(
-            s"set_partition: '$tbl' is merge-on-read — partition " +
-              "evolution applies to the copy-on-write flavor (deltas " +
-              "address rows by position, not by rewrite group)")
-        }
-      }
-    }
+      "generation)",
+    Seq("table" -> StringType, "col" -> StringType),
+    Seq("partition_col" -> StringType, "legacy_rows" -> LongType,
+      "version" -> LongType)) {
+  override def body(in: InternalRow): Body = {
+    case g: GraftMemTable =>
+      val legacy = g.setPartition(in.getString(1))
+      (in.getString(1), legacy, g.synchronized(g.commitVersion))
+  }
+  override def wrongFlavour(tbl: String): Exception =
+    new IllegalArgumentException(s"${name()}: '$tbl' is merge-on-read — " +
+      "partition evolution applies to the copy-on-write flavor (deltas " +
+      "address rows by position, not by rewrite group)")
 }
 
 /** `graftmem.system.create_branch(table, branch)` — fork the table's
@@ -201,54 +165,19 @@ private[sources] object SetPartitionProcedure
   * Returns (branch, base_version): the version the fast-forward
   * publish will require main to still be at.
   */
-private[sources] object CreateBranchProcedure
-    extends org.apache.spark.sql.connector.catalog.procedures
-      .UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures._
-  import org.apache.spark.sql.types.{LongType => LT, StringType, StructField, StructType => ST}
-
-  override def name(): String = "create_branch"
-  override def description(): String =
-    "fork a table's current content as a named write-audit-publish branch"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "create_branch"
-      override def description(): String =
-        CreateBranchProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] =
-        Array(ProcedureParameter.in("table", StringType).build(),
-          ProcedureParameter.in("branch", StringType).build())
-      override def isDeterministic: Boolean = false
-      private val outSchema = ST(Seq(
-        StructField("branch", StringType, nullable = false),
-        StructField("base_version", LT, nullable = false)))
-      override def call(input: InternalRow)
-          : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val branch = input.getUTF8String(1).toString
-        GraftMemCatalog.lookup(tbl) match {
-          case g: GraftMemTable =>
-            val base = g.createBranch(branch)
-            val row: InternalRow = InternalRow(
-              org.apache.spark.unsafe.types.UTF8String.fromString(
-                branch.trim), base)
-            val scan: org.apache.spark.sql.connector.read.Scan =
-              new org.apache.spark.sql.connector.read.LocalScan {
-                override def rows(): Array[InternalRow] = Array(row)
-                override def readSchema(): StructType = outSchema
-                override def description(): String =
-                  s"create_branch($tbl, $branch)"
-              }
-            java.util.Collections.singletonList(scan).iterator()
-          case null => throw new IllegalArgumentException(
-            s"create_branch: no graftmem table named '$tbl'")
-          case _ => throw new IllegalArgumentException(
-            s"create_branch: '$tbl' is merge-on-read — branches stage " +
-              "batch publishes on the copy-on-write flavor")
-        }
-      }
-    }
+private[sources] object CreateBranchProcedure extends GraftProcedure(
+    "create_branch",
+    "fork a table's current content as a named write-audit-publish branch",
+    Seq("table" -> StringType, "branch" -> StringType),
+    Seq("branch" -> StringType, "base_version" -> LongType)) {
+  override def body(in: InternalRow): Body = {
+    case g: GraftMemTable =>
+      val base = g.createBranch(in.getString(1))
+      (in.getString(1).trim, base)
+  }
+  override def wrongFlavour(tbl: String): Exception =
+    new IllegalArgumentException(s"${name()}: '$tbl' is merge-on-read — " +
+      "branches stage batch publishes on the copy-on-write flavor")
 }
 
 /** `graftmem.system.drop_branch(table, branch)` — abandon a staging
@@ -257,53 +186,18 @@ private[sources] object CreateBranchProcedure
   * rejected batch and moves on — main was never touched, so there is
   * nothing to roll back). Returns (branch, staged_commits).
   */
-private[sources] object DropBranchProcedure
-    extends org.apache.spark.sql.connector.catalog.procedures
-      .UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures._
-  import org.apache.spark.sql.types.{LongType => LT, StringType, StructField, StructType => ST}
-
-  override def name(): String = "drop_branch"
-  override def description(): String =
-    "abandon a write-audit-publish branch without publishing"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "drop_branch"
-      override def description(): String =
-        DropBranchProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] =
-        Array(ProcedureParameter.in("table", StringType).build(),
-          ProcedureParameter.in("branch", StringType).build())
-      override def isDeterministic: Boolean = false
-      private val outSchema = ST(Seq(
-        StructField("branch", StringType, nullable = false),
-        StructField("staged_commits", LT, nullable = false)))
-      override def call(input: InternalRow)
-          : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val branch = input.getUTF8String(1).toString
-        GraftMemCatalog.lookup(tbl) match {
-          case g: GraftMemTable =>
-            val staged = g.dropBranch(branch)
-            val row: InternalRow = InternalRow(
-              org.apache.spark.unsafe.types.UTF8String.fromString(
-                branch.trim), staged)
-            val scan: org.apache.spark.sql.connector.read.Scan =
-              new org.apache.spark.sql.connector.read.LocalScan {
-                override def rows(): Array[InternalRow] = Array(row)
-                override def readSchema(): StructType = outSchema
-                override def description(): String =
-                  s"drop_branch($tbl, $branch)"
-              }
-            java.util.Collections.singletonList(scan).iterator()
-          case null => throw new IllegalArgumentException(
-            s"drop_branch: no graftmem table named '$tbl'")
-          case _ => throw new IllegalArgumentException(
-            s"drop_branch: '$tbl' keeps no branches")
-        }
-      }
-    }
+private[sources] object DropBranchProcedure extends GraftProcedure(
+    "drop_branch",
+    "abandon a write-audit-publish branch without publishing",
+    Seq("table" -> StringType, "branch" -> StringType),
+    Seq("branch" -> StringType, "staged_commits" -> LongType)) {
+  override def body(in: InternalRow): Body = {
+    case g: GraftMemTable =>
+      val staged = g.dropBranch(in.getString(1))
+      (in.getString(1).trim, staged)
+  }
+  override def wrongFlavour(tbl: String): Exception =
+    new IllegalArgumentException(s"${name()}: '$tbl' keeps no branches")
 }
 
 /** `graftmem.system.fast_forward(table, 'main', branch)` — publish a
@@ -314,56 +208,21 @@ private[sources] object DropBranchProcedure
   * branch is consumed. Returns (published_rows, branch_commits,
   * new_version).
   */
-private[sources] object FastForwardProcedure
-    extends org.apache.spark.sql.connector.catalog.procedures
-      .UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures._
-  import org.apache.spark.sql.types.{LongType => LT, StringType, StructField, StructType => ST}
-
-  override def name(): String = "fast_forward"
-  override def description(): String =
+private[sources] object FastForwardProcedure extends GraftProcedure(
+    "fast_forward",
     "publish a branch onto main (atomic; requires main unchanged " +
-      "since the fork)"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "fast_forward"
-      override def description(): String =
-        FastForwardProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] =
-        Array(ProcedureParameter.in("table", StringType).build(),
-          ProcedureParameter.in("to", StringType).build(),
-          ProcedureParameter.in("from", StringType).build())
-      override def isDeterministic: Boolean = false
-      private val outSchema = ST(Seq(
-        StructField("published_rows", LT, nullable = false),
-        StructField("branch_commits", LT, nullable = false),
-        StructField("new_version", LT, nullable = false)))
-      override def call(input: InternalRow)
-          : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val to = input.getUTF8String(1).toString
-        val from = input.getUTF8String(2).toString
-        require(to == "main",
-          s"fast_forward: the publish target is 'main' (got '$to') — " +
-            "branch-to-branch promotion is not part of the WAP demo")
-        GraftMemCatalog.lookup(tbl) match {
-          case g: GraftMemTable =>
-            val (nRows, nCommits, newV) = g.fastForward(from)
-            val row: InternalRow = InternalRow(nRows, nCommits, newV)
-            val scan: org.apache.spark.sql.connector.read.Scan =
-              new org.apache.spark.sql.connector.read.LocalScan {
-                override def rows(): Array[InternalRow] = Array(row)
-                override def readSchema(): StructType = outSchema
-                override def description(): String =
-                  s"fast_forward($tbl, $to, $from)"
-              }
-            java.util.Collections.singletonList(scan).iterator()
-          case null => throw new IllegalArgumentException(
-            s"fast_forward: no graftmem table named '$tbl'")
-          case _ => throw new IllegalArgumentException(
-            s"fast_forward: '$tbl' keeps no branches")
-        }
-      }
-    }
+      "since the fork)",
+    Seq("table" -> StringType, "to" -> StringType, "from" -> StringType),
+    Seq("published_rows" -> LongType, "branch_commits" -> LongType,
+      "new_version" -> LongType)) {
+  override def check(in: InternalRow): Unit =
+    require(in.getString(1) == "main",
+      s"${name()}: the publish target is 'main' (got " +
+        s"'${in.getString(1)}') — branch-to-branch promotion is not " +
+        "part of the WAP demo")
+  override def body(in: InternalRow): Body = {
+    case g: GraftMemTable => g.fastForward(in.getString(2))
+  }
+  override def wrongFlavour(tbl: String): Exception =
+    new IllegalArgumentException(s"${name()}: '$tbl' keeps no branches")
 }

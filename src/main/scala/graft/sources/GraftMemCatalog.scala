@@ -8,7 +8,8 @@ import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** In-memory `TableCatalog` whose tables support GROUP-BASED ROW-LEVEL
@@ -424,39 +425,17 @@ class GraftMemCatalog extends TableCatalog with FunctionCatalog
     * .compact('db.tbl')` folds a merge-on-read table's delta log into
     * its base and returns the maintenance summary as the CALL's
     * result set (the Iceberg `rewrite_data_files` shape at the Spark
-    * extension point).
+    * extension point). Both the list and the load read the one
+    * registry, [[GraftMemCatalog.procedureRegistry]]; every entry is a
+    * [[GraftProcedure]].
     */
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
-    Array(Identifier.of(namespace, "compact"),
-      Identifier.of(namespace, "create_tag"),
-      Identifier.of(namespace, "create_branch"),
-      Identifier.of(namespace, "fast_forward"),
-      Identifier.of(namespace, "drop_branch"),
-      Identifier.of(namespace, "rewrite_files"),
-      Identifier.of(namespace, "rewrite_sort"),
-      Identifier.of(namespace, "set_partition"),
-      Identifier.of(namespace, "expire_changelog"),
-      Identifier.of(namespace, "expire_snapshots"),
-      Identifier.of(namespace, "rollback"),
-      Identifier.of(namespace, "clone_table"))
-  override def loadProcedure(ident: Identifier)
-      : org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure =
-    ident.name() match {
-      case "compact"          => MorCompactProcedure
-      case "create_tag"       => CreateTagProcedure
-      case "create_branch"    => CreateBranchProcedure
-      case "fast_forward"     => FastForwardProcedure
-      case "drop_branch"      => DropBranchProcedure
-      case "rewrite_files"    => RewriteFilesProcedure
-      case "rewrite_sort"     => RewriteSortProcedure
-      case "set_partition"    => SetPartitionProcedure
-      case "expire_changelog" => ExpireChangelogProcedure
-      case "expire_snapshots" => ExpireSnapshotsProcedure
-      case "rollback"         => RollbackProcedure
-      case "clone_table"      => CloneTableProcedure
-      case other => throw new RuntimeException(
-        s"graftmem: no procedure named '$other'")
-    }
+    GraftMemCatalog.procedureRegistry
+      .map(p => Identifier.of(namespace, p.name())).toArray
+  override def loadProcedure(ident: Identifier): procedures.UnboundProcedure =
+    GraftMemCatalog.procedureRegistry.find(_.name() == ident.name())
+      .getOrElse(throw new RuntimeException(
+        s"graftmem: no procedure named '${ident.name()}'"))
 
   /** NAMESPACE face (`SupportsNamespaces`): `CREATE/ALTER/DROP
     * NAMESPACE`, `SHOW NAMESPACES`, `DESCRIBE NAMESPACE` — the
@@ -582,6 +561,13 @@ object GraftMemCatalog {
     seedNamespaces()
   }
 
+  /** The `CALL graftmem.system.*` procedures, in listing order. */
+  private[sources] val procedureRegistry: Seq[GraftProcedure] = Seq(
+    MorCompactProcedure, CreateTagProcedure, CreateBranchProcedure,
+    FastForwardProcedure, DropBranchProcedure, RewriteFilesProcedure,
+    RewriteSortProcedure, SetPartitionProcedure, ExpireChangelogProcedure,
+    ExpireSnapshotsProcedure, RollbackProcedure, CloneTableProcedure)
+
   /** Procedure-side lookup by full `ns.name` key (null if absent). */
   private[sources] def lookup(fullName: String): Table =
     tables.get(fullName)
@@ -598,6 +584,75 @@ object GraftMemCatalog {
       throw new org.apache.spark.sql.catalyst.analysis
         .TableAlreadyExistsException(fullName.split('.').toSeq)
   }
+}
+
+/** One `CALL graftmem.system.<name>(table, ...)` procedure: the Spark
+  * ≥ 4.0 procedure API (`UnboundProcedure` → `BoundProcedure` → a
+  * one-row [[org.apache.spark.sql.connector.read.LocalScan]]) written
+  * once. A procedure declares its name, description, IN parameters
+  * (the first names the table, `db.tbl` within the calling catalog),
+  * its non-null result columns, its argument checks, its body and its
+  * wrong-flavour failure. Binding, the argument checks (before the
+  * lookup), the lookup, the missing-table failure and the result set
+  * live here, so the CALL's result set IS the maintenance report.
+  * Deterministic=false: every procedure mutates table state.
+  */
+private[sources] abstract class GraftProcedure(procName: String,
+    desc: String, params: Seq[(String, DataType)],
+    out: Seq[(String, DataType)]) extends procedures.UnboundProcedure {
+  import procedures.{BoundProcedure, ProcedureParameter}
+
+  /** The action on the looked-up table; yields the one result row's
+    * values in `out` order (a `String` becomes a SQL string).
+    */
+  protected type Body = PartialFunction[Table, Product]
+
+  override def name(): String = procName
+  override def description(): String = desc
+
+  /** Checks on the arguments alone; they run before the lookup. */
+  def check(in: InternalRow): Unit = ()
+  def body(in: InternalRow): Body
+  /** The failure for a table `body` does not serve. */
+  def wrongFlavour(tbl: String): Exception
+  /** How many of `params` a CALL with this input binds. */
+  def arity(inputType: StructType): Int = params.length
+
+  private val outSchema = StructType(out.map { case (n, t) =>
+    StructField(n, t, nullable = false) })
+
+  override def bind(inputType: StructType): BoundProcedure =
+    new BoundProcedure {
+      private val bound = params.take(arity(inputType))
+      override def name(): String = procName
+      override def description(): String = desc
+      override def parameters(): Array[ProcedureParameter] =
+        bound.map { case (n, t) => ProcedureParameter.in(n, t).build() }
+          .toArray
+      override def isDeterministic: Boolean = false
+      override def call(in: InternalRow): util.Iterator[Scan] = {
+        check(in)
+        val tbl = in.getString(0)
+        val values = GraftMemCatalog.lookup(tbl) match {
+          case null => throw new IllegalArgumentException(
+            s"$procName: no graftmem table named '$tbl'")
+          case t => body(in).applyOrElse(t, (_: Table) =>
+            throw wrongFlavour(tbl))
+        }
+        val row = InternalRow.fromSeq(values.productIterator.map {
+          case s: String => UTF8String.fromString(s)
+          case v => v
+        }.toSeq)
+        val args = bound.indices.map(i => in.get(i, bound(i)._2))
+        val scan: Scan = new org.apache.spark.sql.connector.read.LocalScan {
+          override def rows(): Array[InternalRow] = Array(row)
+          override def readSchema(): StructType = outSchema
+          override def description(): String =
+            s"$procName(${args.mkString(", ")})"
+        }
+        util.Collections.singletonList(scan).iterator()
+      }
+    }
 }
 
 /** Row payload shipped between driver and executors: externalized

@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.{DataType, LongType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** MERGE-ON-READ table flavor (b80) — the `SupportsDelta` half of the
@@ -1083,49 +1083,18 @@ private[sources] class MorDeltaWriterFactory(proj: Array[Int],
   * set IS the maintenance report. Deterministic=false: the procedure
   * mutates table state.
   */
-private[sources] object MorCompactProcedure
-    extends org.apache.spark.sql.connector.catalog.procedures
-      .UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures._
-  import org.apache.spark.sql.types.{LongType => LT, StringType, StructField, StructType => ST}
-
-  override def name(): String = "compact"
-  override def description(): String =
-    "fold a merge-on-read table's delta log into its base"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "compact"
-      override def description(): String = MorCompactProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] =
-        Array(ProcedureParameter.in("table", StringType).build())
-      override def isDeterministic: Boolean = false
-      private val outSchema = ST(Seq(
-        StructField("tombstones_dropped", LT, nullable = false),
-        StructField("inserts_folded", LT, nullable = false),
-        StructField("live_rows", LT, nullable = false)))
-      override def call(input: InternalRow)
-          : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        GraftMemCatalog.lookup(tbl) match {
-          case m: GraftMemMorTable =>
-            val (tomb, folded, live) = m.compact()
-            val row: InternalRow = InternalRow(tomb, folded, live)
-            val scan: org.apache.spark.sql.connector.read.Scan =
-              new org.apache.spark.sql.connector.read.LocalScan {
-                override def rows(): Array[InternalRow] = Array(row)
-                override def readSchema(): StructType = outSchema
-                override def description(): String = s"compact($tbl)"
-              }
-            java.util.Collections.singletonList(scan).iterator()
-          case null => throw new IllegalArgumentException(
-            s"compact: no graftmem table named '$tbl'")
-          case _ => throw new IllegalArgumentException(
-            s"compact: '$tbl' is copy-on-write — compaction applies to " +
-              "merge-on-read tables (its rewrites are already folded)")
-        }
-      }
-    }
+private[sources] object MorCompactProcedure extends GraftProcedure(
+    "compact", "fold a merge-on-read table's delta log into its base",
+    Seq("table" -> StringType),
+    Seq("tombstones_dropped" -> LongType, "inserts_folded" -> LongType,
+      "live_rows" -> LongType)) {
+  override def body(in: InternalRow): Body = {
+    case m: GraftMemMorTable => m.compact()
+  }
+  override def wrongFlavour(tbl: String): Exception =
+    new IllegalArgumentException(s"${name()}: '$tbl' is copy-on-write — " +
+      "compaction applies to merge-on-read tables (its rewrites are " +
+      "already folded)")
 }
 
 /** `graftmem.system.rewrite_files(table, min_dead_bp)` — SELECTIVE
@@ -1135,57 +1104,25 @@ private[sources] object MorCompactProcedure
   * rewrite exactly the files that earn it, leave healthy files
   * untouched. Returns (files_rewritten, rows_moved, files_kept).
   */
-private[sources] object RewriteFilesProcedure
-    extends org.apache.spark.sql.connector.catalog.procedures
-      .UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures._
-  import org.apache.spark.sql.types.{LongType => LT, StringType, StructField, StructType => ST}
-
-  override def name(): String = "rewrite_files"
-  override def description(): String =
+private[sources] object RewriteFilesProcedure extends GraftProcedure(
+    "rewrite_files",
     "rewrite the merge-on-read files whose dead-row fraction clears " +
-      "min_dead_bp basis points"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "rewrite_files"
-      override def description(): String =
-        RewriteFilesProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] =
-        Array(ProcedureParameter.in("table", StringType).build(),
-          ProcedureParameter.in("min_dead_bp", LT).build())
-      override def isDeterministic: Boolean = false
-      private val outSchema = ST(Seq(
-        StructField("files_rewritten", LT, nullable = false),
-        StructField("rows_moved", LT, nullable = false),
-        StructField("files_kept", LT, nullable = false)))
-      override def call(input: InternalRow)
-          : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val minDeadBp = input.getLong(1)
-        require(minDeadBp >= 0L && minDeadBp <= 10000L,
-          s"rewrite_files: min_dead_bp is basis points in [0, 10000], " +
-            s"got $minDeadBp")
-        GraftMemCatalog.lookup(tbl) match {
-          case m: GraftMemMorTable =>
-            val (rw, moved, keptN) = m.rewriteFiles(minDeadBp)
-            val row: InternalRow = InternalRow(rw, moved, keptN)
-            val scan: org.apache.spark.sql.connector.read.Scan =
-              new org.apache.spark.sql.connector.read.LocalScan {
-                override def rows(): Array[InternalRow] = Array(row)
-                override def readSchema(): StructType = outSchema
-                override def description(): String =
-                  s"rewrite_files($tbl, $minDeadBp)"
-              }
-            java.util.Collections.singletonList(scan).iterator()
-          case null => throw new IllegalArgumentException(
-            s"rewrite_files: no graftmem table named '$tbl'")
-          case _ => throw new IllegalArgumentException(
-            s"rewrite_files: '$tbl' is copy-on-write — file rewrite " +
-              "applies to merge-on-read tables")
-        }
-      }
-    }
+      "min_dead_bp basis points",
+    Seq("table" -> StringType, "min_dead_bp" -> LongType),
+    Seq("files_rewritten" -> LongType, "rows_moved" -> LongType,
+      "files_kept" -> LongType)) {
+  override def check(in: InternalRow): Unit = {
+    val minDeadBp = in.getLong(1)
+    require(minDeadBp >= 0L && minDeadBp <= 10000L,
+      s"${name()}: min_dead_bp is basis points in [0, 10000], " +
+        s"got $minDeadBp")
+  }
+  override def body(in: InternalRow): Body = {
+    case m: GraftMemMorTable => m.rewriteFiles(in.getLong(1))
+  }
+  override def wrongFlavour(tbl: String): Exception =
+    new IllegalArgumentException(s"${name()}: '$tbl' is copy-on-write — " +
+      "file rewrite applies to merge-on-read tables")
 }
 
 /** `graftmem.system.rewrite_sort(table, n_files)` — SORT-STRATEGY
@@ -1196,56 +1133,22 @@ private[sources] object RewriteFilesProcedure
   * min/max range-skipping needs. Returns (files_before, rows_sorted,
   * files_after).
   */
-private[sources] object RewriteSortProcedure
-    extends org.apache.spark.sql.connector.catalog.procedures
-      .UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures._
-  import org.apache.spark.sql.types.{IntegerType, LongType => LT, StringType, StructField, StructType => ST}
-
-  override def name(): String = "rewrite_sort"
-  override def description(): String =
+private[sources] object RewriteSortProcedure extends GraftProcedure(
+    "rewrite_sort",
     "rewrite a merge-on-read table's live set sorted by the lead " +
-      "column into n_files disjoint-range files"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "rewrite_sort"
-      override def description(): String =
-        RewriteSortProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] =
-        Array(ProcedureParameter.in("table", StringType).build(),
-          ProcedureParameter.in("n_files", IntegerType).build())
-      override def isDeterministic: Boolean = false
-      private val outSchema = ST(Seq(
-        StructField("files_before", LT, nullable = false),
-        StructField("rows_sorted", LT, nullable = false),
-        StructField("files_after", LT, nullable = false)))
-      override def call(input: InternalRow)
-          : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val nFiles = input.getInt(1)
-        require(nFiles >= 1,
-          s"rewrite_sort: n_files must be >= 1, got $nFiles")
-        GraftMemCatalog.lookup(tbl) match {
-          case m: GraftMemMorTable =>
-            val (before, moved, after) = m.rewriteSort(nFiles)
-            val row: InternalRow = InternalRow(before, moved, after)
-            val scan: org.apache.spark.sql.connector.read.Scan =
-              new org.apache.spark.sql.connector.read.LocalScan {
-                override def rows(): Array[InternalRow] = Array(row)
-                override def readSchema(): StructType = outSchema
-                override def description(): String =
-                  s"rewrite_sort($tbl, $nFiles)"
-              }
-            java.util.Collections.singletonList(scan).iterator()
-          case null => throw new IllegalArgumentException(
-            s"rewrite_sort: no graftmem table named '$tbl'")
-          case _ => throw new IllegalArgumentException(
-            s"rewrite_sort: '$tbl' is copy-on-write — sort rewrite " +
-              "applies to merge-on-read tables")
-        }
-      }
-    }
+      "column into n_files disjoint-range files",
+    Seq("table" -> StringType, "n_files" -> IntegerType),
+    Seq("files_before" -> LongType, "rows_sorted" -> LongType,
+      "files_after" -> LongType)) {
+  override def check(in: InternalRow): Unit =
+    require(in.getInt(1) >= 1,
+      s"${name()}: n_files must be >= 1, got ${in.getInt(1)}")
+  override def body(in: InternalRow): Body = {
+    case m: GraftMemMorTable => m.rewriteSort(in.getInt(1))
+  }
+  override def wrongFlavour(tbl: String): Exception =
+    new IllegalArgumentException(s"${name()}: '$tbl' is copy-on-write — " +
+      "sort rewrite applies to merge-on-read tables")
 }
 
 /** `graftmem.system.expire_changelog(table, from_version)` —
@@ -1257,55 +1160,21 @@ private[sources] object RewriteSortProcedure
   * untouched); reads reaching below the floor fail loudly. Returns
   * (pruned_entries, retained_entries, floor_version).
   */
-private[sources] object ExpireChangelogProcedure
-    extends org.apache.spark.sql.connector.catalog.procedures
-      .UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures._
-  import org.apache.spark.sql.types.{LongType => LT, StringType, StructField, StructType => ST}
-
-  override def name(): String = "expire_changelog"
-  override def description(): String =
+private[sources] object ExpireChangelogProcedure extends GraftProcedure(
+    "expire_changelog",
     "prune a merge-on-read table's change-feed history below a " +
-      "commit version"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "expire_changelog"
-      override def description(): String =
-        ExpireChangelogProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] =
-        Array(ProcedureParameter.in("table", StringType).build(),
-          ProcedureParameter.in("from_version", LT).build())
-      override def isDeterministic: Boolean = false
-      private val outSchema = ST(Seq(
-        StructField("pruned_entries", LT, nullable = false),
-        StructField("retained_entries", LT, nullable = false),
-        StructField("floor_version", LT, nullable = false)))
-      override def call(input: InternalRow)
-          : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val fromVersion = input.getLong(1)
-        require(fromVersion >= 1L,
-          s"expire_changelog: from_version must be >= 1, got $fromVersion")
-        GraftMemCatalog.lookup(tbl) match {
-          case m: GraftMemMorTable =>
-            val (pruned, retained, floor) = m.expireChangelog(fromVersion)
-            val row: InternalRow = InternalRow(pruned, retained, floor)
-            val scan: org.apache.spark.sql.connector.read.Scan =
-              new org.apache.spark.sql.connector.read.LocalScan {
-                override def rows(): Array[InternalRow] = Array(row)
-                override def readSchema(): StructType = outSchema
-                override def description(): String =
-                  s"expire_changelog($tbl, $fromVersion)"
-              }
-            java.util.Collections.singletonList(scan).iterator()
-          case null => throw new IllegalArgumentException(
-            s"expire_changelog: no graftmem table named '$tbl'")
-          case _ => throw new IllegalArgumentException(
-            s"expire_changelog: '$tbl' keeps no change log")
-        }
-      }
-    }
+      "commit version",
+    Seq("table" -> StringType, "from_version" -> LongType),
+    Seq("pruned_entries" -> LongType, "retained_entries" -> LongType,
+      "floor_version" -> LongType)) {
+  override def check(in: InternalRow): Unit =
+    require(in.getLong(1) >= 1L,
+      s"${name()}: from_version must be >= 1, got ${in.getLong(1)}")
+  override def body(in: InternalRow): Body = {
+    case m: GraftMemMorTable => m.expireChangelog(in.getLong(1))
+  }
+  override def wrongFlavour(tbl: String): Exception =
+    new IllegalArgumentException(s"${name()}: '$tbl' keeps no change log")
 }
 
 /** `db.tbl__changes` — the CHANGE-FEED metadata table over a
@@ -1403,7 +1272,7 @@ private[sources] class MorChangesTable(parent: GraftMemMorTable)
 }
 
 private[sources] object MorChangesTable {
-  import org.apache.spark.sql.types.{StringType, StructField}
+  import org.apache.spark.sql.types.StructField
 
   private[sources] def schemaFor(parent: GraftMemMorTable): StructType =
     StructType(parent.schema().fields.toSeq ++ Seq(

@@ -5,7 +5,7 @@ import java.util
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** TIME TRAVEL over graftmem tables (b84) — the lakehouse snapshot
@@ -211,7 +211,7 @@ private[sources] class GraftMemSnapshotTable(parentName: String,
   */
 private[sources] class GraftHistoryTable(parent: Table
     with GraftSnapshotHistory) extends Table with SupportsRead {
-  import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StructField}
+  import org.apache.spark.sql.types.{BooleanType, StructField}
 
   override def name(): String = parent.name() + "__history"
   override def schema(): StructType = StructType(Seq(
@@ -262,56 +262,20 @@ private[sources] case class GraftHistoryPartition(rows: Array[InternalRow])
   * per-commit cap both skip tagged versions. Returns (tag, version)
   * as the CALL's result set.
   */
-private[sources] object CreateTagProcedure
-    extends org.apache.spark.sql.connector.catalog.procedures
-      .UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures._
-  import org.apache.spark.sql.types.{LongType => LT, StringType, StructField, StructType => ST}
-
-  override def name(): String = "create_tag"
-  override def description(): String =
+private[sources] object CreateTagProcedure extends GraftProcedure(
+    "create_tag",
     "name a retained snapshot; the tag resolves via VERSION AS OF " +
-      "and pins the snapshot through retention"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "create_tag"
-      override def description(): String =
-        CreateTagProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] =
-        Array(ProcedureParameter.in("table", StringType).build(),
-          ProcedureParameter.in("tag", StringType).build(),
-          ProcedureParameter.in("version", LT).build())
-      override def isDeterministic: Boolean = false
-      private val outSchema = ST(Seq(
-        StructField("tag", StringType, nullable = false),
-        StructField("version", LT, nullable = false)))
-      override def call(input: InternalRow)
-          : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val tag = input.getUTF8String(1).toString
-        val version = input.getLong(2)
-        GraftMemCatalog.lookup(tbl) match {
-          case h: GraftSnapshotHistory =>
-            h.createTag(tag, version)
-            val row: InternalRow = InternalRow(
-              org.apache.spark.unsafe.types.UTF8String.fromString(tag),
-              version)
-            val scan: org.apache.spark.sql.connector.read.Scan =
-              new org.apache.spark.sql.connector.read.LocalScan {
-                override def rows(): Array[InternalRow] = Array(row)
-                override def readSchema(): StructType = outSchema
-                override def description(): String =
-                  s"create_tag($tbl, $tag, $version)"
-              }
-            java.util.Collections.singletonList(scan).iterator()
-          case null => throw new IllegalArgumentException(
-            s"create_tag: no graftmem table named '$tbl'")
-          case _ => throw new IllegalArgumentException(
-            s"create_tag: '$tbl' keeps no snapshot history")
-        }
-      }
-    }
+      "and pins the snapshot through retention",
+    Seq("table" -> StringType, "tag" -> StringType, "version" -> LongType),
+    Seq("tag" -> StringType, "version" -> LongType)) {
+  override def body(in: InternalRow): Body = {
+    case h: GraftSnapshotHistory =>
+      h.createTag(in.getString(1), in.getLong(2))
+      (in.getString(1), in.getLong(2))
+  }
+  override def wrongFlavour(tbl: String): Exception =
+    new IllegalArgumentException(
+      s"${name()}: '$tbl' keeps no snapshot history")
 }
 
 /** `graftmem.system.rollback(table, version)` — ROLLBACK / RESTORE
@@ -325,56 +289,24 @@ private[sources] object CreateTagProcedure
   * rather than silently inconsistent. Returns (restored_version,
   * live_rows, current_version) as the CALL's result set.
   */
-private[sources] object RollbackProcedure
-    extends org.apache.spark.sql.connector.catalog.procedures
-      .UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures._
-  import org.apache.spark.sql.types.{LongType => LT, StringType, StructField, StructType => ST}
-
-  override def name(): String = "rollback"
-  override def description(): String =
+private[sources] object RollbackProcedure extends GraftProcedure(
+    "rollback",
     "restore a table to a retained snapshot as a new commit; " +
-      "history is preserved"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "rollback"
-      override def description(): String =
-        RollbackProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] =
-        Array(ProcedureParameter.in("table", StringType).build(),
-          ProcedureParameter.in("version", LT).build())
-      override def isDeterministic: Boolean = false
-      private val outSchema = ST(Seq(
-        StructField("restored_version", LT, nullable = false),
-        StructField("live_rows", LT, nullable = false),
-        StructField("current_version", LT, nullable = false)))
-      override def call(input: InternalRow)
-          : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val version = input.getLong(1)
-        GraftMemCatalog.lookup(tbl) match {
-          case g: GraftMemTable =>
-            val (liveRows, cur) = g.rollbackTo(version)
-            val row: InternalRow = InternalRow(version, liveRows, cur)
-            val scan: org.apache.spark.sql.connector.read.Scan =
-              new org.apache.spark.sql.connector.read.LocalScan {
-                override def rows(): Array[InternalRow] = Array(row)
-                override def readSchema(): StructType = outSchema
-                override def description(): String =
-                  s"rollback($tbl, $version)"
-              }
-            java.util.Collections.singletonList(scan).iterator()
-          case null => throw new IllegalArgumentException(
-            s"rollback: no graftmem table named '$tbl'")
-          case _ => throw new UnsupportedOperationException(
-            s"rollback: '$tbl' is not a copy-on-write graftmem table " +
-              "(the merge-on-read flavor's ledger/lineage/changelog " +
-              "cannot be rolled back consistently — compact, then " +
-              "restore through an explicit rewrite)")
-        }
-      }
-    }
+      "history is preserved",
+    Seq("table" -> StringType, "version" -> LongType),
+    Seq("restored_version" -> LongType, "live_rows" -> LongType,
+      "current_version" -> LongType)) {
+  override def body(in: InternalRow): Body = {
+    case g: GraftMemTable =>
+      val (liveRows, cur) = g.rollbackTo(in.getLong(1))
+      (in.getLong(1), liveRows, cur)
+  }
+  override def wrongFlavour(tbl: String): Exception =
+    new UnsupportedOperationException(
+      s"${name()}: '$tbl' is not a copy-on-write graftmem table " +
+        "(the merge-on-read flavor's ledger/lineage/changelog " +
+        "cannot be rolled back consistently — compact, then " +
+        "restore through an explicit rewrite)")
 }
 
 /** `graftmem.system.clone_table(src, dst)` — SHALLOW CLONE (b105,
@@ -385,73 +317,36 @@ private[sources] object RollbackProcedure
   * which the two tables evolve INDEPENDENTLY. Copy-on-write flavor
   * only. Returns (cloned_rows, src_version) as the CALL's result set.
   */
-private[sources] object CloneTableProcedure
-    extends org.apache.spark.sql.connector.catalog.procedures
-      .UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures._
-  import org.apache.spark.sql.types.{LongType => LT, StringType, StructField, StructType => ST}
-
-  override def name(): String = "clone_table"
-  override def description(): String =
+private[sources] object CloneTableProcedure extends GraftProcedure(
+    "clone_table",
     "shallow-clone a table's current snapshot into a new table " +
-      "(zero-copy; independent histories after the clone)"
-
+      "(zero-copy; independent histories after the clone)",
+    Seq("src" -> StringType, "dst" -> StringType, "version" -> LongType),
+    Seq("cloned_rows" -> LongType, "src_version" -> LongType)) {
   /** Two arities: (src, dst) clones the HEAD; (src, dst, version)
     * clones a retained snapshot — the `CLONE ... VERSION AS OF` face.
     * The bind branches on the CALL's input shape, the way a real
     * procedure catalog resolves overloads.
     */
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      private val versioned = inputType.fields.length >= 3
-      override def name(): String = "clone_table"
-      override def description(): String =
-        CloneTableProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = {
-        val base = Array(ProcedureParameter.in("src", StringType).build(),
-          ProcedureParameter.in("dst", StringType).build())
-        if (versioned)
-          base :+ ProcedureParameter.in("version", LT).build()
-        else base
+  override def arity(inputType: StructType): Int =
+    if (inputType.fields.length >= 3) 3 else 2
+  override def body(in: InternalRow): Body = {
+    case g: GraftMemTable =>
+      val dst = in.getString(1)
+      val version = if (in.numFields >= 3) Some(in.getLong(2)) else None
+      // clone under the source lock, register after — a racing
+      // CREATE of dst loses to putIfAbsent, loudly
+      val (t, srcVer) = g.synchronized {
+        (g.cloneInto(dst, version), version.getOrElse(g.commitVersion))
       }
-      override def isDeterministic: Boolean = false
-      private val outSchema = ST(Seq(
-        StructField("cloned_rows", LT, nullable = false),
-        StructField("src_version", LT, nullable = false)))
-      override def call(input: InternalRow)
-          : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-        val src = input.getUTF8String(0).toString
-        val dst = input.getUTF8String(1).toString
-        val version: Option[Long] =
-          if (versioned) Some(input.getLong(2)) else None
-        GraftMemCatalog.lookup(src) match {
-          case g: GraftMemTable =>
-            // clone under the source lock, register after — a racing
-            // CREATE of dst loses to putIfAbsent, loudly
-            val (t, srcVer) = g.synchronized {
-              (g.cloneInto(dst, version),
-                version.getOrElse(g.commitVersion))
-            }
-            GraftMemCatalog.register(dst, t)
-            val row: InternalRow =
-              InternalRow(t.rows.length.toLong, srcVer)
-            val scan: org.apache.spark.sql.connector.read.Scan =
-              new org.apache.spark.sql.connector.read.LocalScan {
-                override def rows(): Array[InternalRow] = Array(row)
-                override def readSchema(): StructType = outSchema
-                override def description(): String =
-                  s"clone_table($src, $dst)"
-              }
-            java.util.Collections.singletonList(scan).iterator()
-          case null => throw new IllegalArgumentException(
-            s"clone_table: no graftmem table named '$src'")
-          case _ => throw new UnsupportedOperationException(
-            s"clone_table: '$src' is not a copy-on-write graftmem " +
-              "table (clone the merge-on-read flavor by compacting " +
-              "into a fresh table)")
-        }
-      }
-    }
+      GraftMemCatalog.register(dst, t)
+      (t.rows.length.toLong, srcVer)
+  }
+  override def wrongFlavour(tbl: String): Exception =
+    new UnsupportedOperationException(
+      s"${name()}: '$tbl' is not a copy-on-write graftmem " +
+        "table (clone the merge-on-read flavor by compacting " +
+        "into a fresh table)")
 }
 
 /** `graftmem.system.expire_snapshots(table, keep_last)` — snapshot
@@ -463,52 +358,19 @@ private[sources] object CloneTableProcedure
   * files — and returns (expired, retained, current_version) as the
   * CALL's result set.
   */
-private[sources] object ExpireSnapshotsProcedure
-    extends org.apache.spark.sql.connector.catalog.procedures
-      .UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures._
-  import org.apache.spark.sql.types.{IntegerType, LongType => LT, StringType, StructField, StructType => ST}
-
-  override def name(): String = "expire_snapshots"
-  override def description(): String =
-    "drop all but the most recent keep_last snapshots of a table"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "expire_snapshots"
-      override def description(): String =
-        ExpireSnapshotsProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] =
-        Array(ProcedureParameter.in("table", StringType).build(),
-          ProcedureParameter.in("keep_last", IntegerType).build())
-      override def isDeterministic: Boolean = false
-      private val outSchema = ST(Seq(
-        StructField("expired", LT, nullable = false),
-        StructField("retained", LT, nullable = false),
-        StructField("current_version", LT, nullable = false)))
-      override def call(input: InternalRow)
-          : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val keep = input.getInt(1)
-        require(keep >= 1,
-          s"expire_snapshots: keep_last must be >= 1, got $keep")
-        GraftMemCatalog.lookup(tbl) match {
-          case h: GraftSnapshotHistory =>
-            val (expired, retained, cur) = h.expireSnapshots(keep)
-            val row: InternalRow = InternalRow(expired, retained, cur)
-            val scan: org.apache.spark.sql.connector.read.Scan =
-              new org.apache.spark.sql.connector.read.LocalScan {
-                override def rows(): Array[InternalRow] = Array(row)
-                override def readSchema(): StructType = outSchema
-                override def description(): String =
-                  s"expire_snapshots($tbl, $keep)"
-              }
-            java.util.Collections.singletonList(scan).iterator()
-          case null => throw new IllegalArgumentException(
-            s"expire_snapshots: no graftmem table named '$tbl'")
-          case _ => throw new IllegalArgumentException(
-            s"expire_snapshots: '$tbl' keeps no snapshot history")
-        }
-      }
-    }
+private[sources] object ExpireSnapshotsProcedure extends GraftProcedure(
+    "expire_snapshots",
+    "drop all but the most recent keep_last snapshots of a table",
+    Seq("table" -> StringType, "keep_last" -> IntegerType),
+    Seq("expired" -> LongType, "retained" -> LongType,
+      "current_version" -> LongType)) {
+  override def check(in: InternalRow): Unit =
+    require(in.getInt(1) >= 1,
+      s"${name()}: keep_last must be >= 1, got ${in.getInt(1)}")
+  override def body(in: InternalRow): Body = {
+    case h: GraftSnapshotHistory => h.expireSnapshots(in.getInt(1))
+  }
+  override def wrongFlavour(tbl: String): Exception =
+    new IllegalArgumentException(
+      s"${name()}: '$tbl' keeps no snapshot history")
 }

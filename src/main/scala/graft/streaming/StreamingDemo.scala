@@ -1462,10 +1462,7 @@ object StreamingDemo {
         "('graft.row_level' = 'merge-on-read', 'graft.mor.deletes' = 'equality')"
       else "(key BIGINT, bal_cents BIGINT) " +
         "TBLPROPERTIES ('graft.row_level' = 'merge-on-read')")
-    graft.util.Tables.customer(s, d)
-      .selectExpr("c_custkey AS key",
-        "CAST(floor(c_acctbal * 100) AS BIGINT) AS bal_cents")
-      .writeTo(tbl).append() // v1
+    graft.operators.TierB.accounts(s, d).writeTo(tbl).append() // v1
     graft.operators.TierB.runCdcMergeRound(s, d, tag, tbl) // v2
     tbl
   }

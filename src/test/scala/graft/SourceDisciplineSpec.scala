@@ -85,4 +85,20 @@ class SourceDisciplineSpec extends AnyFunSuite {
     assert(sites == Seq("DemoTables.scala"),
       s"graftmem catalog literal outside DemoTables: $sites")
   }
+
+  test("src/main wires a CALL procedure in exactly one place: GraftProcedure") {
+    // the graftmem procedures declare only their name, columns, checks
+    // and body; binding, the table lookup and the one-row result set
+    // are written once, so a hand-rolled copy cannot drift from the
+    // CALL contract GraftMemProcedureSpec pins
+    for (wiring <- Seq("new BoundProcedure", "read.LocalScan {",
+        "UnboundProcedure {")) {
+      val sites = for ((path, text) <- mainSources;
+                       _ <- scala.util.matching.Regex.quote(wiring).r
+                         .findAllIn(text))
+        yield new java.io.File(path).getName
+      assert(sites == Seq("GraftMemCatalog.scala"),
+        s"'$wiring' must appear once, in GraftProcedure: $sites")
+    }
+  }
 }

@@ -158,19 +158,14 @@ class Round14OptSpec extends SparkSpec {
     *    c67's LIMIT 13 term rank. Bounded by the limits.
     *  - c73_mixture_sample: Σw over the per-source table. Bounded by the
     *    source count.
+    *  - c75_curation_ensemble and c76_quality_mixture: the per-source
+    *    thresholds or Σw. Bounded by the source count.
     *  - b95_row_lineage: `row_number() OVER (ORDER BY c_custkey)` over
     *    the whole customer table. GROWS with the corpus.
-    *  - c41_lm_surprisal and c55_perplexity_bucket: the corpus total over
-    *    the word-count table (TierC's `unigramSurprisal`). Vocabulary-
-    *    sized, so it GROWS with the corpus (sublinearly).
-    *  - c49_dsir_importance: four totals over the joined word-count
-    *    tables. Vocabulary-sized: GROWS with the corpus.
-    *  - c75_curation_ensemble and c76_quality_mixture: the per-source
-    *    thresholds or Σw (bounded by the source count), plus
-    *    `unigramSurprisal`'s vocabulary total, which GROWS.
+    * The vocabulary totals of c41, c49, c55, c75 and c76 are one-row
+    * aggregates collected as literals, so they run no window.
     */
-  private val knownGlobalWindows = Set("b95_row_lineage", "c41_lm_surprisal",
-    "c49_dsir_importance", "c55_perplexity_bucket", "c67_bm25",
+  private val knownGlobalWindows = Set("b95_row_lineage", "c67_bm25",
     "c70_hybrid_rrf", "c73_mixture_sample", "c75_curation_ensemble",
     "c76_quality_mixture")
 
