@@ -1,8 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Developer main on the bench's session ([[GraftSession]];
   * `SPARK_GRAFT_SF_DIR` picks the corpus, `SPARK_GRAFT_CPUS` the cores,
@@ -49,37 +48,19 @@ object Dev {
 
   private def explain(spark: SparkSession, sfDir: String,
       names: Seq[String]): Unit = {
-    // The commands run inside a query function report on the async
-    // listener bus. Each one is attributed by its QueryExecution id:
-    // ids grow with every plan the session creates, so a query's
-    // commands fall between the id marked before its function and the
-    // next query's mark.
-    val commands = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, String)]()
-    spark.listenerManager.register(new QueryExecutionListener {
-      override def onSuccess(
-          funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        commands.add((qe.id, funcName, qe.explainString(FormattedMode)))
-      override def onFailure(
-          funcName: String, qe: QueryExecution, error: Exception): Unit = ()
-    })
-    val returned = names.map { name =>
-      val mark = spark.range(0).queryExecution.id
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      (name, mark, df.queryExecution.explainString(FormattedMode))
-    }
-    // stop() drains the listener bus, so every command has reported
-    spark.stop()
-    val bounds = returned.map(_._2) :+ Long.MaxValue
-    import scala.jdk.CollectionConverters._
-    val byId = commands.asScala.toSeq.sortBy(_._1)
-    returned.zip(bounds.tail).foreach { case ((name, mark, plan), next) =>
+    for (name <- names) {
+      val (plan, commands) = graft.util.PlanCapture(spark)(
+          (funcName, qe) => (funcName, qe.explainString(FormattedMode))) {
+        SparkEntry.queries(name)(spark, sfDir).queryExecution
+          .explainString(FormattedMode)
+      }
       println(s"########## $name: returned DataFrame ##########")
       println(plan)
-      byId.filter { case (id, _, _) => id > mark && id < next }
-        .zipWithIndex.foreach { case ((_, funcName, cmd), i) =>
-          println(s"########## $name: command ${i + 1} ($funcName) ##########")
-          println(cmd)
-        }
+      commands.zipWithIndex.foreach { case ((funcName, cmd), i) =>
+        println(s"########## $name: command ${i + 1} ($funcName) ##########")
+        println(cmd)
+      }
     }
+    spark.stop()
   }
 }

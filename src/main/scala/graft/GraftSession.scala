@@ -63,7 +63,7 @@ object GraftSession {
       // tables reporting EXACT SupportsReportStatistics row counts (no
       // estimate risk), but not all: at sf0.001 b39 asks for SHJ by
       // hint, and b45, c18, c33, c65, c70 and c80 get a static SHJ over
-      // a parquet or RDD size estimate. Round14OptSpec's census pins
+      // a parquet or RDD size estimate. QueriesSmokeSpec's census pins
       // that set, so a new estimated build side fails loudly.
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",

@@ -274,7 +274,7 @@ object TierA {
   /** a26: custom DataSource V2 in a declared query — the generated
     * (id, md5(id)) pair table with the `id >= 9000` bound PUSHED into
     * the source (it narrows the generated range itself; no post-scan
-    * filter remains — plan-asserted in SourcesSpec). See
+    * filter remains — plan-asserted in PairGenSourceSpec). See
     * [[graft.sources.PairGenSource]].
     */
   private def a26(spark: SparkSession, d: String): DataFrame =

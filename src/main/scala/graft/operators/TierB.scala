@@ -2993,7 +2993,7 @@ object TierB {
     // bounded 1-row agg (the A9 class): the re-keying offset (empty
     // corpus → 1, every generation filter then selects nothing)
     val off = cust.agg(coalesce(max(col("key")), lit(0L)))
-      .head.getLong(0) + 1L
+      .head().getLong(0) + 1L
     s.sql(s"ALTER TABLE $tbl ADD COLUMNS (" +
       "cnt INT DEFAULT 7, scratch BIGINT DEFAULT 1)") // v2, v3
     cust.filter(col("key") % 10 === 0)
@@ -3121,7 +3121,7 @@ object TierB {
     val cust = accounts(s, d, "c_custkey % 5 AS g")
     cust.writeTo(tbl).append() // v1: the legacy (unpartitioned) gen
     val off = cust.agg(coalesce(max(col("key")), lit(0L)))
-      .head.getLong(0) + 1L
+      .head().getLong(0) + 1L
     s.sql(s"CALL graftmem.system.set_partition(" +
       s"'${tbl.stripPrefix("graftmem.")}', 'g')").collect() // v2
     cust.select((col("key") + off).as("key"), col("g"),
@@ -3225,7 +3225,7 @@ object TierB {
     runCdcMergeRound(s, d, "b105", dst)
     // …and a re-keyed append lands on the SOURCE only
     val off = cust.agg(coalesce(max(col("key")), lit(0L)))
-      .head.getLong(0) + 1L
+      .head().getLong(0) + 1L
     cust.filter(col("key") % 100 === 50)
       .select((col("key") + off).as("key"),
         (col("bal_cents") + 123L).as("bal_cents"))

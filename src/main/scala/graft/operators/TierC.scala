@@ -72,6 +72,11 @@ object TierC {
     }
   }
 
+  /** Test hook: forget every materialized index, so the next consumer
+    * of each rebuilds it.
+    */
+  private[graft] def dropIndexMemo(): Unit = idxMemo.clear()
+
   /** The (doc_id, shingle) index, materialized once per corpus. */
   private def shingleIndex(s: SparkSession, d: String): DataFrame =
     memoIdx(s, d, "sh")(shingleRows(s, documents(s, d)).localCheckpoint(false))
@@ -232,7 +237,7 @@ object TierC {
         val selected = mutable.ArrayBuffer.empty[(Long, Array[Float])]
         val out = mutable.ArrayBuffer.empty[(Long, Long, Long, Double,
           Double)]
-        val remaining = mutable.ArrayBuffer(cands: _*)
+        val remaining = mutable.ArrayBuffer.from(cands)
         var rank = 1L
         while (rank <= k && remaining.nonEmpty) {
           var bestIdx = -1

@@ -365,7 +365,7 @@ class GraftMemCatalog extends TableCatalog with FunctionCatalog
         case _ => Set.empty
       }
       var sim: Vector[(String, org.apache.spark.sql.types.DataType)] =
-        t.schema().fields.toVector.map(f => (f.name, f.dataType))
+        t.columns().toVector.map(c => (c.name(), c.dataType()))
       alts.foreach {
         case Add(c, dt, _) =>
           require(!sim.exists(_._1 == c),
@@ -413,13 +413,6 @@ class GraftMemCatalog extends TableCatalog with FunctionCatalog
   private def key(ident: Identifier): String =
     (ident.namespace() :+ ident.name()).mkString(".")
 
-  /** FUNCTION CATALOG face (b76): catalog-resolved functions — one
-    * definition every session sees, vs the per-session function
-    * registry. `cosine_sim` here IS the native Expression's kernel
-    * ([[graft.functions.CosineSimV2]] shares
-    * `graft.functions.CosineSim.compute`), so the two surfaces are
-    * bit-identical by construction.
-    */
   /** PROCEDURE CATALOG face (b82): table-maintenance actions as
     * catalog-governed SQL `CALL`s — `CALL graftmem.system
     * .compact('db.tbl')` folds a merge-on-read table's delta log into
@@ -520,6 +513,13 @@ class GraftMemCatalog extends TableCatalog with FunctionCatalog
     declared || inNs.nonEmpty
   }
 
+  /** FUNCTION CATALOG face (b76): catalog-resolved functions — one
+    * definition every session sees, vs the per-session function
+    * registry. `cosine_sim` here IS the native Expression's kernel
+    * ([[graft.functions.CosineSimV2]] shares
+    * `graft.functions.CosineSim.compute`), so the two surfaces are
+    * bit-identical by construction.
+    */
   override def listFunctions(namespace: Array[String]): Array[Identifier] =
     Array(Identifier.of(namespace, "cosine_sim"),
       Identifier.of(namespace, "kmv_distinct"))
@@ -655,11 +655,6 @@ private[sources] abstract class GraftProcedure(procName: String,
     }
 }
 
-/** Row payload shipped between driver and executors: externalized
-  * values (Long / String), avoiding InternalRow serialization rules.
-  * Only the types the demo schema uses are supported; unsupported
-  * types fail loudly at write time.
-  */
 private[sources] class GraftMemTable(val fullName: String,
     tblSchema: StructType, val partitionCol: Option[String] = None,
     val writeLayout: Seq[String] = Nil,
@@ -1647,6 +1642,12 @@ private[sources] class GraftMemScanBuilder(table: GraftMemTable,
   }
 }
 
+/** Row payload a scan split ships to the executors: the split's
+  * stored rows as externalized cells ([[GraftCell]]), avoiding
+  * InternalRow serialization rules; [[GraftMemCommit]] carries a write
+  * task's rows back the same way. Only the types [[GraftCell]]
+  * supports are stored; others fail loudly at write time.
+  */
 private[sources] case class GraftMemPartition(data: Vector[Array[Any]],
     groupVal: Long = 0L)
     extends InputPartition

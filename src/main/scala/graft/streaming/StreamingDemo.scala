@@ -571,7 +571,7 @@ object StreamingDemo {
     val sigRows = graft.operators.TierC.minhashSignatures(s, src)
       .select(col("band"), col("minhash").as("sig"), col("doc_id"))
       .as[SigRow]
-    val verdicts = sigRows.groupByKey(r => r.band + ":" + r.sig)
+    val verdicts = sigRows.groupByKey(r => s"${r.band}:${r.sig}")
       .transformWithState(new LshClaimProcessor(),
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Append())
@@ -1012,7 +1012,7 @@ object StreamingDemo {
     // a session snapshotted in batch N and grown/closed in batch N+1
     // appears more than once with the same session_id: keep the most
     // complete row (cnt only ever grows; start is fixed; last grows)
-    runToFiles(s, "d6", sessions.toDF)
+    runToFiles(s, "d6", sessions.toDF())
       .groupBy("user_id", "session_id")
       .agg(max("cnt").as("cnt"), min("start_s").as("start_s"),
         max("end_s").as("end_s"))

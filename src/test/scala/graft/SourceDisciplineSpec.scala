@@ -8,16 +8,23 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SourceDisciplineSpec extends AnyFunSuite {
 
-  private def mainSources: Seq[(String, String)] = {
+  private def sources(dir: String): Seq[(String, String)] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f)
       else Seq.empty
-    walk(new java.io.File("src/main/scala")).map { f =>
+    walk(new java.io.File(dir)).map { f =>
       f.getPath -> new String(
         java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
     }
   }
+  private def mainSources = sources("src/main/scala")
+  private def testSources = sources("src/test/scala")
+
+  /** The file names, in walk order, of every match of `pattern`. */
+  private def sites(files: Seq[(String, String)], pattern: String): Seq[String] =
+    for ((path, text) <- files; _ <- pattern.r.findAllIn(text))
+      yield new java.io.File(path).getName
 
   test("no global-order window (Window.orderBy without partitionBy) in src/main") {
     // `Window.orderBy(...)` with no partitionBy funnels the ENTIRE
@@ -47,21 +54,17 @@ class SourceDisciplineSpec extends AnyFunSuite {
     // every bounded stream starts, drains and stops through one runner,
     // so the stream-partition scope and the stop-in-finally cannot be
     // forgotten by a hand-rolled copy
-    val sites = for ((path, text) <- mainSources;
-                     _ <- "processAllAvailable\\s*\\(".r.findAllIn(text))
-      yield new java.io.File(path).getName
-    assert(sites == Seq("StreamingDemo.scala"),
-      s"processAllAvailable( must appear once, in StreamingDemo.drain: $sites")
+    val drains = sites(mainSources, "processAllAvailable\\s*\\(")
+    assert(drains == Seq("StreamingDemo.scala"),
+      s"processAllAvailable( must appear once, in StreamingDemo.drain: $drains")
   }
 
   test("src/main builds a SparkSession in exactly one place: GraftSession") {
     // one session conf for Bench, Verify, Dev and the test fixture — six
     // builders once drifted apart until the oracle no longer checked
     // the plans the bench timed
-    val builders = for ((path, text) <- mainSources;
-                        _ <- "SparkSession\\s*\\.\\s*builder\\s*\\(".r.findAllIn(text))
-      yield path
-    assert(builders.map(new java.io.File(_).getName) == Seq("GraftSession.scala"),
+    val builders = sites(mainSources, "SparkSession\\s*\\.\\s*builder\\s*\\(")
+    assert(builders == Seq("GraftSession.scala"),
       s"SparkSession.builder( outside GraftSession: $builders")
   }
 
@@ -70,20 +73,16 @@ class SourceDisciplineSpec extends AnyFunSuite {
     // every key back (or unsets it) even when the body throws; a
     // hand-rolled save/set/restore can leak a planner flag into every
     // later query on the shared session
-    val setters = for ((path, text) <- mainSources;
-                       _ <- "conf\\s*\\.\\s*(set|unset)\\s*\\(".r.findAllIn(text))
-      yield new java.io.File(path).getName
+    val setters = sites(mainSources, "conf\\s*\\.\\s*(set|unset)\\s*\\(")
     assert(setters.toSet.subsetOf(Set("GraftConf.scala", "DemoTables.scala")),
       s"conf.set( / conf.unset( outside GraftConf and DemoTables: $setters")
   }
 
   test("src/main registers the graftmem catalog only in DemoTables") {
     // one registration, next to the one per-corpus table suffix
-    val sites = for ((path, text) <- mainSources;
-                     _ <- "\"spark.sql.catalog.graftmem\"".r.findAllIn(text))
-      yield new java.io.File(path).getName
-    assert(sites == Seq("DemoTables.scala"),
-      s"graftmem catalog literal outside DemoTables: $sites")
+    val literals = sites(mainSources, "\"spark.sql.catalog.graftmem\"")
+    assert(literals == Seq("DemoTables.scala"),
+      s"graftmem catalog literal outside DemoTables: $literals")
   }
 
   test("src/main wires a CALL procedure in exactly one place: GraftProcedure") {
@@ -93,12 +92,46 @@ class SourceDisciplineSpec extends AnyFunSuite {
     // CALL contract GraftMemProcedureSpec pins
     for (wiring <- Seq("new BoundProcedure", "read.LocalScan {",
         "UnboundProcedure {")) {
-      val sites = for ((path, text) <- mainSources;
-                       _ <- scala.util.matching.Regex.quote(wiring).r
-                         .findAllIn(text))
-        yield new java.io.File(path).getName
-      assert(sites == Seq("GraftMemCatalog.scala"),
-        s"'$wiring' must appear once, in GraftProcedure: $sites")
+      val wired = sites(mainSources, scala.util.matching.Regex.quote(wiring))
+      assert(wired == Seq("GraftMemCatalog.scala"),
+        s"'$wiring' must appear once, in GraftProcedure: $wired")
     }
+  }
+
+  test("every spec a src/main comment cites exists") {
+    // a comment that says a test pins an invariant must name a suite
+    // that is there to run: a renamed or never-written spec leaves the
+    // claim unchecked
+    val specFiles = testSources.map(p =>
+      new java.io.File(p._1).getName.stripSuffix(".scala")).toSet
+    val mainText = mainSources.map(_._2).mkString("\n")
+    def declaredInMain(name: String) =
+      s"(class|object|trait)\\s+$name\\b".r.findFirstIn(mainText).isDefined
+    // Spark's own types, named where the code implements their contract
+    val sparkTypes = Set("TimeTravelSpec", "PartialReducerPartitionSpec")
+    val missing = for ((path, text) <- mainSources;
+                       name <- "\\b[A-Z]\\w*Spec\\b".r.findAllIn(text)
+                       if !specFiles(name) && !declaredInMain(name) &&
+                         !sparkTypes(name))
+      yield s"${new java.io.File(path).getName}: $name"
+    assert(missing.isEmpty, s"src/main cites specs that do not exist: $missing")
+  }
+
+  test("query executions are listened to only by GraftProfiler and PlanCapture") {
+    // one capture of the plans a body runs, so Dev explain and the test
+    // census cannot drift into reading different plans
+    val registrations = sites(mainSources ++ testSources,
+      "listenerManager\\s*\\.\\s*register\\s*\\(")
+    assert(registrations.sorted == Seq("GraftProfiler.scala", "PlanCapture.scala"),
+      s"a QueryExecutionListener registered outside them: $registrations")
+  }
+
+  test("only the census and EmptyCorpusSpec walk every declared query in src/test") {
+    // every plan audit shares the census's one run of each query; a
+    // second walk doubles tier-1 time for one more check
+    val walks = sites(testSources,
+      "SparkEntry\\s*\\.\\s*queries\\s*\\.\\s*(toSeq|foreach|map|flatMap|iterator|values)\\b")
+    assert(walks.sorted == Seq("EmptyCorpusSpec.scala", "QueriesSmokeSpec.scala"),
+      s"src/test walks every declared query outside them: $walks")
   }
 }
