@@ -226,15 +226,11 @@ object TierA {
     * floor(sum/cnt) — every round is bit-reproducible in DuckDB, so the
     * full 3-round trajectory is oracled (assignment counts + inertia
     * against pre-update centroids + post-update centroid sums). Empty
-    * clusters keep their previous centroid. Knobs: `graft.kmeans.k`,
-    * `graft.kmeans.iters` (oracle assumes defaults 4 and 3).
+    * clusters keep their previous centroid. k = [[KMeansK]] clusters,
+    * [[KMeansIters]] rounds (the oracle unrolls exactly these).
     */
   private def a23(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val k = spark.conf.getOption("graft.kmeans.k").map(_.toInt).getOrElse(4)
-    val iters =
-      spark.conf.getOption("graft.kmeans.iters").map(_.toInt).getOrElse(3)
-    require(iters >= 1, s"a23 needs graft.kmeans.iters >= 1 (got $iters)")
     val dim = 64
     // checkpointed: the scan+quantize kernel feeds the seed collect plus
     // one IntLattice.round per training iteration
@@ -243,23 +239,23 @@ object TierA {
       .map { case (id, e) => (id, IntLattice.quantize(e)) }
       .localCheckpoint(false)
     val cents: Array[Array[Long]] =
-      q.filter(_._1 < k).collect().sortBy(_._1).map(_._2)
+      q.filter(_._1 < KMeansK).collect().sortBy(_._1).map(_._2)
     // Cluster index = seed array position, and the oracle keys clusters
     // by vec_id — a gap in vec_ids 0..k-1 would silently misalign them
     // (or throw ArrayIndexOutOfBounds below). Fail fast instead.
-    require(cents.length == k,
-      s"a23 expects seed vectors with vec_id 0..${k - 1}; found ${cents.length}")
+    require(cents.length == KMeansK,
+      s"a23 expects seed vectors with vec_id 0..${KMeansK - 1}; found ${cents.length}")
     // per cluster: (members, inertia vs pre-update centroid, new centroid)
     // CoreMR.iterate drives the rounds; the producer is one distributed
     // IntLattice.round pass (state stays O(k·dim) on the driver; the
     // oracle-sensitive tie/floor/empty-cluster rules live in IntLattice,
     // shared with c19's codebook training).
     val (_, stats) = CoreMR.iterate(
-      (cents, null: Array[(Long, Long, Array[Long])]), iters) {
+      (cents, null: Array[(Long, Long, Array[Long])]), KMeansIters) {
       case ((cur, _), _) =>
         val agg = IntLattice.round(q, cur, dim)
         val newCents = IntLattice.update(cur, agg, dim)
-        val roundStats = Array.tabulate(k) { c =>
+        val roundStats = Array.tabulate(KMeansK) { c =>
           val (cn, ir, _) = agg.getOrElse(c, (0L, 0L, null))
           (cn, ir, newCents(c))
         }
@@ -270,6 +266,10 @@ object TierA {
       .toSeq.toDF("cluster", "n_members", "inertia", "cent_sum")
       .orderBy("cluster")
   }
+
+  /** a23's cluster count and round count. */
+  private final val KMeansK = 4
+  private final val KMeansIters = 3
 
   /** a26: custom DataSource V2 in a declared query — the generated
     * (id, md5(id)) pair table with the `id >= 9000` bound PUSHED into
@@ -384,7 +384,7 @@ object TierA {
       " SELECT f.pid, f.f AS f_pbest, s.ps AS pbest_sum, (row_number() OVER (ORDER BY f.f, f.pid)) = 1 AS is_gbest FROM fpb3 f JOIN (SELECT pid, sum(px)::BIGINT AS ps FROM pb3 GROUP BY 1) s ON s.pid = f.pid ORDER BY f.pid"
   }
 
-  /** DuckDB unrolling of a23's 3 rounds — same integer arithmetic. */
+  /** DuckDB unrolling of a23's rounds — same integer arithmetic. */
   private val kmeansOracleSql: String = {
     def round(n: Int, prev: String): String =
       s"a$n AS (SELECT q0.vec_id, p.c, sum((q0.q - p.m)*(q0.q - p.m))::BIGINT AS dist FROM q0 JOIN $prev p USING (i) GROUP BY 1, 2), " +
@@ -392,11 +392,11 @@ object TierA {
         s"u$n AS (SELECT b$n.c, q0.i, floor(sum(q0.q)::DOUBLE / count(*))::BIGINT AS m FROM b$n JOIN q0 USING (vec_id) GROUP BY 1, 2), " +
         s"c$n AS (SELECT p.c, p.i, coalesce(u$n.m, p.m) AS m FROM $prev p LEFT JOIN u$n ON u$n.c = p.c AND u$n.i = p.i)"
     "WITH q0 AS (SELECT vec_id, i.i AS i, floor(embedding[i.i+1]::DOUBLE * 1024)::BIGINT AS q FROM embeddings, range(64) i(i)), " +
-      "c0 AS (SELECT vec_id AS c, i, q AS m FROM q0 WHERE vec_id < 4), " +
-      (1 to 3).map(n => round(n, if (n == 1) "c0" else s"c${n - 1}"))
+      s"c0 AS (SELECT vec_id AS c, i, q AS m FROM q0 WHERE vec_id < $KMeansK), " +
+      (1 to KMeansIters).map(n => round(n, if (n == 1) "c0" else s"c${n - 1}"))
         .mkString(", ") +
-      ", n AS (SELECT c, count(*)::BIGINT AS n_members, sum(dist)::BIGINT AS inertia FROM b3 GROUP BY 1)" +
-      ", s AS (SELECT c, sum(m)::BIGINT AS cent_sum FROM c3 GROUP BY 1) " +
+      s", n AS (SELECT c, count(*)::BIGINT AS n_members, sum(dist)::BIGINT AS inertia FROM b$KMeansIters GROUP BY 1)" +
+      s", s AS (SELECT c, sum(m)::BIGINT AS cent_sum FROM c$KMeansIters GROUP BY 1) " +
       "SELECT s.c AS cluster, coalesce(n.n_members, 0)::BIGINT AS n_members, coalesce(n.inertia, 0)::BIGINT AS inertia, s.cent_sum FROM s LEFT JOIN n USING (c) ORDER BY cluster"
   }
 
@@ -404,9 +404,9 @@ object TierA {
     * the GeneratorCallbackMR shape [mrs: examples/pi/, mrs/mapreduce.py]:
     * a generator schedules batch N+1's Spark job BEFORE consuming batch
     * N's result (async submission on a Future = Mrs's overlapped
-    * iteration), the driver folds each batch into the running estimate
-    * and applies the convergence test (`graft.pi.tol.bp`; default 0 runs
-    * all rounds, keeping the trajectory deterministic for the oracle).
+    * iteration) and the driver folds each batch into the running
+    * estimate. All rounds run, keeping the trajectory deterministic for
+    * the oracle.
     * Points are md5-derived — 13 hex chars / 2^52 is an exact double in
     * [0,1) on any engine — rand() would differ per engine/partitioning.
     * Output is the per-round cumulative state (last row = converged
@@ -418,7 +418,6 @@ object TierA {
     import spark.implicits._
     val nBatches = 10
     val batchSize = 10000L
-    val tolBp = spark.conf.getOption("graft.pi.tol.bp").map(_.toLong).getOrElse(0L)
     def coord(axis: String) =
       conv(substring(md5(concat(lit(axis + ":"), col("id").cast("string"))),
         1, 13), 16, 10).cast("long").cast("double") / lit(4503599627370496.0)
@@ -434,14 +433,13 @@ object TierA {
     // iteration — Mrs's generator yields every job; callbacks fold
     // results in batch order as they land).
     final case class Pi(rows: Vector[(Long, Long, Long, Long)],
-      pts: Long, ins: Long, prevBp: Long)
-    val st = CoreMR.generate(Pi(Vector.empty, 0L, 0L, -1L), nBatches)(
+      pts: Long, ins: Long)
+    val st = CoreMR.generate(Pi(Vector.empty, 0L, 0L), nBatches)(
       insideCount) { (s, inside, b) =>
       val pts = s.pts + batchSize
       val ins = s.ins + inside
-      val bp = 40000L * ins / pts
-      val stop = tolBp > 0 && s.prevBp >= 0 && math.abs(bp - s.prevBp) <= tolBp
-      (Pi(s.rows :+ ((b.toLong, pts, ins, bp)), pts, ins, bp), !stop)
+      (Pi(s.rows :+ ((b.toLong, pts, ins, 40000L * ins / pts)), pts, ins),
+        true)
     }
     st.rows.toDF("batch", "points_cum", "inside_cum", "pi_bp")
       .orderBy("batch")

@@ -401,6 +401,9 @@ object TierB {
       .orderBy("c_custkey")
   }
 
+  /** b26's salt fan-out: sub-keys per hot key. */
+  private final val SaltBuckets = 16
+
   /** b26: salted skew-safe aggregation — two-phase: spread each hot key
     * over 16 salt sub-keys (first shuffle distributes the skew), then
     * merge the 16 partials (second shuffle is #keys × 16 rows, tiny).
@@ -411,7 +414,7 @@ object TierB {
   private def b26(s: SparkSession, d: String): DataFrame =
     lineitem(s, d)
       .withColumn("salt",
-        pmod(col("l_orderkey"), lit(graft.util.GraftConf.saltBuckets(s))))
+        pmod(col("l_orderkey"), lit(SaltBuckets)))
       .groupBy("l_returnflag", "salt")
       .agg(count(lit(1)).as("pc"),
         sum(col("l_quantity").cast("decimal(18,2)")).as("pq"))

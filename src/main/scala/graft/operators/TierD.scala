@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryDef
+import graft.streaming.StreamingDemo.SessionGapUs
 import graft.util.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -47,13 +48,12 @@ object TierD {
     * exact integer µs.
     */
   private def d3(s: SparkSession, d: String): DataFrame = {
-    val gapUs = graft.util.GraftConf.sessionGapSec(s) * 1000000L
     val byUser = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
     events(s, d)
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"))
       .withColumn("prev", lag(col("ts_us"), 1).over(byUser))
       .withColumn("is_new",
-        when(col("prev").isNull || col("ts_us") - col("prev") > gapUs, 1)
+        when(col("prev").isNull || col("ts_us") - col("prev") > SessionGapUs, 1)
           .otherwise(0))
       .withColumn("session_id",
         sum(col("is_new")).over(byUser.rowsBetween(Window.unboundedPreceding,
@@ -96,7 +96,7 @@ object TierD {
   private def d7(s: SparkSession, d: String): DataFrame =
     events(s, d)
       .groupBy(session_window(col("ts"),
-        s"${graft.util.GraftConf.sessionGapSec(s)} seconds"), col("user_id"))
+        s"${SessionGapUs / 1000000L} seconds"), col("user_id"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("user_id"),
         unix_timestamp(col("session_window.start")).as("start_s"), col("cnt"))

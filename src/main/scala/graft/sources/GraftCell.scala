@@ -4,25 +4,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The graftmem cell codec (b85): table rows are `Array[Any]` of
-  * EXTERNALIZED values — java.lang.Long (BIGINT), java.lang.Integer
-  * (INT), java.lang.Boolean (BOOLEAN), String (STRING),
-  * java.math.BigDecimal (DECIMAL) — one codec for every face that
-  * moves a cell between Spark's internal row format and the store
-  * (writers, scan readers, snapshot readers, change-feed readers,
-  * delta writers, branch tables). CREATE-time columns stay BIGINT
-  * (the demo-table contract every existing query builds on); ALTER
-  * ADD COLUMNS accepts the full family with a typed literal DEFAULT,
-  * and rows written before the ALTER stay physically narrower —
-  * readers pad the missing tail with the column's INITIAL DEFAULT
-  * (the Iceberg-v3 shape: a default is fixed at add time, never
-  * rewritten into old rows).
-  *
-  * Cells are never SQL NULL: a null cell arriving at a writer (e.g. a
-  * MERGE insert that doesn't set an ALTER-added column) stores the
-  * column's default — the documented connector semantic since the
-  * LONG/0 era, now typed.
-  */
 /** COLUMN MAPPING (b101) — the Iceberg field-id / Delta column-mapping
   * shape in miniature: each SCHEMA column owns a stable PHYSICAL SLOT
   * in stored row arrays, decoupled from its schema position and name.
@@ -50,6 +31,25 @@ private[sources] object GraftColMap {
     GraftColMap(Vector.range(0, n), n, Set.empty)
 }
 
+/** The graftmem cell codec (b85): table rows are `Array[Any]` of
+  * EXTERNALIZED values — java.lang.Long (BIGINT), java.lang.Integer
+  * (INT), java.lang.Boolean (BOOLEAN), String (STRING),
+  * java.math.BigDecimal (DECIMAL) — one codec for every face that
+  * moves a cell between Spark's internal row format and the store
+  * (writers, scan readers, snapshot readers, change-feed readers,
+  * delta writers, branch tables). CREATE-time columns stay BIGINT
+  * (the demo-table contract every existing query builds on); ALTER
+  * ADD COLUMNS accepts the full family with a typed literal DEFAULT,
+  * and rows written before the ALTER stay physically narrower —
+  * readers pad the missing tail with the column's INITIAL DEFAULT
+  * (the Iceberg-v3 shape: a default is fixed at add time, never
+  * rewritten into old rows).
+  *
+  * Cells are never SQL NULL: a null cell arriving at a writer (e.g. a
+  * MERGE insert that doesn't set an ALTER-added column) stores the
+  * column's default — the documented connector semantic since the
+  * LONG/0 era, now typed.
+  */
 private[sources] object GraftCell {
 
   def supported(dt: DataType): Boolean = dt match {

@@ -363,11 +363,10 @@ class BufferedSessionProcessor(gapUs: Long)
   */
 object StreamingDemo {
 
-  /** Session gap in exact µs, from `graft.session.gap.sec`
-    * (default 30 min — oracles assume the default).
+  /** Session gap in exact µs: 30 min. d3, d6, d7, d16 and d17 all
+    * close a session on it, and every session oracle assumes it.
     */
-  private def gapUsOf(s: SparkSession): Long =
-    graft.util.GraftConf.sessionGapSec(s) * 1000000L
+  private[graft] final val SessionGapUs = 1800L * 1000000L
 
   /** Run `body` with a bounded stream-state partition count: a stream's
     * state-store count is fixed at its first checkpoint from
@@ -814,14 +813,13 @@ object StreamingDemo {
     */
   def transformWithStateTimers(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val gapUs = 1800L * 1000000L
     val sessions = eventStream(s, d)
       .withWatermark("ts", "2 hours")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"))
       .as[Ev]
       .groupByKey(_.user_id)
-      .transformWithState(new SessionTimerProcessor(gapUs),
+      .transformWithState(new SessionTimerProcessor(SessionGapUs),
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
         OutputMode.Append())
       .toDF("user_id", "start_s", "end_s", "cnt")
@@ -949,7 +947,6 @@ object StreamingDemo {
 
   def transformWithStateBufferedSessions(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val gapUs = 1800L * 1000000L
     val srcDir = jitteredSource(s, d)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "user_id BIGINT, ts TIMESTAMP, event_id BIGINT")
@@ -960,7 +957,7 @@ object StreamingDemo {
         col("event_id"))
       .as[Ev]
       .groupByKey(_.user_id)
-      .transformWithState(new BufferedSessionProcessor(gapUs),
+      .transformWithState(new BufferedSessionProcessor(SessionGapUs),
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
         OutputMode.Append())
       .toDF("user_id", "start_s", "end_s", "cnt")
@@ -980,7 +977,6 @@ object StreamingDemo {
     */
   def sessionize(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val gapUs = gapUsOf(s)
     val ev = eventStream(s, d)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"))
       .as[Ev]
@@ -996,7 +992,7 @@ object StreamingDemo {
           evs.foreach { e =>
             if (cnt == 0L) {
               sid += 1; start = e.ts_us; last = e.ts_us; cnt = 1
-            } else if (e.ts_us - last > gapUs) {
+            } else if (e.ts_us - last > SessionGapUs) {
               out += SessionOut(user, sid, cnt, start / 1000000L, last / 1000000L)
               sid += 1; start = e.ts_us; last = e.ts_us; cnt = 1
             } else {
@@ -1655,8 +1651,8 @@ object StreamingDemo {
       val m = rows(0)
       // the declared num_partitions column is oracle-pinned at 4
       // (withStreamPartitions' cap); a session configured below 4
-      // shuffle partitions would silently diverge from the oracle —
-      // guard it loudly, the c72 graft.similarity.k discipline
+      // shuffle partitions would silently diverge from the oracle, so
+      // guard it loudly
       require(m.getInt(3) == 4,
         s"d29's oracle pins num_partitions = 4; the checkpoint was " +
           s"written with ${m.getInt(3)} — run with " +

@@ -2,16 +2,14 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** The reference's `mrs.param` option system re-expressed on Spark conf
-  * [mrs: mrs/param.py]: program-level knobs with defaults, settable via
-  * `--conf graft.*=...` / `spark.conf.set`, read at query-build time.
-  * `--mrs-reduce-tasks` ⇔ `spark.sql.shuffle.partitions` (stock conf);
-  * the knobs below are graft's own operator parameters.
+/** Session-state helpers. The reference's `mrs.param` options
+  * [mrs: mrs/param.py] have no session knobs here: each operator
+  * parameter is a named constant next to the query that uses it, since
+  * every DuckDB oracle hard-codes that one value. `--mrs-reduce-tasks`
+  * ⇔ `spark.sql.shuffle.partitions` (stock conf); `graft.profile` is
+  * the one `graft.*` session conf graft reads.
   */
 object GraftConf {
-  private def get(s: SparkSession, key: String, default: String): String =
-    s.conf.getOption(key).getOrElse(default)
-
   /** Run `body` with `kvs` set on the session, then put every key back:
     * a key that had a value gets it again, an absent key is unset —
     * also when `body` throws. Scopes nest and unwind innermost first.
@@ -28,58 +26,6 @@ object GraftConf {
       case (k, None)    => s.conf.unset(k)
     }
   }
-
-  /** Word-shingle width for MinHash/Jaccard (c2/c9/c18). */
-  def shingleSize(s: SparkSession): Int =
-    get(s, "graft.shingle.size", "3").toInt
-
-  /** Session gap in seconds (d3/d6/d7). */
-  def sessionGapSec(s: SparkSession): Long =
-    get(s, "graft.session.gap.sec", "1800").toLong
-
-  /** Top-k for similarity search (c3). */
-  def similarityK(s: SparkSession): Int =
-    get(s, "graft.similarity.k", "5").toInt
-
-  /** Hard cap on c3's probe set: the broadcast and the per-partition
-    * heap map are O(probes), so an uncapped probe predicate would grow
-    * with the corpus — the round-1 judge's one structural scale flag.
-    */
-  def similarityProbes(s: SparkSession): Int =
-    get(s, "graft.similarity.probes", "32").toInt
-
-  /** MinHash signature shape (c2/c18): bands × rowsPerBand hash
-    * functions; a pair collides if all rows of any band match. Defaults
-    * 16×4 (the production-shape S-curve); oracles assume the defaults.
-    */
-  def minhashBands(s: SparkSession): Int =
-    get(s, "graft.minhash.bands", "16").toInt
-  def minhashRows(s: SparkSession): Int =
-    get(s, "graft.minhash.rows", "4").toInt
-
-  /** Salt fan-out for skew-safe aggregation (b26). */
-  def saltBuckets(s: SparkSession): Int =
-    get(s, "graft.salt.buckets", "16").toInt
-
-  /** Sequence-packing capacity in tokens per training row (c28). */
-  def packCapacity(s: SparkSession): Long =
-    get(s, "graft.pack.capacity", "256").toLong
-
-  /** Sequence-packing prefix-sum block size (c28): docs per block in
-    * the two-level distributed cumsum. The driver holds one row per
-    * block, the within-block window holds one block per partition —
-    * so the default 1e6 keeps BOTH sides ~O(√N)-bounded for corpora up
-    * to ~1e12 docs (5B docs ⇒ 5 000 driver rows, 1M-row windows).
-    */
-  def packBlock(s: SparkSession): Long =
-    get(s, "graft.pack.block", "1000000").toLong
-
-  /** Epoch-shuffle seed (c29): any string; each value is a fully
-    * reproducible, independent corpus permutation (oracle assumes the
-    * default).
-    */
-  def shuffleSeed(s: SparkSession): String =
-    get(s, "graft.shuffle.seed", "epoch0")
 
   /** Scale-adaptive `spark.sql.files.maxPartitionBytes` (r13, guide
     * §2.2/§6): corpus bytes ÷ (2 × cores), clamped to [16 MB, 128 MB].

@@ -2,6 +2,7 @@ package graft.util
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Schema-typed loaders for the driver-generated parquet corpus
   * (FIXTURES.md) plus shared oracle-parity helpers.
@@ -110,21 +111,14 @@ object Tables {
 
   /** Portable 60-bit hash: identical in Spark and DuckDB.
     * Spark: the native codegen'd [[graft.functions.Md5Long]] (top 60
-    * bits of the md5 as a long — no hex-string materialization);
-    * DuckDB: `('0x'||substr(md5(x),1,15))::BIGINT`. Bit-identical to
-    * the composed `conv(substr(md5(x),1,15),16,10)` form, which
-    * remains the fallback when no session is active to register the
-    * function against. Never use Spark's `hash`/`xxhash64` in an
-    * oracled output (SURVEY.md §7.4 #4).
+    * bits of the md5 as a long — no hex-string materialization),
+    * bit-identical to the composed `conv(substr(md5(x),1,15),16,10)`;
+    * DuckDB: `('0x'||substr(md5(x),1,15))::BIGINT`. The column holds
+    * the expression itself, so it evaluates on any session. Never use
+    * Spark's `hash`/`xxhash64` in an oracled output (SURVEY.md §7.4 #4).
     */
   def portableHash(c: Column): Column =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
-      case Some(s) =>
-        graft.functions.GraftFunctions.register(s)
-        call_function("md5long", c.cast("string"))
-      case None =>
-        conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")
-    }
+    Bridge.column(graft.functions.Md5Long(Bridge.expression(c.cast("string"))))
 
   /** DuckDB-side rendering of [[portableHash]] for oracle strings. */
   def duckHash(expr: String): String =

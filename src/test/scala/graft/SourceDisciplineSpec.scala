@@ -78,6 +78,28 @@ class SourceDisciplineSpec extends AnyFunSuite {
       s"conf.set( / conf.unset( outside GraftConf and DemoTables: $setters")
   }
 
+  test("the only graft.* session conf src/main reads is graft.profile") {
+    // operator parameters are constants next to the query that uses
+    // them: every DuckDB oracle hard-codes one value, so a session knob
+    // could only refuse other values or drift from the oracle. Table
+    // properties and read options are per table, not session conf.
+    val tableKeys = Set("graft.write_layout", "graft.snapshot_keep",
+      "graft.row_level", "graft.mor.deletes", "graft.stream.deletes")
+    val keys = for ((_, text) <- mainSources;
+                    m <- "\\b(get|getOption)\\s*\\(\\s*\"(graft\\.[^\"]*)\"".r
+                      .findAllMatchIn(text))
+      yield m.group(2)
+    assert(keys.contains("graft.profile"), s"graft.profile read not found: $keys")
+    val allowed = tableKeys + "graft.profile"
+    assert(keys.forall(allowed),
+      s"src/main reads graft.* session conf: ${keys.filterNot(allowed)}")
+    val accessors = for ((path, text) <- mainSources;
+                         m <- "GraftConf\\s*\\.\\s*(\\w+)\\s*\\(".r.findAllMatchIn(text)
+                         if !Set("withConf", "adaptiveSplitBytes")(m.group(1)))
+      yield s"${new java.io.File(path).getName}: GraftConf.${m.group(1)}"
+    assert(accessors.isEmpty, s"GraftConf accessors read in src/main: $accessors")
+  }
+
   test("src/main registers the graftmem catalog only in DemoTables") {
     // one registration, next to the one per-corpus table suffix
     val literals = sites(mainSources, "\"spark.sql.catalog.graftmem\"")

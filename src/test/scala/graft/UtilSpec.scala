@@ -96,6 +96,19 @@ class UtilSpec extends SparkSpec {
     assert(p1.startsWith(TmpDir.base))
   }
 
+  test("portableHash evaluates on a session that is not the active one") {
+    import org.apache.spark.sql.functions._
+    // a query may run on any session: the hash must not depend on a
+    // function registered on the active or default one
+    val other = spark.newSession()
+    val rows = other.range(200).select(col("id").cast("string").as("x"))
+      .select(graft.util.Tables.portableHash(col("x")),
+        conv(substring(md5(col("x")), 1, 15), 16, 10).cast("long"))
+      .collect()
+    assert(rows.length == 200)
+    rows.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
+  }
+
   test("GraftProfiler installs only when graft.profile=true and query still runs") {
     GraftProfiler.install(spark) // knob off: no-op
     spark.conf.set("graft.profile", "true")

@@ -84,15 +84,12 @@ class Round2PropsSpec extends SparkSpec {
 
   test("c28: layout is dense+gapless and identical under a non-default block size") {
     val base = q("c28_sequence_packing").orderBy("doc_id").collect()
-    // Shrink the block size to force many blocks (default 1e6 gives one
-    // block at test scale): the two-level prefix sum must produce the
-    // exact same global layout regardless of how it is blocked.
-    spark.conf.set("graft.pack.block", "7")
-    val blocked =
-      try q("c28_sequence_packing").orderBy("doc_id").collect()
-      finally spark.conf.unset("graft.pack.block")
-    assert(base.sameElements(blocked),
-      "layout changed under graft.pack.block=7")
+    // Shrink the block size to force many blocks (the 1e6 default gives
+    // one block at test scale): the two-level prefix sum must produce
+    // the exact same global layout regardless of how it is blocked.
+    val blocked = TierC.c28(spark, sf0001, blockSize = 7L)
+      .orderBy("doc_id").collect()
+    assert(base.sameElements(blocked), "layout changed under blockSize=7")
     // dense: consecutive docs' global positions differ by exactly the
     // previous doc's token count (no gap, no overlap)
     val toks = graft.util.Tables.documents(spark, sf0001)

@@ -3,8 +3,8 @@ package graft.sources
 import graft.{SparkEntry, SparkSpec}
 
 /** Library-API tests: PairFiles round-trips (incl. the adversarial
-  * bytes hex exists for) and GraftConf knobs actually rescoping
-  * operators.
+  * bytes hex exists for) and c3's top-k parameter actually rescoping
+  * the operator.
   */
 class SourcesAndConfSpec extends SparkSpec {
 
@@ -38,17 +38,14 @@ class SourcesAndConfSpec extends SparkSpec {
     assert(back.count() == src.count())
   }
 
-  test("GraftConf: graft.similarity.k rescopes c3's top-k") {
-    spark.conf.set("graft.similarity.k", "2")
-    try {
-      val df = SparkEntry.queries("c3_similarity_topk")(spark, sf0001)
-      val maxRank = df.agg(org.apache.spark.sql.functions.max("rank"))
-        .head().getLong(0)
-      assert(maxRank == 2L)
-    } finally spark.conf.unset("graft.similarity.k")
+  test("c3's k parameter rescopes its top-k") {
+    val df = graft.operators.TierC.c3(spark, sf0001, k = 2)
+    val maxRank = df.agg(org.apache.spark.sql.functions.max("rank"))
+      .head().getLong(0)
+    assert(maxRank == 2L)
   }
 
-  test("GraftConf defaults: c3 top-k is 5 without overrides") {
+  test("c3's declared query ranks its top 5") {
     val df = SparkEntry.queries("c3_similarity_topk")(spark, sf0001)
     assert(df.agg(org.apache.spark.sql.functions.max("rank"))
       .head().getLong(0) == 5L)
