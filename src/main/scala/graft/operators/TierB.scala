@@ -2642,7 +2642,7 @@ object TierB {
 
   /** b94: FILE-LEVEL METADATA TABLE — `db.tbl__files`, the Iceberg
     * `db.tbl.files` / Delta file-manifest face over the merge-on-read
-    * flavor ([[graft.sources.GraftFilesTable]]): one row per live
+    * flavor ([[graft.sources.GraftMemMorTable#filesFace]]): one row per live
     * ledger file with write-time stats (position range, rows written,
     * min/max key — fixed at commit, the manifest discipline) plus
     * derived liveness (live vs deleted rows against the current
@@ -2725,14 +2725,19 @@ object TierB {
       .collect() // v3: identity survives the rewrite
     runFollowupMergeRound(s, tbl) // v4: +5000 on keys ≡1 (mod 10)
     customer(s, d).createOrReplaceTempView("g_cust_b95r")
+    // orig_id = rank(key) - 1 without a one-task window: a range-
+    // partitioned sort, then each key's index in that global order
+    val keys = customer(s, d).selectExpr("CAST(c_custkey AS BIGINT) AS key")
+      .orderBy("key")
+    s.createDataFrame(keys.rdd.zipWithIndex().map { case (r, i) =>
+      (r.getLong(0), i) }).toDF("key", "orig_id")
+      .createOrReplaceTempView("g_cust_b95rk")
     s.sql(
       s"""WITH sc AS (SELECT count(*) AS n1,
          |    count(CASE WHEN c_custkey % 10 = 3 THEN 1 END) AS nu,
          |    count(CASE WHEN c_custkey % 100 = 0 THEN 1 END) AS ni
          |  FROM g_cust_b95r),
-         |rk AS (SELECT c_custkey AS key,
-         |    row_number() OVER (ORDER BY c_custkey) - 1 AS orig_id
-         |  FROM g_cust_b95r),
+         |rk AS (SELECT key, orig_id FROM g_cust_b95rk),
          |cur AS (SELECT key, bal_cents, _row_id AS rid,
          |    _last_updated_version AS luv FROM $tbl)
          |SELECT

@@ -4,7 +4,7 @@ import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -54,33 +54,14 @@ private[sources] class GraftMemBranchTable(parent: GraftMemTable,
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE)
 
+  /** Reads the branch's rows as of scan build, through the read-only
+    * face's scan.
+    */
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownRequiredColumns {
-      private var required: StructType = schema()
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = requiredSchema
-      override def build(): Scan = new Scan with Batch {
-        private val (frozen, snapSchema, snapDefaults, snapColMap) =
-          parent.synchronized(
-            (branch.rows.map(_._2), parent.schema(), parent.colDefaults,
-              parent.colMap))
-        override def readSchema(): StructType = required
-        override def toBatch: Batch = this
-        override def description(): String =
-          s"GraftMemBranchScan(${name()}, rows=${frozen.length})"
-        override def planInputPartitions(): Array[InputPartition] =
-          if (frozen.isEmpty) Array(GraftMemPartition(Vector.empty))
-          else frozen.grouped(math.max(1, (frozen.length + 3) / 4))
-            .map(GraftMemPartition(_): InputPartition).toArray
-        override def createReaderFactory(): PartitionReaderFactory = {
-          val proj = GraftCell.projector(required, snapSchema,
-            snapDefaults, colMap = snapColMap)
-          new RowsReaderFactory[GraftMemPartition, Array[Any]](_.data,
-            (_, r) => proj(0L, r))
-        }
-      }
-    }
+    new GraftFrozenScanBuilder(name(), schema(), "GraftMemBranchScan",
+      () => parent.synchronized((branch.rows.map(_._2), parent.schema(),
+        parent.colDefaults, parent.colMap)))
 
   /** Append-only staging writes. The commit lands on the BRANCH state
     * under the parent's lock — main's rows/version are never touched

@@ -82,71 +82,40 @@ class GraftMemCatalog extends TableCatalog with FunctionCatalog
       .filter(_.startsWith(ns + "."))
       .map(k => Identifier.of(namespace, k.substring(ns.length + 1)))
   }
+  /** A stored table of the full name wins. Otherwise the name is a
+    * FACE of a stored parent, in the suffix grammar the identifier
+    * accepts verbatim (the Iceberg `db.tbl.changes` / `.snapshots` /
+    * `.files` / `.partitions` convention): `__changes` (b83, the CDC
+    * feed) and `__files` (b94, the file ledger) over merge-on-read,
+    * `__partitions` (b94, partition stats) over copy-on-write,
+    * `__history` (b93, retained snapshots) over either, and
+    * `__branch_<b>` (b92, a write-audit-publish branch of a
+    * copy-on-write parent) split at the LAST `__branch_`. A suffix
+    * whose parent is missing or of the other flavour falls through to
+    * the branch split, and then to NoSuchTableException.
+    */
   override def loadTable(ident: Identifier): Table = {
     val t = tables.get(key(ident))
     if (t != null) return t
-    // `<name>__changes` resolves to the CDC change-feed metadata
-    // table over a merge-on-read parent (b83) — the Iceberg
-    // `db.tbl.changes` convention with a suffix the identifier
-    // grammar accepts verbatim.
-    if (ident.name().endsWith("__changes")) {
-      val parent = tables.get(key(Identifier.of(ident.namespace(),
-        ident.name().stripSuffix("__changes"))))
-      parent match {
-        case m: GraftMemMorTable => return new MorChangesTable(m)
-        case _                   => ()
+    val n = ident.name()
+    val bi = n.lastIndexOf("__branch_")
+    val faces =
+      fixedFaces.filter(n.endsWith).map(f => (f, n.stripSuffix(f))) ++
+        (if (bi > 0) Seq(("__branch_", n.substring(0, bi))) else Nil)
+    faces.iterator.flatMap { case (face, p) =>
+      (face, tables.get(key(Identifier.of(ident.namespace(), p)))) match {
+        case ("__changes", m: GraftMemMorTable) => Some(new MorChangesTable(m))
+        case ("__files", m: GraftMemMorTable)   => Some(m.filesFace)
+        case ("__history", h: GraftSnapshotHistory) => Some(h.historyFace)
+        case ("__partitions", g: GraftMemTable) => Some(g.partitionsFace)
+        case ("__branch_", g: GraftMemTable) =>
+          val branch = n.substring(bi + "__branch_".length)
+          g.synchronized(g.branches.get(branch))
+            .map(new GraftMemBranchTable(g, _))
+        case _ => None
       }
-    }
-    // `<name>__history` resolves to the snapshot-history metadata
-    // table (b93) over either flavor — the Iceberg `db.tbl.snapshots`
-    // convention with the suffix grammar the feed already uses.
-    if (ident.name().endsWith("__history")) {
-      val parent = tables.get(key(Identifier.of(ident.namespace(),
-        ident.name().stripSuffix("__history"))))
-      parent match {
-        case h: GraftSnapshotHistory =>
-          return new GraftHistoryTable(
-            h.asInstanceOf[Table with GraftSnapshotHistory])
-        case _ => ()
-      }
-    }
-    // `<name>__files` / `<name>__partitions` resolve to the
-    // file/partition-grain metadata tables (b94) — the Iceberg
-    // `db.tbl.files` / `db.tbl.partitions` convention on the suffix
-    // grammar: file ledger over merge-on-read, partition stats over
-    // the partitioned copy-on-write flavor.
-    if (ident.name().endsWith("__files")) {
-      tables.get(key(Identifier.of(ident.namespace(),
-        ident.name().stripSuffix("__files")))) match {
-        case m: GraftMemMorTable => return new GraftFilesTable(m)
-        case _                   => ()
-      }
-    }
-    if (ident.name().endsWith("__partitions")) {
-      tables.get(key(Identifier.of(ident.namespace(),
-        ident.name().stripSuffix("__partitions")))) match {
-        case g: GraftMemTable => return new GraftPartitionsTable(g)
-        case _                => ()
-      }
-    }
-    // `<name>__branch_<b>` resolves to a write-audit-publish branch
-    // of a copy-on-write parent (b92) — same suffix grammar as the
-    // change feed.
-    val bi = ident.name().lastIndexOf("__branch_")
-    if (bi > 0) {
-      val parentName = ident.name().substring(0, bi)
-      val branch = ident.name().substring(bi + "__branch_".length)
-      tables.get(key(Identifier.of(ident.namespace(), parentName))) match {
-        case g: GraftMemTable =>
-          g.synchronized(g.branches.get(branch)) match {
-            case Some(br) => return new GraftMemBranchTable(g, br)
-            case None     => ()
-          }
-        case _ => ()
-      }
-    }
-    throw new org.apache.spark.sql.catalyst.analysis
-      .NoSuchTableException(ident)
+    }.nextOption().getOrElse(throw new org.apache.spark.sql.catalyst
+      .analysis.NoSuchTableException(ident))
   }
 
   /** TIME TRAVEL (b84): SQL `VERSION AS OF v` routes here via Spark's
@@ -551,6 +520,10 @@ object GraftMemCatalog {
     namespaces.putIfAbsent("system", new util.HashMap[String, String]())
   }
   seedNamespaces()
+
+  /** The face suffixes `loadTable` matches before the branch split. */
+  private val fixedFaces =
+    Seq("__changes", "__history", "__files", "__partitions")
 
   /** Test/dev reset — drops every table (the catalog equivalent of a
     * fresh warehouse dir).
@@ -1072,14 +1045,11 @@ private[sources] class GraftMemTable(val fullName: String,
             s"the partition spec evolved at version $partitionEvolvedAt " +
             "and pre-evolution snapshots tag rows under the old spec; " +
             "restore the data through an explicit rewrite instead")
-      val snap = snapshots.getOrElse(version, {
-        val r = retainedVersions
+      val snap = snapshots.getOrElse(version,
         throw new IllegalArgumentException(
           s"graftmem $fullName: no retained snapshot for version " +
-            s"$version (retained: ${if (r.isEmpty) "none"
-              else s"${r.head._1}..${r.last._1}"}; expired snapshots " +
-            "are unrecoverable)")
-      })
+            s"$version (retained: $retainedRange; expired snapshots " +
+            "are unrecoverable)"))
       val prev = rows
       val (rs, _, sch, dflts, cm) = snap
       rows = rs
@@ -1124,12 +1094,9 @@ private[sources] class GraftMemTable(val fullName: String,
             s"graftmem $fullName: cannot clone version $v — the " +
               s"partition spec evolved at version $partitionEvolvedAt " +
               "and pre-evolution snapshots tag rows under the old spec")
-        require(snapshots.contains(v), {
-          val r = retainedVersions
+        require(snapshots.contains(v),
           s"graftmem $fullName: no retained snapshot for version $v " +
-            s"(retained: ${if (r.isEmpty) "none"
-              else s"${r.head._1}..${r.last._1}"})"
-        })
+            s"(retained: $retainedRange)")
       }
       val (srcRows, srcSchema, srcDflts, srcMap) = version match {
         case Some(v) =>
@@ -1213,19 +1180,25 @@ private[sources] class GraftMemTable(val fullName: String,
   private val declaredParts =
     scala.collection.mutable.HashMap.empty[Long, Map[String, String]]
 
-  /** Partition-grain metadata (b94, served by
-    * [[GraftPartitionsTable]]): (group key, live row count, last
-    * modifying commit version) per partition — declared OR
-    * data-bearing, the `SHOW PARTITIONS` existence rule. One
-    * consistent snapshot under the swap lock; cost is bounded by the
-    * partition count (the row pass stands in for per-group counts a
-    * real manifest maintains at commit).
+  /** `db.tbl__partitions` — the partition-grain metadata table (b94):
+    * one row per partition, DECLARED or data-bearing (the `SHOW
+    * PARTITIONS` existence rule, b88), of (group_key, row_count,
+    * last_modified_version) — the "which partitions are hot / empty /
+    * stale" read a maintenance planner runs before scheduling
+    * rewrites. Each scan pins one consistent view under the swap lock;
+    * its cost is bounded by the partition count (the row pass stands
+    * in for per-group counts a real manifest maintains at commit).
     */
-  private[sources] def partitionStats: Seq[(Long, Long, Long)] =
-    synchronized {
-      val counts = rows.groupBy(_._1).view.mapValues(_.length.toLong)
-      (declaredParts.keySet ++ counts.keys).toSeq.sorted.map(g =>
-        (g, counts.getOrElse(g, 0L), groupVersion.getOrElse(g, 0L)))
+  private[sources] def partitionsFace: Table =
+    GraftFrozenTable.metadata(s"${fullName}__partitions",
+      "GraftPartitionsScan", "group_key" -> LongType,
+      "row_count" -> LongType, "last_modified_version" -> LongType) {
+      synchronized {
+        val counts = rows.groupBy(_._1).view.mapValues(_.length.toLong)
+        (declaredParts.keySet ++ counts.keys).toVector.sorted.map(g =>
+          Array[Any](g, counts.getOrElse(g, 0L),
+            groupVersion.getOrElse(g, 0L)))
+      }
     }
 
   override def partitionSchema(): StructType =
@@ -1278,19 +1251,24 @@ private[sources] class GraftMemTable(val fullName: String,
       if (!vs.forall(partExistsLocked)) false
       else {
         vs.foreach(declaredParts.remove)
-        // version-stamp exactly the groups whose DATA changed — a
-        // declared-only partition's drop is pure metadata and must
-        // not spuriously conflict an in-flight rewrite of its group
-        // (one pass over rows, not one per dropped value)
-        val present = rows.iterator.map(_._1).toSet
-        val touched = vs.toSet & present
-        if (touched.nonEmpty) {
-          rows = rows.filterNot(e => touched.contains(e._1))
-          stampCommit(touched)
-        }
+        dropGroupsLocked(vs)
         true
       }
     }
+
+  /** Drop the rows of the groups in `vs` and version-stamp exactly the
+    * groups whose DATA changed: dropping a declared-only partition or
+    * truncating an empty one is pure metadata and must not spuriously
+    * conflict an in-flight rewrite of its group (one pass over rows,
+    * not one per value). Callers hold the swap lock.
+    */
+  private def dropGroupsLocked(vs: Iterable[Long]): Unit = {
+    val touched = vs.toSet & rows.iterator.map(_._1).toSet
+    if (touched.nonEmpty) {
+      rows = rows.filterNot(e => touched.contains(e._1))
+      stampCommit(touched)
+    }
+  }
   // in-memory store: purge (skip-the-trash) and drop coincide
   override def purgePartitions(idents: Array[InternalRow]): Boolean =
     dropPartitions(idents)
@@ -1353,16 +1331,7 @@ private[sources] class GraftMemTable(val fullName: String,
             partitionSchema()))
       // the partition survives its own truncation in SHOW PARTITIONS
       vs.foreach(v => declaredParts.getOrElseUpdate(v, Map.empty))
-      // stamp only groups whose data changed: truncating an already-
-      // empty partition is a metadata no-op, not a version bump that
-      // could spuriously conflict an in-flight rewrite (one pass over
-      // rows, not one per value)
-      val present = rows.iterator.map(_._1).toSet
-      val touched = vs.toSet & present
-      if (touched.nonEmpty) {
-        rows = rows.filterNot(e => touched.contains(e._1))
-        stampCommit(touched)
-      }
+      dropGroupsLocked(vs)
       true
     }
   override def truncatePartition(ident: InternalRow): Boolean =

@@ -167,6 +167,10 @@ private[sources] class GraftMemMorTable(val fullName: String,
     }
   }
 
+  /** The live rows of the CURRENT state. Call while holding `this`. */
+  private[sources] def currentLive: Vector[(Long, Array[Any])] =
+    liveRows(base, deltaInserts, deleted, eqDeletes.map(e => (e._1, e._2)))
+
   /** SCHEMA EVOLUTION (b85) on the merge-on-read flavor — same
     * metadata-only contract as [[GraftMemTable.addColumn]]: no data
     * pass, pre-ALTER rows (and change-log entries) surface the new
@@ -260,7 +264,7 @@ private[sources] class GraftMemMorTable(val fullName: String,
   /** FILE LEDGER (b94): every row-landing commit's contiguous position
     * range as one "data file" with WRITE-TIME stats (rows written,
     * min/max of the lead column) — the manifest-entry shape the
-    * `db.tbl__files` metadata table serves ([[GraftFilesTable]]).
+    * `db.tbl__files` metadata table serves ([[filesFace]]).
     * Replaced wholesale by compaction (N files → 1 spanning file);
     * liveness against the current delete state is derived at read
     * time. Guarded by `this`.
@@ -286,6 +290,86 @@ private[sources] class GraftMemMorTable(val fullName: String,
       files = files :+ GraftFile(nextFileId, commitVersion,
         assigned.head._1, assigned.last._1 + 1,
         assigned.length.toLong, mn, mx)
+    }
+
+  /** The next contiguous positions, one per element of `xs`, in order.
+    * Call while holding `this`.
+    */
+  private[sources] def assignPositions[A](xs: Vector[A]): Vector[(Long, A)] =
+    xs.map { x => val p = nextPos; nextPos += 1; (p, x) }
+
+  /** The row id of position `p` as of now: its lineage entry, or the
+    * first-commit identity (id = pos) for rows with none.
+    */
+  private[sources] def rowIdOf(p: Long): Long =
+    lineage.get(p).map(_._1).getOrElse(p)
+
+  /** THE LANDING STEP of every row-landing commit (append, positional
+    * delta, equality delta), run under `this` after the caller's
+    * validation: positions for `ins`, then for the update re-inserts
+    * `upd` (each paired with the row id it inherits from its victim);
+    * the version bump; `place` puts the commit's deletes and its
+    * landed rows where its mode keeps them (base or delta log,
+    * tombstones or equality deletes — it sees the new version); one
+    * ledger file; lineage (inserts get first-commit identity, updates
+    * the victim's id, b95); the change log (the victims `dels` as
+    * (pos, row) in position order, then inserts, then re-inserts,
+    * b83); and the snapshot.
+    */
+  private[sources] def land(ins: Vector[Array[Any]],
+      upd: Vector[(Long, Array[Any])], dels: Vector[(Long, Array[Any])])(
+      place: Vector[(Long, Array[Any])] => Unit): Unit = {
+    val landedIns = assignPositions(ins)
+    val landedUpd = assignPositions(upd)
+    val landed = landedIns ++ landedUpd.map { case (p, (_, r)) => (p, r) }
+    commitVersion += 1
+    place(landed)
+    recordFile(landed)
+    changeLog = changeLog ++
+      dels.map { case (p, r) => (commitVersion, false, p, rowIdOf(p), r) } ++
+      landedIns.map { case (p, r) => (commitVersion, true, p, p, r) } ++
+      landedUpd.map { case (p, (id, r)) => (commitVersion, true, p, id, r) }
+    lineage = lineage ++
+      landedIns.iterator.map { case (p, _) => p -> ((p, commitVersion)) } ++
+      landedUpd.iterator.map { case (p, (id, _)) => p -> ((id, commitVersion)) }
+    recordSnapshot()
+  }
+
+  /** `db.tbl__files` — the file-grain metadata table (b94): one row
+    * per live ledger file of (file_id, commit_version, pos_min,
+    * pos_max, rows_written, live_rows, deleted_rows, min_key,
+    * max_key). Write-time stats come from the ledger; each scan
+    * derives liveness from ONE consistent (ledger, delete state) view
+    * — live positions falling in the file's range (ranges are disjoint
+    * by construction).
+    */
+  private[sources] def filesFace: Table =
+    GraftFrozenTable.metadata(s"${fullName}__files", "GraftFilesScan",
+      "file_id" -> LongType, "commit_version" -> LongType,
+      "pos_min" -> LongType, "pos_max" -> LongType,
+      "rows_written" -> LongType, "live_rows" -> LongType,
+      "deleted_rows" -> LongType, "min_key" -> LongType,
+      "max_key" -> LongType) {
+      val (fs, live) = synchronized((files, currentLive))
+      val byMin = fs.sortBy(_.posMin).toArray
+      val liveCount = new Array[Long](byMin.length)
+      live.foreach { case (pos, _) =>
+        // last file with posMin <= pos (binary search over the
+        // disjoint sorted ranges)
+        var lo = 0; var hi = byMin.length - 1; var hit = -1
+        while (lo <= hi) {
+          val mid = (lo + hi) >>> 1
+          if (byMin(mid).posMin <= pos) { hit = mid; lo = mid + 1 }
+          else hi = mid - 1
+        }
+        if (hit >= 0 && pos < byMin(hit).posMaxExcl)
+          liveCount(hit) += 1
+      }
+      byMin.toVector.zipWithIndex.map { case (f, i) =>
+        Array[Any](f.fileId, f.commitVersion, f.posMin, f.posMaxExcl,
+          f.rowsWritten, liveCount(i), f.rowsWritten - liveCount(i),
+          f.minKey, f.maxKey)
+      }
     }
 
   /** CHANGE LOG (b83): every committed row change, stamped with the
@@ -401,8 +485,7 @@ private[sources] class GraftMemMorTable(val fullName: String,
   private[sources] def compact(): (Long, Long, Long) = synchronized {
     val tomb = (deleted.size + eqDeletes.length).toLong
     val folded = deltaInserts.length.toLong
-    val live = liveRows(base, deltaInserts, deleted, eqDeletes.map(e =>
-      (e._1, e._2)))
+    val live = currentLive
     base = live
     deltaInserts = Vector.empty
     deleted = Set.empty
@@ -452,8 +535,7 @@ private[sources] class GraftMemMorTable(val fullName: String,
     */
   private[sources] def rewriteFiles(minDeadBp: Long): (Long, Long, Long) =
     synchronized {
-      val live = liveRows(base, deltaInserts, deleted,
-        eqDeletes.map(e => (e._1, e._2)))
+      val live = currentLive
       val livePos = live.iterator.map(_._1).toSet
       def liveIn(f: GraftFile): Long =
         live.count(e => e._1 >= f.posMin && e._1 < f.posMaxExcl).toLong
@@ -464,14 +546,12 @@ private[sources] class GraftMemMorTable(val fullName: String,
       val inVictim = (pos: Long) => victims.exists(f =>
         pos >= f.posMin && pos < f.posMaxExcl)
       val moved = live.filter(e => inVictim(e._1))
-      // reassign: new contiguous positions, lineage carried over with
-      // the last-updated version PRESERVED (identity, not an update)
-      val movedNew = moved.map { case (oldPos, r) =>
-        val np = nextPos; nextPos += 1
-        (oldPos, np, r)
-      }
-      base = base.filterNot(e => inVictim(e._1)) ++
-        movedNew.map(e => (e._2, e._3))
+      // reassign: new contiguous positions (new, (old, row)), lineage
+      // carried over with the last-updated version PRESERVED
+      // (identity, not an update)
+      val movedNew = assignPositions(moved)
+      val landed = movedNew.map { case (np, (_, r)) => (np, r) }
+      base = base.filterNot(e => inVictim(e._1)) ++ landed
       deltaInserts = deltaInserts.filterNot(e => inVictim(e._1))
       // victim tombstones die with their rows; survivors' remain
       deleted = deleted.filterNot(inVictim)
@@ -484,14 +564,14 @@ private[sources] class GraftMemMorTable(val fullName: String,
         !inVictim(e._1) || livePos.contains(e._1)
       }
       lineage = (lineage -- moved.iterator.map(_._1)) ++
-        movedNew.iterator.map { e =>
-          e._2 -> lineage.getOrElse(e._1, (e._1, 0L))
+        movedNew.iterator.map { case (np, (op, _)) =>
+          np -> lineage.getOrElse(op, (op, 0L))
         }
       commitVersion += 1
       // the rewritten file's write-time stats are the rewrite's own;
       // all-dead victims simply vanish (no replacement file to cut)
       files = kept
-      recordFile(movedNew.map(e => (e._2, e._3)))
+      recordFile(landed)
       recordSnapshot() // a maintenance version: content equals v-1's
       (victims.length.toLong, moved.length.toLong, kept.length.toLong)
     }
@@ -517,30 +597,22 @@ private[sources] class GraftMemMorTable(val fullName: String,
       require(nFiles >= 1,
         s"rewrite_sort: n_files must be >= 1, got $nFiles")
       val before = files.length.toLong
-      val live = liveRows(base, deltaInserts, deleted,
-        eqDeletes.map(e => (e._1, e._2)))
+      val live = currentLive
       // stable tiebreak on the old position keeps duplicate keys
       // deterministic
       val sorted = live.sortBy(e =>
         (GraftCell.asLong(e._2(keyIdx)), e._1))
-      val moved = sorted.map { case (oldPos, r) =>
-        val np = nextPos; nextPos += 1
-        (oldPos, np, r)
-      }
-      base = moved.map(e => (e._2, e._3))
+      val moved = assignPositions(sorted) // (new, (old, row))
+      base = moved.map { case (np, (_, r)) => (np, r) }
       deltaInserts = Vector.empty
       deleted = Set.empty
       eqDeletes = Vector.empty
-      lineage = moved.iterator.map { e =>
-        e._2 -> lineage.getOrElse(e._1, (e._1, 0L))
+      lineage = moved.iterator.map { case (np, (op, _)) =>
+        np -> lineage.getOrElse(op, (op, 0L))
       }.toMap
       commitVersion += 1
       files = Vector.empty
-      if (moved.nonEmpty) {
-        val chunk = ((moved.length + nFiles - 1) / nFiles).max(1)
-        moved.grouped(chunk).foreach(g =>
-          recordFile(g.map(e => (e._2, e._3))))
-      }
+      GraftFrozenTable.chunks(base, nFiles).foreach(recordFile)
       recordSnapshot() // a maintenance version: content equals v-1's
       (before, moved.length.toLong, files.length.toLong)
     }
@@ -586,6 +658,41 @@ private[sources] class GraftMemMorTable(val fullName: String,
 private[sources] final class MorScanState {
   @volatile var scanVersion: Long = -1L
 }
+
+/** One ledger file of the merge-on-read flavor (b94), the row the
+  * `db.tbl__files` face ([[GraftMemMorTable#filesFace]]) serves — the
+  * Iceberg `db.tbl.files` face next to b93's `__history` and b83's
+  * `__changes`: the FILE-GRAIN forensics read that maintenance
+  * operations actually consume. A compaction planner asks "which
+  * files carry how many dead rows", a retention job asks "which files
+  * does this snapshot still reference", a clustering advisor asks
+  * "what key range does each file cover" — all of it
+  * answered from TABLE METADATA (the manifest), never from a data
+  * scan. c57 plans compaction over parquet by scanning data because
+  * parquet keeps no live manifest; a lakehouse table keeps one, and
+  * this is that read.
+  *
+  * File model on the merge-on-read flavor: every commit that LANDS
+  * rows (a batch append, a delta commit's inserts, a compaction's
+  * rewrite) assigns one contiguous position range — that range IS the
+  * demo's data file, exactly as a real MoR writer cuts one file per
+  * commit-task. Write-time stats (rows written, min/max of the lead
+  * column) are fixed in the ledger AT COMMIT, the manifest discipline
+  * — the `__files` scan recomputes only LIVENESS (live vs deleted
+  * rows per file) against the current tombstone/equality-delete
+  * state, which is precisely what an Iceberg reader derives by
+  * joining delete files against manifests. Compaction REPLACES the
+  * ledger with one spanning file (positions are preserved, so the
+  * span is sparse — the demo twin of "rewrite N files into one").
+  *
+  * Scale: the scan is bounded by the file count (metadata-sized); the
+  * liveness pass is O(live rows) here only because the demo keeps
+  * rows in memory — a real connector stores per-file delete counts in
+  * the manifest as deltas commit, keeping this read data-free.
+  */
+private[sources] final case class GraftFile(fileId: Long,
+    commitVersion: Long, posMin: Long, posMaxExcl: Long,
+    rowsWritten: Long, minKey: Long, maxKey: Long)
 
 /** One scan split: a chunk of (pos, row) pairs plus EXACTLY the
   * tombstones intersecting it — the read-time merge a MoR reader does
@@ -672,18 +779,15 @@ private[sources] class MorScanBuilder(table: GraftMemMorTable,
       * in the chunk).
       */
     override def planInputPartitions(): Array[InputPartition] = {
-      def split(rs: Vector[(Long, Array[Any])], n: Int) =
-        if (rs.isEmpty) Vector.empty
-        else rs.grouped(math.max(1, (rs.length + n - 1) / n)).toVector
       def eqOf(c: Vector[(Long, Array[Any])]): Map[Long, Long] =
         if (eqBounds.isEmpty) Map.empty
         else c.iterator.map(e => GraftCell.asLong(e._2(table.keyIdx)))
           .filter(eqBounds.contains).map(k => k -> eqBounds(k)).toMap
       val parts =
-        (split(snapBase, 4).map(c => MorPartition(c,
+        (GraftFrozenTable.chunks(snapBase, 4).map(c => MorPartition(c,
           c.iterator.map(_._1).filter(snapDel).toSet,
           eqDels = eqOf(c), keyIdx = table.keyIdx)) ++
-        split(snapIns, 1).map(c => MorPartition(c,
+        GraftFrozenTable.chunks(snapIns, 1).map(c => MorPartition(c,
           c.iterator.map(_._1).filter(snapDel).toSet, isDelta = true,
           eqDels = eqOf(c), keyIdx = table.keyIdx)))
           .map(p => p: InputPartition).toArray
@@ -796,18 +900,8 @@ private[sources] class MorAppendWriteBuilder(
           case m: GraftMemCommit => m.data
         }.toVector
         table.synchronized {
-          val assigned = written.map { r =>
-            val pr = (table.nextPos, r); table.nextPos += 1; pr
-          }
-          table.base = table.base ++ assigned
-          table.commitVersion += 1
-          table.recordFile(assigned)
-          // lineage (b95): first commit assigns the stable row id
-          table.lineage = table.lineage ++ assigned.iterator.map(pr =>
-            pr._1 -> ((pr._1, table.commitVersion)))
-          table.changeLog = table.changeLog ++ assigned.map(pr =>
-            (table.commitVersion, true, pr._1, pr._1, pr._2))
-          table.recordSnapshot()
+          table.land(written, Vector.empty, Vector.empty)(landed =>
+            table.base = table.base ++ landed)
         }
       }
       override def abort(messages: Array[WriterCommitMessage]): Unit = ()
@@ -904,39 +998,14 @@ private[sources] class MorDeltaWriteBuilder(
                 s"row position(s) ${vanished.toSeq.sorted.mkString(", ")} " +
                 "no longer exist (tombstoned and compacted after this " +
                 "operation's scan); retry from a fresh snapshot")
-          val assignedIns = ins.result().map { r =>
-            val pr = (table.nextPos, r); table.nextPos += 1; pr
+          // an update's re-insert inherits its victim's row id (the
+          // pairing d33's feed consumers reconstruct updates from)
+          table.land(ins.result(),
+            upds.map { case (victim, r) => (table.rowIdOf(victim), r) },
+            delSet.toVector.sorted.map(p => (p, idx(p)))) { landed =>
+            table.deleted = table.deleted ++ delSet
+            table.deltaInserts = table.deltaInserts ++ landed
           }
-          val assignedUpd = upds.map { case (victim, r) =>
-            val pr = (table.nextPos, r); table.nextPos += 1; (victim, pr)
-          }
-          val assigned = assignedIns ++ assignedUpd.map(_._2)
-          table.deleted = table.deleted ++ delSet
-          table.deltaInserts = table.deltaInserts ++ assigned
-          table.commitVersion += 1
-          table.recordFile(assigned)
-          // row id as of BEFORE this commit (victims keep theirs; an
-          // update's re-insert inherits it — the pairing d33's feed
-          // consumers reconstruct updates from)
-          def ridOf(p: Long): Long =
-            table.lineage.get(p).map(_._1).getOrElse(p)
-          // lineage: fresh inserts get first-commit identity; update
-          // re-inserts INHERIT the victim's row id (the b95 point)
-          table.lineage = table.lineage ++
-            assignedIns.iterator.map(pr =>
-              pr._1 -> ((pr._1, table.commitVersion))) ++
-            assignedUpd.iterator.map { case (victim, pr) =>
-              pr._1 -> ((ridOf(victim), table.commitVersion))
-            }
-          table.changeLog = table.changeLog ++
-            delSet.toVector.sorted.map(p =>
-              (table.commitVersion, false, p, ridOf(p), idx(p))) ++
-            assignedIns.map(pr =>
-              (table.commitVersion, true, pr._1, pr._1, pr._2)) ++
-            assignedUpd.map { case (victim, pr) =>
-              (table.commitVersion, true, pr._1, ridOf(victim), pr._2)
-            }
-          table.recordSnapshot()
         }
       }
       override def abort(messages: Array[WriterCommitMessage]): Unit = ()
@@ -979,9 +1048,7 @@ private[sources] class MorDeltaWriteBuilder(
               s"$scanVersion, now ${table.commitVersion}); retry from " +
               "a fresh snapshot")
       }
-      val live = table.liveRows(table.base, table.deltaInserts,
-        table.deleted, table.eqDeletes.map(e => (e._1, e._2)))
-      val victims = live.filter(r =>
+      val victims = table.currentLive.filter(r =>
         keySet.contains(GraftCell.asLong(r._2(table.keyIdx))))
       val vanished = keySet --
         victims.iterator.map(r => GraftCell.asLong(r._2(table.keyIdx))).toSet
@@ -991,44 +1058,23 @@ private[sources] class MorDeltaWriteBuilder(
             s"key(s) ${vanished.toSeq.sorted.mkString(", ")} match no " +
             "live row (deleted by a concurrent commit after this " +
             "operation's scan); retry from a fresh snapshot")
+      // the boundary is taken BEFORE this commit assigns positions
       val boundary = table.nextPos
-      val assignedIns = ins.map { r =>
-        val pr = (table.nextPos, r); table.nextPos += 1; pr
-      }
-      val assignedUpd = upd.map { case (k, r) =>
-        val pr = (table.nextPos, r); table.nextPos += 1; (k, pr)
-      }
-      val assigned = assignedIns ++ assignedUpd.map(_._2)
       // victim identity per updated key: the LATEST live row of the
       // key (max position) is what the update semantically replaces
-      val victimId: Map[Long, Long] = assignedUpd.iterator.map(_._1)
+      val victimId: Map[Long, Long] = upd.iterator.map(_._1)
         .toSet[Long].map { k =>
           val top = victims.iterator
             .filter(r => GraftCell.asLong(r._2(table.keyIdx)) == k)
             .maxBy(_._1)
-          k -> table.lineage.get(top._1).map(_._1).getOrElse(top._1)
+          k -> table.rowIdOf(top._1)
         }.toMap
-      table.commitVersion += 1
-      table.recordFile(assigned)
-      table.eqDeletes = table.eqDeletes ++ keySet.toVector.sorted
-        .map(k => (k, boundary, table.commitVersion))
-      table.deltaInserts = table.deltaInserts ++ assigned
-      table.lineage = table.lineage ++
-        assignedIns.iterator.map(pr =>
-          pr._1 -> ((pr._1, table.commitVersion))) ++
-        assignedUpd.iterator.map { case (k, pr) =>
-          pr._1 -> ((victimId(k), table.commitVersion))
-        }
-      table.changeLog = table.changeLog ++
-        victims.sortBy(_._1).map(pr =>
-          (table.commitVersion, false, pr._1,
-            table.lineage.get(pr._1).map(_._1).getOrElse(pr._1), pr._2)) ++
-        assignedIns.map(pr =>
-          (table.commitVersion, true, pr._1, pr._1, pr._2)) ++
-        assignedUpd.map { case (k, pr) =>
-          (table.commitVersion, true, pr._1, victimId(k), pr._2)
-        }
-      table.recordSnapshot()
+      table.land(ins, upd.map { case (k, r) => (victimId(k), r) },
+        victims.sortBy(_._1)) { landed =>
+        table.eqDeletes = table.eqDeletes ++ keySet.toVector.sorted
+          .map(k => (k, boundary, table.commitVersion))
+        table.deltaInserts = table.deltaInserts ++ landed
+      }
     }
   }
 }
@@ -1099,7 +1145,8 @@ private[sources] object MorCompactProcedure extends GraftProcedure(
 
 /** `graftmem.system.rewrite_files(table, min_dead_bp)` — SELECTIVE
   * file rewrite (b96): fold only the files whose dead fraction clears
-  * the threshold, the c57 compaction-planning read ([[GraftFilesTable]])
+  * the threshold, the c57 compaction-planning read
+  * ([[GraftMemMorTable#filesFace]])
   * turned into the governed maintenance ACTION — plan from metadata,
   * rewrite exactly the files that earn it, leave healthy files
   * untouched. Returns (files_rewritten, rows_moved, files_kept).
@@ -1248,7 +1295,7 @@ private[sources] class MorChangesTable(parent: GraftMemMorTable)
                 s"$floor has been expired by changelog retention; " +
                 s"pass .option(\"startingVersion\", >= $floor) (got " +
                 s"$startingVersion)")
-          MorChangesTable.chunk(snap)
+          GraftFrozenTable.splits(snap)(MorChangesPartition(_))
         }
         override def createReaderFactory(): PartitionReaderFactory =
           MorChangesTable.readerFactory(parent.schema(),
@@ -1283,13 +1330,6 @@ private[sources] object MorChangesTable {
       // update's delete and re-insert share it, which is what lets a
       // feed consumer reconstruct UPDATES from D+I pairs (d33)
       StructField("_row_id", LongType, nullable = false)))
-
-  private[sources] def chunk(
-      entries: Vector[(Long, Boolean, Long, Long, Array[Any])])
-      : Array[InputPartition] =
-    if (entries.isEmpty) Array(MorChangesPartition(Vector.empty))
-    else entries.grouped(math.max(1, (entries.length + 3) / 4))
-      .map(MorChangesPartition(_): InputPartition).toArray
 
   /** Shared by the batch scan and the micro-batch stream: project a
     * change-log entry onto the requested columns, typed per the
@@ -1412,7 +1452,7 @@ private[sources] class MorChangesMicroBatchStream(
       parent.changeLog.slice((sLogical - base).toInt,
         (eLogical - base).toInt)
     }.filter(_._1 >= startingVersion)
-    MorChangesTable.chunk(slice)
+    GraftFrozenTable.splits(slice)(MorChangesPartition(_))
   }
   override def createReaderFactory(): PartitionReaderFactory =
     MorChangesTable.readerFactory(parent.schema(), parent.colDefaults,
@@ -1583,11 +1623,8 @@ private[sources] class MorTableMicroBatchStream(
           entries.map(_._5)
         } else entries.filter(_._2).map(_._5)
       } else Vector.empty
-    val rows = snapSlice ++ feedSlice
-    if (rows.isEmpty) Array(MorPartition(Vector.empty, Set.empty))
-    else rows.grouped(math.max(1, (rows.length + 3) / 4))
-      .map(c => MorPartition(c.map(r => (0L, r)), Set.empty)
-        : InputPartition).toArray
+    GraftFrozenTable.splits(snapSlice ++ feedSlice)(c =>
+      MorPartition(c.map(r => (0L, r)), Set.empty))
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {

@@ -5,7 +5,7 @@ import java.util
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** TIME TRAVEL over graftmem tables (b84) — the lakehouse snapshot
@@ -14,7 +14,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * [[GraftMemCatalog.loadTable(ident, version)]] /
   * `loadTable(ident, timestamp)` (Spark's `TimeTravelSpec` plumbing,
   * the same route Iceberg/Delta take), and the returned table is a
-  * READ-ONLY view of one committed snapshot.
+  * [[GraftFrozenTable]]: a READ-ONLY view of one committed snapshot.
+  * The same read-only face serves the `__history`, `__files` and
+  * `__partitions` metadata tables, whose rows are built by the parent
+  * ([[GraftSnapshotHistory#historyFace]], [[GraftMemMorTable#filesFace]],
+  * [[GraftMemTable#partitionsFace]]).
   *
   * Mechanics and the 100 TB story: every commit already swaps in an
   * immutable row vector (copy-on-write) or immutable delta structures
@@ -123,17 +127,54 @@ private[sources] trait GraftSnapshotHistory { self: Table =>
                   snapshotTags.keys.toSeq.sorted.mkString(", "))})"))
       }
     snapshotAt(v) match {
-      case Some((rs, sch, dflts, cm)) =>
-        new GraftMemSnapshotTable(historyName, sch, v, rs, dflts, cm)
+      case Some(pinned) =>
+        new GraftFrozenTable(s"$historyName VERSION AS OF $v", pinned._2,
+          "GraftMemSnapshotScan", () => pinned)
       case None =>
-        val r = retainedVersions
         throw new IllegalArgumentException(
           s"graftmem $historyName: no snapshot for version $v " +
-            s"(retained: ${if (r.isEmpty) "none"
-              else s"${r.head._1}..${r.last._1}"}; expired snapshots " +
+            s"(retained: $retainedRange; expired snapshots " +
             "are unrecoverable)")
     }
   }
+
+  /** The retained versions as `first..last`, or `none`. */
+  final private[sources] def retainedRange: String = {
+    val r = retainedVersions
+    if (r.isEmpty) "none" else s"${r.head._1}..${r.last._1}"
+  }
+
+  /** `db.tbl__history` — the SNAPSHOT-HISTORY metadata table (b93),
+    * the Iceberg `db.tbl.snapshots` / Delta `DESCRIBE HISTORY` shape:
+    * every retained version as one row of (version, live_rows,
+    * n_columns, n_tags, is_current) — the operational "what happened
+    * to this table" face an operator reads before picking a `VERSION
+    * AS OF` target or a retention cutoff. Wall-clock commit times
+    * exist internally but are deliberately NOT columns here (the
+    * demo's declared outputs are deterministic); `TIMESTAMP AS OF`
+    * remains the time-addressed face. Each scan pins one view under
+    * the table lock and materializes each retained version's visible
+    * row COUNT — bounded by the snapshot-retention cap
+    * (`graft.snapshot_keep`), a metadata-sized read.
+    */
+  final private[sources] def historyFace: Table =
+    GraftFrozenTable.metadata(s"${historyName}__history", "GraftHistoryScan",
+      "version" -> LongType, "live_rows" -> LongType,
+      "n_columns" -> IntegerType, "n_tags" -> IntegerType,
+      "is_current" -> BooleanType) {
+      self.synchronized {
+        val vs = retainedVersions
+        val cur = vs.lastOption.map(_._1).getOrElse(-1L)
+        val tagsByV = snapshotTags.groupBy(_._2)
+          .map { case (v, m) => (v, m.size) }
+        vs.toVector.flatMap { case (v, _) =>
+          snapshotAt(v).map { case (rs, sch, _, _) =>
+            Array[Any](v, rs.length.toLong, sch.fields.length,
+              tagsByV.getOrElse(v, 0), v == cur)
+          }
+        }
+      }
+    }
 
   /** `TIMESTAMP AS OF ts` — micros since epoch; resolves to the
     * LATEST snapshot committed at or before `ts` (the as-of
@@ -151,109 +192,89 @@ private[sources] trait GraftSnapshotHistory { self: Table =>
   }
 }
 
-/** One committed snapshot as a read-only DSv2 table: the frozen row
-  * vector, chunked like the live scan, with column pruning. No write
-  * face, no metadata columns — history is content, not layout.
+/** A READ-ONLY graftmem face: one committed snapshot (`VERSION AS
+  * OF`) or a metadata table (`__history`, `__files`, `__partitions`,
+  * whose rows are boxed cells under an identity column map). `pin`
+  * yields (rows, schema, defaults, column map) once per scan, so the
+  * tuple is one consistent view. No write face, no metadata columns —
+  * history is content, not layout.
   */
-private[sources] class GraftMemSnapshotTable(parentName: String,
-    tblSchema: StructType, version: Long,
-    frozen: Vector[Array[Any]], defaults: Vector[Any],
-    colMap: GraftColMap = null)
+private[sources] class GraftFrozenTable(tblName: String,
+    tblSchema: StructType, scanName: String,
+    pin: () => GraftFrozenTable.Pinned)
     extends Table with SupportsRead {
-  override def name(): String = s"$parentName VERSION AS OF $version"
+  override def name(): String = tblName
   override def schema(): StructType = tblSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
-
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownRequiredColumns {
-      private var required: StructType = tblSchema
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = requiredSchema
-      override def build(): Scan = new Scan with Batch {
-        override def readSchema(): StructType = required
-        override def toBatch: Batch = this
-        override def description(): String =
-          s"GraftMemSnapshotScan($parentName@v$version, " +
-            s"rows=${frozen.length})"
-        override def planInputPartitions(): Array[InputPartition] =
-          if (frozen.isEmpty) Array(GraftMemPartition(Vector.empty))
-          else frozen.grouped(
-            math.max(1, (frozen.length + 3) / 4))
-            .map(GraftMemPartition(_): InputPartition).toArray
-        override def createReaderFactory(): PartitionReaderFactory = {
-          // rows appended before an ALTER ADD COLUMN are narrower than
-          // this snapshot's schema: the missing tail reads the
-          // column's initial default; the snapshot's own column map
-          // (b101) routes renamed/widened columns to their slots
-          val proj = GraftCell.projector(required, tblSchema, defaults,
-            colMap = colMap)
-          new RowsReaderFactory[GraftMemPartition, Array[Any]](_.data,
-            (_, r) => proj(0L, r))
-        }
-      }
-    }
+    new GraftFrozenScanBuilder(tblName, tblSchema, scanName, pin)
 }
 
-/** `db.tbl__history` — the SNAPSHOT-HISTORY metadata table (b93), the
-  * Iceberg `db.tbl.snapshots` / Delta `DESCRIBE HISTORY` shape at the
-  * DSv2 extension point: every retained version as one row of
-  * (version, live_rows, n_columns, n_tags, is_current) — the
-  * operational "what happened to this table" face an operator reads
-  * before picking a `VERSION AS OF` target or a retention cutoff.
-  * Wall-clock commit times exist internally but are deliberately NOT
-  * columns here (the demo's declared outputs are deterministic);
-  * `TIMESTAMP AS OF` remains the time-addressed face. The scan
-  * materializes each retained version's visible row COUNT — bounded
-  * by the snapshot-retention cap (`graft.snapshot_keep`), a
-  * metadata-sized read, never a data-sized one.
+/** The scan of every read-only face and of a WAP branch: pins at
+  * build, prunes columns, splits the rows like the live scans, and
+  * reads them through the shared projector — rows narrower than the
+  * pinned schema (appended before an ALTER ADD COLUMN) read the
+  * column's initial default, and the pinned column map (b101) routes
+  * renamed/widened columns to their slots.
   */
-private[sources] class GraftHistoryTable(parent: Table
-    with GraftSnapshotHistory) extends Table with SupportsRead {
-  import org.apache.spark.sql.types.{BooleanType, StructField}
-
-  override def name(): String = parent.name() + "__history"
-  override def schema(): StructType = StructType(Seq(
-    StructField("version", LongType, nullable = false),
-    StructField("live_rows", LongType, nullable = false),
-    StructField("n_columns", IntegerType, nullable = false),
-    StructField("n_tags", IntegerType, nullable = false),
-    StructField("is_current", BooleanType, nullable = false)))
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan with Batch {
-        // pin one consistent view of the history under the table lock
-        private val rows: Array[InternalRow] = parent.synchronized {
-          val vs = parent.retainedVersions
-          val cur = vs.lastOption.map(_._1).getOrElse(-1L)
-          val tagsByV = parent.snapshotTags.groupBy(_._2)
-            .map { case (v, m) => (v, m.size) }
-          vs.flatMap { case (v, _) =>
-            parent.snapshotAt(v).map { case (rs, sch, _, _) =>
-              InternalRow(v, rs.length.toLong, sch.fields.length,
-                tagsByV.getOrElse(v, 0), v == cur)
-            }
-          }.toArray
-        }
-        override def readSchema(): StructType = schema()
-        override def toBatch: Batch = this
-        override def description(): String =
-          s"GraftHistoryScan(${parent.name()}, n=${rows.length})"
-        override def planInputPartitions(): Array[InputPartition] =
-          Array(GraftHistoryPartition(rows))
-        override def createReaderFactory(): PartitionReaderFactory =
-          GraftFilesTable.rowArrayReaderFactory
-      }
+private[sources] class GraftFrozenScanBuilder(tblName: String,
+    tblSchema: StructType, scanName: String,
+    pin: () => GraftFrozenTable.Pinned)
+    extends ScanBuilder with SupportsPushDownRequiredColumns {
+  private var required: StructType = tblSchema
+  override def pruneColumns(requiredSchema: StructType): Unit =
+    required = requiredSchema
+  override def build(): Scan = new Scan with Batch {
+    private val (rows, pinSchema, pinDefaults, pinColMap) = pin()
+    override def readSchema(): StructType = required
+    override def toBatch: Batch = this
+    override def description(): String =
+      s"$scanName($tblName, rows=${rows.length})"
+    override def planInputPartitions(): Array[InputPartition] =
+      GraftFrozenTable.splits(rows)(GraftMemPartition(_))
+    override def createReaderFactory(): PartitionReaderFactory = {
+      val proj = GraftCell.projector(required, pinSchema, pinDefaults,
+        colMap = pinColMap)
+      new RowsReaderFactory[GraftMemPartition, Array[Any]](_.data,
+        (_, r) => proj(0L, r))
     }
+  }
 }
 
-private[sources] case class GraftHistoryPartition(rows: Array[InternalRow])
-    extends InputPartition
+private[sources] object GraftFrozenTable {
+  /** (rows, schema, per-column defaults, column map) as of one scan. */
+  type Pinned = (Vector[Array[Any]], StructType, IndexedSeq[Any], GraftColMap)
+
+  /** The one split rule for graftmem rows that are not split by
+    * rewrite group (the read-only face, the merge-on-read scans and
+    * streams, `__changes`, and `rewrite_sort`'s files): `rows` in at
+    * most `n` equal chunks, in order; none for no rows.
+    */
+  def chunks[A](rows: Vector[A], n: Int): Iterator[Vector[A]] =
+    if (rows.isEmpty) Iterator.empty
+    else rows.grouped(math.max(1, (rows.length + n - 1) / n))
+
+  /** `rows` as up to four splits, or one empty split for no rows. */
+  def splits[A](rows: Vector[A])(
+      part: Vector[A] => InputPartition): Array[InputPartition] =
+    if (rows.isEmpty) Array(part(Vector.empty))
+    else chunks(rows, 4).map(part).toArray
+
+  /** A metadata face: `rows` gives boxed cells in `cols` order (all
+    * non-null), built afresh by each scan.
+    */
+  def metadata(tblName: String, scanName: String,
+      cols: (String, DataType)*)(
+      rows: => Vector[Array[Any]]): GraftFrozenTable = {
+    val schema = StructType(cols.map { case (n, t) =>
+      StructField(n, t, nullable = false) })
+    val zeros = schema.fields.toVector.map(f => GraftCell.zeroOf(f.dataType))
+    new GraftFrozenTable(tblName, schema, scanName,
+      () => (rows, schema, zeros, GraftColMap.identity(cols.length)))
+  }
+}
 
 /** `graftmem.system.create_tag(table, tag, version)` — name a
   * retained snapshot (b89, the Iceberg tag shape). The tag resolves

@@ -174,14 +174,11 @@ class QueriesSmokeSpec extends SparkSpec {
     *    source count.
     *  - c75_curation_ensemble and c76_quality_mixture: the per-source
     *    thresholds or Σw. Bounded by the source count.
-    *  - b95_row_lineage: `row_number() OVER (ORDER BY c_custkey)` over
-    *    the whole customer table. GROWS with the corpus.
     * The vocabulary totals of c41, c49, c55, c75 and c76 are one-row
     * aggregates collected as literals, so they run no window.
     */
-  private val knownGlobalWindows = Set("b95_row_lineage", "c67_bm25",
-    "c70_hybrid_rrf", "c73_mixture_sample", "c75_curation_ensemble",
-    "c76_quality_mixture")
+  private val knownGlobalWindows = Set("c67_bm25", "c70_hybrid_rrf",
+    "c73_mixture_sample", "c75_curation_ensemble", "c76_quality_mixture")
 
   test("census: global windows (no partition keys) are the known set") {
     val found = censusFound(_._2)

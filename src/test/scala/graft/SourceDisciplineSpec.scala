@@ -120,6 +120,28 @@ class SourceDisciplineSpec extends AnyFunSuite {
     }
   }
 
+  test("graftmem builds an in-memory scan in four places only") {
+    // the copy-on-write live scan, the merge-on-read live scan, the
+    // __changes scan and GraftFrozenTable's, which serves every
+    // read-only face (VERSION AS OF, __history, __files, __partitions)
+    // and branch reads: each is a site to teach file splits, so a
+    // hand-rolled fifth must not creep back
+    val scans = sites(mainSources, "new Scan with Batch")
+    assert(scans.sorted == Seq("GraftMemCatalog.scala",
+      "GraftMemMorTable.scala", "GraftMemMorTable.scala",
+      "GraftMemTimeTravel.scala"),
+      s"'new Scan with Batch' outside the four graftmem scans: $scans")
+  }
+
+  test("merge-on-read row positions are assigned in one place") {
+    // GraftMemMorTable.assignPositions: every landing commit and every
+    // rewrite takes its positions there, so positions stay contiguous
+    // per commit and unique for the ledger and the lineage
+    val assigned = sites(mainSources, "nextPos \\+= 1")
+    assert(assigned == Seq("GraftMemMorTable.scala"),
+      s"'nextPos += 1' must appear once, in assignPositions: $assigned")
+  }
+
   test("every spec a src/main comment cites exists") {
     // a comment that says a test pins an invariant must name a suite
     // that is there to run: a renamed or never-written spec leaves the
